@@ -718,13 +718,39 @@ object StreamingOps {
     })
   }
 
+  /** 4-partition session clone with the RocksDB state-store provider
+    * and changelog checkpointing — the production provider at 100 TB of
+    * state (it spills to local disk), and the one transformWithState
+    * mandates. Scoped to a clone so the conf cannot leak into sibling
+    * queries and needs no restore on exit. */
+  private def rocksDbSession(s: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession = {
+    val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
+    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")
+    s2.conf.set("spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled", "true")
+    s2
+  }
+
   private val sjInCache =
     new java.util.concurrent.ConcurrentHashMap[
       (org.apache.spark.sql.SparkSession, String), String]
 
-  /** Data chunks in the sjInput staging (sentinels add 2 more pieces).
-    * 2 is the proof minimum — see [[sjInput]]'s docstring. */
+  /** Data chunks in the sjInput staging — one file and one micro-batch
+    * each; the watermark sentinels ride in the last one. 2 is the proof
+    * minimum — see [[sjInput]]'s docstring. */
   private[graft] val sjChunks = 2
+
+  /** Column layout of the [[sjInput]] staging, declared so the streaming
+    * read needs no schema-inference listing/footer job per op. */
+  private val sjSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("event_id", LongType),
+      StructField("user_id", LongType), StructField("event_type", StringType),
+      StructField("ts", TimestampType)))
+  }
 
   /** Memoized TIME-CHUNKED staging for the file-source stream-stream
     * join rows (VERDICT r16 #1: the flagship interval join previously
@@ -732,9 +758,9 @@ object StreamingOps {
     * registered row drove the real symmetric-hash join state machine
     * over a replayable source, so its 100 TB failure mode, join-state
     * growth, was invisible to the scale probe). Events (clicks+views
-    * only) are split into range-disjoint TIME chunks (each micro-batch
-    * costs ~0.9 s of addBatch/state-lifecycle floor on this box, so the
-    * chunk count trades eviction granularity against a fixed bill;
+    * only) are split into [[sjChunks]] range-disjoint TIME chunks (each
+    * micro-batch carries a fixed addBatch/state-lifecycle bill, so the
+    * chunk count trades eviction granularity against that bill;
     * VERDICT r18 #6 cut it from 4 to 2 — the minimum that still proves
     * BOTH witnesses: pairs straddling the one chunk boundary only emit
     * if the earlier side was retained in state ACROSS batches, and the
@@ -748,13 +774,16 @@ object StreamingOps {
     * full sides in state for one giant batch and measure nothing. Chunk
     * ranges are disjoint and ascending, so no row is ever behind the
     * watermark on arrival (late-drop-free ⇒ exact batch parity) for ANY
-    * non-negative delay. TWO trailing SENTINEL pieces (negative
-    * event_ids/user_ids at max + 2 d and max + 4 d) advance the
-    * watermark past every real row so the OUTER variant's unmatched
-    * tail flushes (the StreamingSpec sentinel idiom, file-source form;
-    * see the in-body comment for why one sentinel is not enough);
-    * sentinels themselves never emit — nothing ever passes a watermark
-    * beyond them — and are filtered defensively anyway. */
+    * non-negative delay. The LAST chunk also carries one SENTINEL pair
+    * (a click and a view with negative event_ids/user_ids at max + 2 d):
+    * its batch still filters and evicts with the pre-batch watermark, so
+    * no real row of that chunk is late, and it leaves the watermark past
+    * every real row — the trailing no-data micro-batch that
+    * `Trigger.AvailableNow` runs whenever the watermark advanced then
+    * evicts all real state and flushes the OUTER variant's unmatched
+    * tail before the query terminates ([[fileStreamJoin]]). Sentinels
+    * themselves never emit — nothing ever passes a watermark beyond
+    * them — and are filtered defensively anyway. */
   private[graft] def sjInput(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     import graft.operators.Scans
@@ -771,11 +800,13 @@ object StreamingOps {
       // oldest-first ordering reads — absolute stamp values don't
       // matter, only their order.
       val src = new java.io.File(abs, "events.parquet")
-      // the chunk count is part of the key: a layout staged under a
-      // different chunking is healthy-by-stamp but WRONG for the floor
-      // this build expects (the r18->r19 4->2 cut would otherwise keep
-      // serving the old 6-piece staging on a warm box forever)
-      val fp = s"c${sjChunks}_m${src.lastModified}_s${src.length}"
+      // the chunk count and the sentinel placement are part of the key:
+      // a layout staged under a different chunking or with separate
+      // sentinel pieces is healthy-by-stamp but WRONG for the batch
+      // count this build expects (a warm box would otherwise keep
+      // serving the old staging forever)
+      val fp = s"c${sjChunks}_sentinel-last_m${src.lastModified}" +
+        s"_s${src.length}"
       // evict only the MEMO entry with the session (the map would
       // otherwise pin dead sessions); the shared dir itself survives
       // for the next JVM — that is the point.
@@ -791,31 +822,19 @@ object StreamingOps {
         val b = ev.agg(min(unix_micros(col("ts"))),
           max(unix_micros(col("ts")))).collect()(0)
         val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val nChunks = sjChunks
-        val w = math.max(1L, (hi - lo) / nChunks + 1)
-        val chunks = (0 until nChunks).map { k =>
+        val w = math.max(1L, (hi - lo) / sjChunks + 1)
+        val chunks = (0 until sjChunks).map { k =>
           ev.filter(unix_micros(col("ts"))
             .between(lo + k * w, math.min(lo + (k + 1) * w - 1, hi)))
         }
-        // TWO sentinel pieces, not one: watermark updates BETWEEN
-        // batches, so the batch that ingests sentinel 1 still
-        // evicts/emits with the pre-sentinel watermark (hi − delay —
-        // the tail ~10 min of real rows stay buffered), and relying on
-        // the trailing NO-DATA micro-batch to flush them races
-        // processAllAvailable/stop (measured: exactly the last click's
-        // outer row went missing). Sentinel batch 2 runs with the
-        // sentinel-1 watermark (hi + 2 d − delay > every real row), so
-        // the whole real tail flushes inside a DATA batch
-        // processAllAvailable provably covers.
-        def sentinel(k: Long) = {
+        val sentinels = {
           import s.implicits._
-          val far = new java.sql.Timestamp(
-            (hi + k * 2L * 86400 * 1000000) / 1000)
-          Seq((-2 * k + 1, -2 * k + 1, "click", far),
-            (-2 * k, -2 * k, "view", far))
+          val far = new java.sql.Timestamp((hi + 2L * 86400 * 1000000) / 1000)
+          Seq((-1L, -1L, "click", far), (-2L, -2L, "view", far))
             .toDF("event_id", "user_id", "event_type", "ts")
         }
-        writeStampedPieces(inDir, chunks ++ Seq(sentinel(1), sentinel(2)))
+        writeStampedPieces(inDir,
+          chunks.init :+ chunks.last.unionByName(sentinels))
         Scans.stampExpected(inDir)
       }
     })
@@ -831,24 +850,32 @@ object StreamingOps {
     * probe's memory/state axis reads exactly this from the progress
     * events (srows high-water ≪ input rows, slope ~1 in rate). Exact
     * batch parity: time-ordered chunks mean zero late drops, inner
-    * matches emit as found, and the sentinel watermark-flushes the
-    * outer tail (see [[sjInput]]). 4 shuffle partitions on a session
-    * clone — the stream-stream join commits 4 state stores per
-    * partition per batch (measured ~1 s/batch of pure commit overhead
-    * at 8 partitions), and the parent's 32 would be pure fixed I/O at
-    * fixture scale (the [[graft.operators.Scans
-    * .fewPartitionSession]] rationale; results are partition-count
-    * independent, part of the registry contract). */
+    * matches emit as found, and the sentinel pair in the last chunk
+    * moves the watermark past every real row, so the trailing no-data
+    * batch `Trigger.AvailableNow` runs before terminating flushes the
+    * outer tail (see [[sjInput]]); one op is [[sjChunks]] data batches
+    * plus that one. The session clone pins the state layout: 4 shuffle
+    * partitions (the parent's 32 would be pure fixed I/O at fixture
+    * scale — the [[graft.operators.Scans.fewPartitionSession]]
+    * rationale; results are partition-count independent, part of the
+    * registry contract), the RocksDB provider with changelog
+    * checkpointing (state spills to local disk — the 100 TB provider),
+    * and join state format 3, which keeps both sides' rows and match
+    * indexes in ONE store per partition as virtual column families
+    * instead of four stores: each batch commits 4 store instances, not
+    * 16, and the per-store checkpoint file writes were most of the
+    * per-batch floor. */
   private[graft] def fileStreamJoin(s: org.apache.spark.sql.SparkSession,
       d: String, joinType: String): DataFrame = {
+    import org.apache.spark.sql.streaming.Trigger
     import graft.operators.Scans
     val inDir = sjInput(s, d)
-    val s2 = Scans.fewPartitionSession(s, 4)
-    // the sentinel only advances the watermark if a batch RUNS after it
-    // is ingested; the trailing no-data micro-batch is that batch
+    val s2 = rocksDbSession(s)
+    // the sentinel only advances the watermark past the tail after its
+    // batch; the trailing no-data micro-batch is what evicts and flushes
     s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val schema = s2.read.parquet(inDir).schema
-    val raw = s2.readStream.schema(schema)
+    s2.conf.set("spark.sql.streaming.join.stateFormatVersion", "3")
+    val raw = s2.readStream.schema(sjSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
     val clicks = raw.filter(col("event_type") === "click")
       .select(col("event_id").as("c_id"), col("user_id").as("c_uid"),
@@ -870,8 +897,12 @@ object StreamingOps {
     val name = "graft_sj_" + joinType + "_" + java.nio.file.Paths.get(d)
       .toAbsolutePath.normalize.toString.replaceAll("[^A-Za-z0-9]", "_")
     val q = joined.writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    // stop() in finally: on the timeout path the query must not stay
+    // live holding its state stores (no-op once it terminated)
+    try require(q.awaitTermination(180000),
+      "stream-stream join query did not finish in 180 s")
+    finally q.stop()
     // The sentinel filter runs on the BATCH read of the memory table,
     // never inside the streaming plan: a post-join `click_id >= 0` is a
     // LEFT-side predicate, and PushPredicateThroughJoin pushes those
@@ -1008,14 +1039,8 @@ object StreamingOps {
     graft.operators.Scans.rmRecursive(new java.io.File(base)) // idempotent
     val chk = s"$base/chk"; val outDir = s"$base/out"
     val inDir = twsInput(s, d)
-    // 4-partition clone: RocksDB provider + changelog scoped HERE (TWS
-    // mandates RocksDB; a clone can't leak the conf into sibling queries)
-    val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    s2.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled", "true")
+    // TWS mandates RocksDB
+    val s2 = rocksDbSession(s)
     import s2.implicits._
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("event_type", StringType), StructField("es", LongType)))
@@ -1152,12 +1177,7 @@ object StreamingOps {
     // input staging pre-paid in bench's materialize_layout. A 2-partition
     // clone measured no faster than the family's 4 (the cycle cost is
     // batch lifecycle, not per-partition stores), so 4 is kept.
-    val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    s2.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled", "true")
+    val s2 = rocksDbSession(s)
     // the sentinel advances the watermark; the timers FIRE in the
     // trailing no-data batch — pin the conf that guarantees it runs
     // (default true; pinned so a cluster-level override cannot silently
@@ -1207,12 +1227,7 @@ object StreamingOps {
     graft.operators.Scans.rmRecursive(new java.io.File(base)) // idempotent
     val chk = s"$base/chk"; val outDir = s"$base/out"
     val inDir = twsInput(s, d)
-    val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    s2.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled", "true")
+    val s2 = rocksDbSession(s)
     import s2.implicits._
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("event_type", StringType), StructField("es", LongType)))

@@ -312,8 +312,29 @@ class StreamingRecoverySpec extends AnyFunSuite {
     * that is exactly the kind of claim that deserves a witness — a
     * provider that mishandled range deletes would accumulate state
     * silently. Same advancing-batch protocol as the memory-store test in
-    * StreamingSpec; same bound. */
+    * StreamingSpec; same bound. It runs under both join state formats
+    * RocksDB serves: the default (four stores per partition) and format
+    * 3 (one store per partition, virtual column families), the layout
+    * the registered file-source join rows run on. */
   test("interval-join state stays bounded under RocksDB eviction") {
+    boundedJoinStateUnderRocksDb(storesPerPartition = 4)
+  }
+
+  test("interval-join state stays bounded under RocksDB eviction " +
+      "(join state format 3)") {
+    val key = "spark.sql.streaming.join.stateFormatVersion"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "3")
+    try boundedJoinStateUnderRocksDb(storesPerPartition = 1)
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  /** `storesPerPartition` witnesses which join state format served the
+    * query: format 2 keeps four stores per partition, format 3 one. */
+  private def boundedJoinStateUnderRocksDb(storesPerPartition: Int): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
@@ -339,6 +360,11 @@ class StreamingRecoverySpec extends AnyFunSuite {
         assert(so.customMetrics.asScala.keys
             .exists(_.toLowerCase.contains("rocksdb")),
           "join state not served by RocksDB")
+        assert(so.numStateStoreInstances ==
+            storesPerPartition * so.numShufflePartitions,
+          s"${so.numStateStoreInstances} store instances for " +
+            s"${so.numShufflePartitions} partitions, expected " +
+            s"$storesPerPartition per partition")
         val stateRows = so.numRowsTotal
         // Same watermark-derived bound as the memory-store eviction test
         // (ChainedStream.intervalJoinRetainable, ADVICE r6): inputs + the
