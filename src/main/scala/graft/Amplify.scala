@@ -153,12 +153,7 @@ object Amplify {
   def main(args: Array[String]): Unit = {
     val (src, out, factor) = (args(0), args(1), args(2).toInt)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     amplify(spark, src, out, factor)
     spark.stop()

@@ -1,20 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // parallelismFirst stays at its default: the r2 bench flipped it to
-      // false for latency at 17 MB, and the three largest r2-vs-r1
-      // regressions (sink_partitioned, stream_sliding, llm_text_stats) were
-      // all on explode/write-heavy paths where trading parallelism for task
-      // count costs 3x. Default is also what a real 100 TB run would use.
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
+    // AQE's coalescePartitions.parallelismFirst stays at its default:
+    // turning it off for latency at 17 MB cost 3x on explode/write-heavy
+    // rows (sink_partitioned, stream_sliding, llm_text_stats), and the
+    // default is what a real 100 TB run would use.
     spark.sparkContext.setLogLevel("WARN")
     // Total shuffle volume across the whole bench — the number that
     // actually predicts 100 TB behavior (time at this volume is mostly

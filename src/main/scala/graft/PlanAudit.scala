@@ -203,12 +203,7 @@ object PlanAudit {
         }.toMap)
       } else {
         val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-        val spark = SparkSession.builder()
-          .master("local[4]")
-          .config("spark.sql.shuffle.partitions", "4")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
+        val spark = Sessions.local("4")
         spark.sparkContext.setLogLevel("ERROR")
         try auditAll(spark, sfDir) finally spark.stop()
       }

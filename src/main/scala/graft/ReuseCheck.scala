@@ -1,11 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object ReuseCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    val spark = Sessions.local("8")
     spark.sparkContext.setLogLevel("ERROR")
     // Data dir from args(1), falling back to the env var and then the
     // sf0.1 fixture (ADVICE r21 #3 — match TimeQ/Explain's convention).

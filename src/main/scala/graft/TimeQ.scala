@@ -3,7 +3,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev utility: time individual registered queries in isolation.
@@ -57,13 +56,9 @@ object TimeQ {
     // sizing rule (shuffle partitions scale with data, so per-partition
     // build volume — and therefore spill — stays flat). The driver
     // contract itself stays at partitions = cpus.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     spark.sparkContext.setLogLevel("WARN")
 
     val peakMem = new AtomicLong // max per-task peakExecutionMemory

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,12 +10,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -43,10 +37,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Release every relation this sfDir pinned (VERDICT r4 #7) — a no-op
-    // for the exiting JVM, but it keeps Verify honest as the reference
-    // consumer of the evictSfDir lifecycle CacheHygieneSpec asserts.
-    graft.sources.RelationCache.evictSfDir(spark, sfDir)
+    // Release every relation this sfDir pinned — a no-op for the exiting
+    // JVM, but it keeps Verify the reference consumer of the evictSfDir
+    // lifecycle SessionMemoSpec asserts.
+    graft.sources.SessionMemo.persisted.evictSfDir(spark, sfDir)
     spark.stop()
   }
 }

@@ -1285,8 +1285,8 @@ object Analytics {
        |  GROUP BY l_partkey, l_suppkey)""".stripMargin
 
   /** The materialized form of [[psCte]] — built ONCE per (session,
-    * sfDir) and persisted via RelationCache, then shared by all five
-    * partsupp-adapted queries exactly the way a warehouse shares a
+    * sfDir) and memoized in `SessionMemo.persisted`, then shared by all
+    * five partsupp-adapted queries exactly the way a warehouse shares a
     * materialized rollup: the first consumer pays the lineitem-wide
     * aggregate, every later plan starts from an InMemoryTableScan of
     * the |part×supplier-pairs| relation. The DuckDB oracle inlines the
@@ -1294,13 +1294,14 @@ object Analytics {
     * stay one definition: psCte IS the SQL text, and this is its
     * DataFrame twin, column for column. */
   private[graft] def psRelation(s: SparkSession, d: String): DataFrame =
-    graft.sources.RelationCache.getOrPersist(s, "tpch_ps", d) {
+    graft.sources.SessionMemo.persisted(s, d, "tpch_ps") {
       Tables.lineitem(s, d)
         .groupBy(col("l_partkey").as("ps_partkey"),
           col("l_suppkey").as("ps_suppkey"))
         .agg(min(col("l_extendedprice")).as("ps_supplycost"),
           sum(col("l_quantity").cast(Det.D2)).cast(Det.D2)
             .as("ps_total_qty"))
+        .persist()
     }
 
   /** TPC-H Q2 (minimum-cost supplier) — the correlated-MIN-over-a-join
@@ -1894,15 +1895,16 @@ object Analytics {
     import s.implicits._
     val ord = Seq(col("c_acctbal").desc, col("c_custkey").asc)
     // Only the rank keys are materialized — at 100 TB the persisted
-    // footprint is two columns, not the table. RelationCache-routed
-    // (VERDICT r4 #7): keyed to this sfDir and releasable by evictSfDir;
-    // the memo also guarantees pass 1 (the counts collect below) and
-    // pass 2 share ONE materialization even across repeat invocations.
-    val ranged = graft.sources.RelationCache.getOrPersist(s, "ntile_ranged", d) {
+    // footprint is two columns, not the table. The memo keys it to this
+    // sfDir (releasable by evictSfDir) and guarantees pass 1 (the counts
+    // collect below) and pass 2 share ONE materialization even across
+    // repeat invocations.
+    val ranged = graft.sources.SessionMemo.persisted(s, d, "ntile_ranged") {
       Tables.customer(s, d)
         .select(col("c_acctbal"), col("c_custkey"))
         .repartitionByRange(s.sparkContext.defaultParallelism, ord: _*)
         .withColumn("pid", spark_partition_id())
+        .persist()
     }
     val counts = ranged.groupBy(col("pid")).count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Spec
 import graft.functions.{Det, Sql}
-import graft.sources.Tables
+import graft.sources.{SessionMemo, Tables}
 
 /** SURVEY.md §2.3 — batch joins (the reference's core capability re-expressed
   * relationally; the streaming variants live in graft.streaming).
@@ -511,10 +511,9 @@ object Joins {
     // distinct aggregate (the r4 review caught PLANS.md claiming
     // otherwise). The dictionary is the small side by construction —
     // at scale it is the entity table you block against, built once.
-    // RelationCache-routed (VERDICT r4 #7): keyed to this sfDir,
-    // releasable by evictSfDir instead of session-lifetime ad hoc.
-    val names = graft.sources.RelationCache.getOrPersist(s, "fuzzy_dict", d) {
-      Tables.part(s, d).select(col("p_name")).distinct()
+    // Memoized per sfDir so evictSfDir can release it.
+    val names = SessionMemo.persisted(s, d, "fuzzy_dict") {
+      Tables.part(s, d).select(col("p_name")).distinct().persist()
     }
     fuzzyBlocked(names)
   }
@@ -563,41 +562,26 @@ object Joins {
     * partition-column reference — a cast above it risks defeating the
     * pruning rule's lineage check. Oracle: the identical join computed
     * straight from the unpartitioned source table. */
-  /** One partitioned-customer layout per (session, sfDir) — VERDICT r12
-    * #2. The nation-directory layout is join_dpp's INPUT (the "fact table
-    * is laid out partitioned by the join key" precondition a production
-    * table pays ONCE at ingest), not the operation under demonstration;
-    * rewriting it per invocation made join_dpp the top clean-bench line
-    * (~2.5 s first-sample vs ~1.1 s retime) for pure setup cost. Memoized
-    * exactly like Scans.fragmentedEvents — same pid-keyed-scratch-under-
-    * session-key structure, so the same revalidateMemo self-heal applies:
-    * healthy = the layout is COMPLETE per its exact `_graft_expected`
-    * stamp (Scans.healthyStamped) — an any-dir-present check would pass a
-    * partial delete of the partition tree and silently serve only the
-    * surviving nations' customers (round-13 self-review). Pre-payable by
-    * Bench as
-    * `materialize_layout` so the timed line measures ONLY the pruned
-    * join. */
-  private val dppCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]
+  /** One partitioned-customer layout per (session, sfDir): the
+    * nation-directory layout is join_dpp's INPUT (the "fact table is laid
+    * out partitioned by the join key" precondition a production table
+    * pays ONCE at ingest), not the operation under demonstration, so it
+    * is built once, pre-payable by Bench as `materialize_layout`, and the
+    * timed line measures ONLY the pruned join. A
+    * [[Scans.stampedMemo]]: a partial delete of the partition tree
+    * rebuilds instead of serving only the surviving nations' customers. */
+  private val dppLayout = Scans.stampedMemo()
 
   private[graft] def dppCustomerLayout(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    Scans.revalidateMemo(dppCache, (s, abs), Scans.healthyStamped)
-    dppCache.computeIfAbsent((s, abs), { _ =>
+      d: String): String =
+    dppLayout(s, d) {
       val loc = Scans.scratch(s, "dpp_customer", d)
       Tables.customer(s, d)
         .select(col("c_custkey"), col("c_acctbal"), col("c_nationkey"))
         .write.mode("overwrite").partitionBy("c_nationkey").parquet(loc)
       Scans.stampExpected(loc)
-      graft.sources.SessionHooks.onApplicationEnd(s, s"dpp-layout-$abs") {
-        () => dppCache.remove((s, abs)); ()
-      }
       loc
-    })
-  }
+    }
 
   private val dpp = Spec(
     "join_dpp",
@@ -837,14 +821,13 @@ object Joins {
       d: String): (String, String) = {
     val sfKey = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
       .replaceAll("[^A-Za-z0-9]", "_")
-    // pid-tagged like Scans.scratch (ADVICE r4): a concurrent JVM on the
-    // same sfDir must never share — or clean up — this JVM's bucket files.
+    // pid-tagged like Scans.scratch: a concurrent JVM on the same sfDir
+    // must never share — or clean up — this JVM's bucket files.
     val loc = s"${System.getProperty("java.io.tmpdir")}" +
       s"/graft_p${Scans.jvmTag}_bucketed_$sfKey"
-    // Session hygiene (VERDICT r3 #6): the catalog entries die with the
-    // session's in-memory catalog, but the bucket FILES under tmp would
-    // outlive it and accumulate across sfDirs — delete them when the
-    // session's context ends, same lifecycle as the pairsCache eviction.
+    // The catalog entries die with the session's in-memory catalog, but
+    // the bucket FILES under tmp would outlive it and accumulate across
+    // sfDirs — delete them when the session's context ends.
     // (Idempotent per (session, sfKey); file-only, no catalog calls, so it
     // is safe during context teardown.)
     graft.sources.SessionHooks.onApplicationEnd(s, s"joins-bucketed-$sfKey") {
@@ -853,11 +836,11 @@ object Joins {
     def bucketize(base: String, df: => org.apache.spark.sql.DataFrame,
         key: String): String = {
       val name = s"${base}_$sfKey"
-      // Exact-completeness check (round-13 self-review): an any-file-
-      // present check would pass a partial external delete of the bucket
-      // files and the sort-merge join would silently read a table missing
-      // most of its buckets — drop + rebuild unless the live parquet
-      // count equals the `_graft_expected` stamp written at build time.
+      // Exact-completeness check: an any-file-present check would pass a
+      // partial external delete of the bucket files and the sort-merge
+      // join would silently read a table missing most of its buckets —
+      // drop + rebuild unless the live parquet count equals the
+      // `_graft_expected` stamp written at build time.
       if (s.catalog.tableExists(name) &&
           !Scans.healthyStamped(new java.io.File(s"$loc/$base")))
         s.sql(s"DROP TABLE IF EXISTS $name")
@@ -1289,31 +1272,35 @@ object Joins {
       .orderBy(col("st"))
   }
 
-  private val cboCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (String, String, String)]
+  private val cboNames = Seq("orders", "customer", "nation")
+
+  /** (scratch root, table names) per (session, sfDir), healthy while all
+    * three tables' directories are complete per their stamps — a hit
+    * after an external or partial delete rebuilds, and `make`'s drop of
+    * the stale catalog entry does the repair. */
+  private val cboLayout = new SessionMemo[(String, (String, String, String))](
+    { case (loc, _) =>
+      cboNames.forall(n => Scans.healthyStamped(new java.io.File(loc, n)))
+    })
 
   /** ANALYZEd copies of orders/customer/nation for the CBO witness —
     * catalog statistics only attach to catalog tables, so the row stages
     * the three relations once per (session, sfDir) with full column
-    * stats. Staged as EXTERNAL tables at a pid-tagged tmp location like
-    * [[bucketedTables]] (ADVICE r19 medium): the previous shared-
-    * warehouse DROP + rmRecursive + recreate meant a concurrent graft
-    * JVM on the same sfDir deleted the live parquet files out from under
-    * the first JVM's pre-paid tables mid-run — pid-tagging makes the
-    * files unshareable by construction, and the catalog entries were
-    * already session-lived. The key/table name is LOWERCASED (ADVICE r19
-    * low): the catalog lowercases identifiers, so an uppercase sfDir
-    * would otherwise break both the stale-cleanup path and the
+    * stats. Staged as EXTERNAL tables under this JVM's [[Scans.scratch]]
+    * dir, never as shared-warehouse managed tables keyed only by sfDir: a
+    * concurrent graft JVM's DROP + rmRecursive on the same sfDir would
+    * delete the live files out from under this JVM's tables. Table names
+    * are LOWERCASED: the catalog lowercases identifiers, so an uppercase
+    * sfDir would otherwise break both the stale-cleanup path and the
     * bottomJoinString contains() witnesses against the plan's lowercased
     * names. Content is identical to the parquet fixtures, which is why
     * the oracle runs on the fixtures directly. */
   private[graft] def cboTables(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, String, String) = {
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    cboCache.computeIfAbsent((s, abs), { _ =>
-      val key = abs.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val loc = s"${System.getProperty("java.io.tmpdir")}" +
-        s"/graft_p${Scans.jvmTag}_cbo_$key"
+      d: String): (String, String, String) =
+    cboLayout(s, d) {
+      val key = SessionMemo.norm(d).replaceAll("[^A-Za-z0-9]", "_")
+        .toLowerCase
+      val loc = Scans.scratch(s, "cbo", d)
       def make(name: String, df: DataFrame, statCols: String): String = {
         val tbl = s"graft_cbo_${name}_$key"
         val dir = new java.io.File(loc, name)
@@ -1333,22 +1320,17 @@ object Joins {
         }
         tbl
       }
-      graft.sources.SessionHooks.onApplicationEnd(s, s"cbo-tables-$abs") {
-        () =>
-          cboCache.remove((s, abs))
-          Scans.rmRecursive(new java.io.File(loc))
-      }
-      (make("orders", Tables.orders(s, d)
-         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-         "o_custkey"),
-       make("customer", Tables.customer(s, d)
-         .select(col("c_custkey"), col("c_nationkey")),
-         "c_custkey, c_nationkey"),
-       make("nation", Tables.nation(s, d)
-         .select(col("n_nationkey"), col("n_regionkey"), col("n_name")),
-         "n_nationkey, n_regionkey"))
-    })
-  }
+      (loc,
+        (make("orders", Tables.orders(s, d)
+           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
+           "o_custkey"),
+         make("customer", Tables.customer(s, d)
+           .select(col("c_custkey"), col("c_nationkey")),
+           "c_custkey, c_nationkey"),
+         make("nation", Tables.nation(s, d)
+           .select(col("n_nationkey"), col("n_regionkey"), col("n_name")),
+           "n_nationkey, n_regionkey")))
+    }._2
 
   /** The deepest Join subtree of a query's optimized logical plan,
     * printed — which pair of relations the optimizer chose to join

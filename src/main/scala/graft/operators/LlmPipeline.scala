@@ -151,29 +151,22 @@ object LlmPipeline {
   /** Per-(session, corpus) memo of the trained merge list: llm_bpe_train
     * emits it as the merge table and llm_bpe_apply replays it over the
     * corpus, so the k-iteration training loop runs once, not once per
-    * consumer (the pairsCache/RelationCache lifecycle discipline;
-    * entries are k tuples - driver-tiny). */
-  private val mergesCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Long, String, Long)]]
+    * consumer. Entries are k tuples — driver-tiny. */
+  private val trainedMerges =
+    new graft.sources.SessionMemo[Seq[(Long, String, Long)]]()
 
   /** The k-round BPE training loop shared by llm_bpe_train and
     * llm_bpe_apply: (iteration, pair with the U+001F separator kept,
     * weighted count) in merge order - fewer than k rows if a degenerate
     * corpus exhausts early. ONE row per iteration crosses the driver. */
   private def trainMergesRaw(s: SparkSession, d: String)
-      : Seq[(Long, String, Long)] = {
-    graft.sources.SessionHooks.onApplicationEnd(s, "llmpipeline-merges") {
-      () => mergesCache.keys.filter(_._1 eq s).foreach(mergesCache.remove)
-    }
-    val key = (s,
-      java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString)
-    mergesCache.getOrElseUpdate(key, computeMerges(s, d))
-  }
+      : Seq[(Long, String, Long)] =
+    trainedMerges(s, d)(computeMerges(s, d))
 
   /** Force the shared merge-table memo from Bench so the k-iteration
-    * training bill is pre-paid deterministically (ADVICE r8: otherwise it
-    * lands on whichever of llm_bpe_train/llm_bpe_apply the bench's map
-    * order runs first — the same drift the ps/pairs pre-pay fixed). */
+    * training bill is pre-paid deterministically — otherwise it lands on
+    * whichever of llm_bpe_train/llm_bpe_apply the bench's map order runs
+    * first. */
   private[graft] def materializeMerges(s: SparkSession, d: String): Int =
     trainMergesRaw(s, d).size
 

@@ -103,11 +103,9 @@ object LlmText {
     // persist the LM table: it is vocab²-bounded (tiny next to the
     // corpus) and referenced twice (the scoring join and the prefix
     // rollup) — without it the bigram explode over documents runs three
-    // times. Routed through RelationCache (VERDICT r4 #7) so the entry is
-    // keyed to this sfDir and releasable by evictSfDir instead of living
-    // unaccounted for the whole session.
-    val c12 = graft.sources.RelationCache.getOrPersist(s, "lm_c12", d) {
-      bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n12"))
+    // times. Memoized per sfDir so evictSfDir can release it.
+    val c12 = graft.sources.SessionMemo.persisted(s, d, "lm_c12") {
+      bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n12")).persist()
     }
     val c1 = c12.groupBy(col("w1")).agg(sum(col("n12")).as("n1"))
     bg.join(c12, Seq("w1", "w2"))
@@ -352,13 +350,13 @@ object LlmText {
     * bytes — the shared substrate of the n-gram dedup family and the
     * contamination check in [[LlmPipeline]].
     *
-    * Round 22 (guide §8, finishing the proxy-key pass): each shingle is
-    * hashed INSIDE the transform, so the per-document `array_distinct`
-    * deduplicates 8-byte longs instead of ~20-char strings and the
-    * generator emits longs directly (the shingle string now exists only
-    * transiently inside the lambda). Measured on the build's cold pass —
-    * the pass every bench/JVM pays once into the postings cache —
-    * 1.28 → 0.69 s, warm 0.33 → 0.28 s (PairsProbe, sf0.1 ×32).
+    * Each shingle is hashed INSIDE the transform, so the per-document
+    * `array_distinct` deduplicates 8-byte longs instead of ~20-char
+    * strings and the generator emits longs directly (the shingle string
+    * exists only transiently inside the lambda). Measured against
+    * hashing after the dedup, on the build's cold pass — the pass every
+    * bench/JVM pays once into the postings cache — 1.28 → 0.69 s, warm
+    * 0.33 → 0.28 s (sf0.1 amplified ×32).
     * Distinctness therefore happens on the hash rather than on the
     * string: the two differ only if xxhash64 collides WITHIN one
     * document's shingle set (~w²/2⁶⁴ for a w-shingle doc), in which case
@@ -377,38 +375,20 @@ object LlmText {
             |    words[i], words[i+1], words[i+2])))"""
             .stripMargin))).as("sh"))
 
-  /** Materialized-pairs memo: the Jaccard self-join is the shared,
-    * expensive substrate of llm_dedup_ngram AND llm_dedup_cluster, so its
-    * result (tiny: the near-dup pairs, not the index) is computed once per
-    * (session, corpus, cap) and persisted — the same pay-once-at-
-    * materialization-time story as join_bucketed's write-once tables. The
-    * session is part of the key: a DataFrame is only valid in the session
-    * that built it. The memo assumes the corpus at a given path is
-    * IMMUTABLE for the session's lifetime — true of the driver fixtures
-    * and of every test (synthetic corpora use fresh temp dirs); rewriting
-    * a path in place and re-querying it would require dropping the entry
-    * first. Entries are few (one per corpus × cap) and tiny (the pair
-    * list, not the index), so no eviction is needed. */
-  private val pairsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), DataFrame]
+  /** Materialized near-dup pairs per (session, corpus, df cap): the
+    * Jaccard self-join is the shared, expensive substrate of
+    * llm_dedup_ngram AND llm_dedup_cluster, so its result (tiny: the
+    * pairs, not the index) is computed once and persisted. Sound only
+    * while the corpus at a path is immutable for the session's lifetime
+    * — true of the driver fixtures and of every test (synthetic corpora
+    * use fresh temp dirs). */
+  private val pairs = new graft.sources.SessionMemo[DataFrame]()
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.LlmText")
 
-  /** Entries for a stopped session are evicted so a session-cycling
-    * harness cannot accumulate strong references to dead sessions or
-    * their persisted pair DataFrames (ADVICE r2). */
-  private def evictOnStop(s: SparkSession): Unit =
-    graft.sources.SessionHooks.onApplicationEnd(s, "llmtext-pairs") { () =>
-      pairsCache.keys.filter(_._1 eq s).foreach(pairsCache.remove)
-    }
-
   private[graft] def ngramPairs(s: SparkSession, d: String,
-      maxDf: Int = 1024): DataFrame = {
-    evictOnStop(s)
-    val key = (s,
-      java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString, maxDf)
-    pairsCache.getOrElseUpdate(key, computeNgramPairs(s, d, maxDf))
-  }
+      maxDf: Int = 1024): DataFrame =
+    pairs(s, d, maxDf.toString)(computeNgramPairs(s, d, maxDf))
 
   /** Spark form of the `pairs` relation above. The inverted index carries
     * xxhash64(shingle), not the string: the equi-join shuffles 8-byte keys

@@ -952,60 +952,46 @@ object LlmVector {
     books
   }
 
-  /** In-JVM memo of the two trained quantizers per (session, corpus):
-    * both trainings are deterministic functions of the fixture's
-    * sampleCap lowest vec_ids with a FIXED O(sampleCap·k·dim) driver
-    * cost, but fixed ≠ free (~100 ms), and the pay-once resident below
-    * must not retrain per query. Evicted with the session (the
-    * pairsCache discipline). */
-  private val pqModelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-           (Array[Array[Double]], Array[Array[Array[Double]]])]
+  /** The two trained quantizers per (session, corpus): both trainings
+    * are deterministic functions of the fixture's sampleCap lowest
+    * vec_ids with a FIXED O(sampleCap·k·dim) driver cost, but fixed ≠
+    * free (~100 ms), and the pay-once resident below must not retrain
+    * per query. */
+  private val pqModels = new graft.sources.SessionMemo[
+    (Array[Array[Double]], Array[Array[Array[Double]]])]()
 
   private def pqModel(s: SparkSession, d: String)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    pqModelCache.getOrElseUpdate((s, abs), {
-      graft.sources.SessionHooks.onApplicationEnd(s, s"pq-model-$abs") {
-        () => pqModelCache.remove((s, abs)); ()
-      }
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) =
+    pqModels(s, d) {
       val emb = Tables.embeddings(s, d)
       (ivfCentroids(emb), pqCodebooks(emb))
-    })
-  }
+    }
 
-  private val pqResidentCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]
+  private val pqResident = Scans.stampedMemo()
 
-  /** Pay-once (vec_id, cell, codes) resident layout (VERDICT r18 #4):
-    * the compressed relation a production vector store keeps RESIDENT
-    * — built once per corpus, queried many times — was previously
-    * re-encoded on every invocation, so the timed line billed
-    * build+query. Staged through the shared-scratch publish path
-    * (fingerprint = the embeddings fixture's mtime+size, the sjInput
-    * discipline; [[org.apache.spark.sql.graft.PqEncode]] and
+  /** Pay-once (vec_id, cell, codes) resident layout: the compressed
+    * relation a production vector store keeps RESIDENT — built once per
+    * corpus, queried many times — so the query's steady time measures
+    * what the production system pays per query: code scan + ADC +
+    * re-rank. Staged through the shared-scratch publish path
+    * (fingerprint = the embeddings fixture's mtime+size, as in
+    * [[graft.streaming.StreamingOps.sjInput]];
+    * [[org.apache.spark.sql.graft.PqEncode]] and
     * [[org.apache.spark.sql.graft.NearestCells]] are deterministic, so
-    * any JVM's build is byte-equal), Bench pre-pays it in
-    * materialize_layout, and the query's steady time measures what the
-    * production system pays per query: code scan + ADC + re-rank. */
-  private[graft] def ivfPqResidentDir(s: SparkSession, d: String): String = {
-    import graft.operators.Scans
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    Scans.revalidateMemo(pqResidentCache, (s, abs), Scans.healthyStamped)
-    pqResidentCache.computeIfAbsent((s, abs), { _ =>
+    * any JVM's build is byte-equal); Bench pre-pays it in
+    * materialize_layout. */
+  private[graft] def ivfPqResidentDir(s: SparkSession, d: String): String =
+    pqResident(s, d) {
       val (cents, books) = pqModel(s, d)
+      val abs = graft.sources.SessionMemo.norm(d)
       val src = new java.io.File(abs, "embeddings.parquet")
-      // Fingerprint covers the quantizer params too (ADVICE r19 low):
-      // the staged (vec_id, cell, codes) content depends on pqM/pqKs/
-      // pqSubDim/ivfK (+ the iteration counts baked into the trainings),
-      // not just the source fixture — without them a param retune would
-      // serve a stale resident layout from a warm box's shared scratch,
-      // surfacing as a warm-box-only oracle mismatch.
+      // Fingerprint covers the quantizer params too: the staged content
+      // depends on pqM/pqKs/pqSubDim/ivfK (+ the iteration counts baked
+      // into the trainings), not just the source fixture — without them
+      // a param retune would serve a stale resident layout from a warm
+      // box's shared scratch, a warm-box-only oracle mismatch.
       val fp = s"v1_m${pqM}k${pqKs}d${pqSubDim}c${ivfK}i${pqIters}" +
         s"j${ivfIters}_m${src.lastModified}_s${src.length}"
-      graft.sources.SessionHooks.onApplicationEnd(s, s"pq-res-$abs") {
-        () => pqResidentCache.remove((s, abs)); ()
-      }
       Scans.ensureShared(Scans.sharedScratchDir("pq_resident", abs, fp),
           Scans.healthyStamped) { tmp =>
         import org.apache.spark.sql.graft.{NearestCells, PqEncode}
@@ -1015,8 +1001,7 @@ object LlmVector {
           .write.parquet(tmp)
         Scans.stampExpected(tmp)
       }
-    })
-  }
+    }
 
   /** Bench pre-pay hook: force the trainings + the resident layout so
     * llm_ann_ivfpq's timed line starts from the staged state. */
@@ -1651,26 +1636,14 @@ object LlmVector {
       .orderBy(col("vec_id"))
   }
 
-  /** Memoized row count of the embeddings fixture per (session, path)
-    * (ADVICE r17 #3): [[semDedupDispatch]] previously ran a full
-    * count() scan on EVERY invocation just to pick a path, adding one
-    * extra pass of embeddings to every bench rep and plan capture of
-    * llm_semdedup. The fixture at a path is immutable for a session's
-    * lifetime (the [[LlmText]] pairsCache stance), so the count is too;
-    * entries evict with the session. */
-  private val embCountCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Long]
+  /** Row count of the embeddings fixture per (session, corpus), so
+    * [[semDedupDispatch]] picks its path without a full count() scan on
+    * every invocation. Sound because the fixture at a path is immutable
+    * for a session's lifetime. */
+  private val embCounts = new graft.sources.SessionMemo[Long]()
 
-  private[graft] def embeddingsCount(s: SparkSession, d: String): Long = {
-    val key =
-      (s, java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString)
-    embCountCache.getOrElseUpdate(key, {
-      graft.sources.SessionHooks.onApplicationEnd(s, "llmvector-embcount") {
-        () => embCountCache.keys.filter(_._1 eq s).foreach(embCountCache.remove)
-      }
-      Tables.embeddings(s, d).count()
-    })
-  }
+  private[graft] def embeddingsCount(s: SparkSession, d: String): Long =
+    embCounts(s, d)(Tables.embeddings(s, d).count())
 
   /** Density dispatch for [[semDedup]] (the [[embedNearDupPairs]]
     * pattern): at fixture densities (n ≤ 8192) the exact k=16 path —

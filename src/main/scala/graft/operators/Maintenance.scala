@@ -80,8 +80,7 @@ object Maintenance {
     * parquet. At 100 TB this is the fan-out pattern (one expensive
     * substrate, N report consumers) where a missing cache N-plies the
     * scan bill; Spark's cache registry keys on the logical plan, so
-    * repeated invocations share one materialization (the same property
-    * RelationCache uses for the fixture tables). */
+    * repeated invocations share one materialization. */
   private val dsCacheReuse = Spec(
     "ds_cache_reuse",
     """WITH base AS (

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.Spec
-import graft.sources.Tables
+import graft.sources.{SessionMemo, Tables}
 
 /** SURVEY.md §2.1 — scans / sources / sinks.
   *
@@ -322,40 +322,13 @@ object Scans {
     * bytes/targetFileSize and `maxRecordsPerFile`, and the rewrite runs
     * per partition-directory; the plan shape (scan → round-robin exchange
     * → write) is the same. */
-  /** One fragmented events copy per (session, sfDir) — VERDICT r10 #3.
-    * The 64-shard generation is sink_compacted's INPUT (the "long-lived
-    * ingest left thousands of small files" precondition), not the
-    * operation under demonstration; writing it on every invocation made
-    * the query the largest single bench line (~2–3.2 s) for cost that is
-    * pure setup. Memoized exactly like [[statefulCheckpoint]]: built once,
-    * shared by every invocation in the session, pre-payable by Bench as
-    * its own `materialize_frag` field so the timed line measures ONLY the
-    * compaction rewrite. The entry evicts with the session; the directory
+  /** One 64-shard fragmented events copy per (session, sfDir):
+    * sink_compacted's INPUT (the "long-lived ingest left thousands of
+    * small files" precondition), not the operation under demonstration,
+    * so it is built once, pre-payable by Bench as `materialize_frag`, and
+    * the timed line measures ONLY the compaction rewrite. The directory
     * itself is scratch-registered for deletion at context end. */
-  private val fragCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]
-
-  /** Memo revalidation shared by every path-valued scratch memo
-    * ([[fragCache]], [[ssCkptCache]]) — ADVICE r11 #1, generalized by the
-    * round-12 self-review. Both memos cache pid-keyed (JVM-shared)
-    * scratch paths under session-scoped keys, so another overlapping
-    * session's application-end hook can delete the directory a live memo
-    * still points at — and a crashed/concurrent delete can leave an
-    * EMPTY directory behind (rmRecursive removes children first), so
-    * bare isDirectory is not enough. `ok` states what a healthy build
-    * looks like; an entry failing it is dropped so computeIfAbsent
-    * rebuilds — restoring the self-healing the old per-invocation
-    * rewrites had. */
-  private[graft] def revalidateMemo(
-      cache: java.util.concurrent.ConcurrentHashMap[
-        (org.apache.spark.sql.SparkSession, String), String],
-      key: (org.apache.spark.sql.SparkSession, String),
-      ok: java.io.File => Boolean): Unit = {
-    val cached = cache.get(key)
-    if (cached != null && !ok(new java.io.File(cached)))
-      cache.remove(key, cached)
-  }
+  private val frag = stampedMemo()
 
   /** A directory that still holds at least one entry matching `p`. */
   private[graft] def dirWith(p: String => Boolean)(f: java.io.File): Boolean =
@@ -374,11 +347,11 @@ object Scans {
     }.sum
   }
 
-  /** Exact-completeness stamp for memoized layout directories (round-13
-    * self-review). An any-shard-present health check ([[dirWith]]) passes
-    * a PARTIAL external delete — rmRecursive removes children in
-    * unspecified order, so a crashed cross-session delete can leave some
-    * shards standing — and the memo then silently serves a truncated
+  /** Exact-completeness stamp for memoized layout directories. An
+    * any-shard-present health check ([[dirWith]]) passes a PARTIAL
+    * external delete — rmRecursive removes children in unspecified
+    * order, so a crashed cross-session delete can leave some shards
+    * standing — and the memo then silently serves a truncated
     * layout: wrong ROWS, no error, the one failure mode the oracle can
     * only catch if it happens during a Verify run. So the build stamps
     * the exact recursive parquet-file count into a `_graft_expected`
@@ -388,11 +361,11 @@ object Scans {
     * itself) trips a rebuild instead of a truncated read. */
   private[graft] def stampExpected(dir: String): Unit = {
     val n = countParquet(new java.io.File(dir))
-    // Fail loudly at stamp time (ADVICE r13 #2): healthyStamped treats
-    // expected == 0 as unhealthy, so stamping a zero-file layout would
-    // create a memo that is silently rebuilt on EVERY invocation — a perf
-    // cliff with no error. A zero count here means the build itself wrote
-    // nothing; surface that as the build's failure, not as memo churn.
+    // Fail loudly at stamp time: healthyStamped treats expected == 0 as
+    // unhealthy, so stamping a zero-file layout would create a memo that
+    // is silently rebuilt on EVERY invocation — a perf cliff with no
+    // error. A zero count here means the build itself wrote nothing;
+    // surface that as the build's failure, not as memo churn.
     require(n > 0, s"layout build wrote no parquet files under $dir")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "_graft_expected"), n.toString)
@@ -410,25 +383,27 @@ object Scans {
       }
     }
 
+  /** A session memo (ARCHITECTURE.md "Session memos") of staged layout
+    * directories, healthy while the layout is COMPLETE per its
+    * [[stampExpected]] stamp. The paths are pid-keyed (JVM-shared) or
+    * shared across JVMs while the memo is session-keyed, so another
+    * session's application-end hook, another JVM or a crashed delete can
+    * remove — or PARTLY remove — the directory a live entry names; the
+    * stamp check turns that into a rebuild instead of a truncated read. */
+  private[graft] def stampedMemo(): SessionMemo[String] =
+    new SessionMemo[String](p => healthyStamped(new java.io.File(p)))
+
   private[graft] def fragmentedEvents(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    // healthy = the 64-shard copy is COMPLETE (exact stamped count — a
-    // partial delete must rebuild, not silently compact fewer rows)
-    revalidateMemo(fragCache, (s, abs), healthyStamped)
-    fragCache.computeIfAbsent((s, abs), { _ =>
-      val frag = scratch(s, "compact_frag", d)
+      d: String): String =
+    frag(s, d) {
+      val dir = scratch(s, "compact_frag", d)
       Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
         .repartition(64)
-        .write.mode("overwrite").parquet(frag)
-      stampExpected(frag)
-      graft.sources.SessionHooks.onApplicationEnd(s, s"compact-frag-$abs") {
-        () => fragCache.remove((s, abs)); ()
-      }
-      frag
-    })
-  }
+        .write.mode("overwrite").parquet(dir)
+      stampExpected(dir)
+      dir
+    }
 
   private val sinkCompacted = Spec(
     "sink_compacted",
@@ -953,60 +928,47 @@ object Scans {
     * deterministic — a single AvailableNow batch over a one-file parquet
     * series, one shuffle partition — so every consumer sees the identical
     * state-version lineage (batch 0 only) and the two registry rows pay
-    * for ONE build per run instead of two (VERDICT r9 #1/#7). Memoized in
-    * a ConcurrentHashMap; the entry evicts with the session. */
-  private val ssCkptCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]
+    * for ONE build per run instead of two.
+    *
+    * Healthy = the checkpoint still has a committed batch (both readers
+    * need commits/<batchId> to resolve a batch) AND its offsets/ and
+    * state/ siblings survive: rmRecursive deletes children in
+    * unspecified order, so a partial external delete can leave commits/
+    * standing while state/ or offsets/ are already gone. */
+  private val ssCkpt = new SessionMemo[String]({ ckpt =>
+    dirWith(_.forall(_.isDigit))(new java.io.File(ckpt, "commits")) &&
+      dirWith(_.forall(_.isDigit))(new java.io.File(ckpt, "offsets")) &&
+      dirWith(_ => true)(new java.io.File(ckpt, "state"))
+  })
 
   private def statefulCheckpoint(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
+      d: String): String = ssCkpt(s, d) {
     import org.apache.spark.sql.types._
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    // healthy = the checkpoint still has a committed batch (the statestore
-    // and state-metadata readers both need commits/<batchId> to resolve a
-    // batch to read) AND its offsets/ + state/ siblings survive — ADVICE
-    // r12 #1: rmRecursive deletes children in unspecified order, so a
-    // crashed/partial external delete can leave commits/ standing while
-    // state/ or offsets/ are already gone, and a commits-only check would
-    // keep the memo alive pointing at an unreadable checkpoint. Same
-    // cross-session scratch-delete hazard as the fragmented-events memo,
-    // same self-heal (see revalidateMemo).
-    revalidateMemo(ssCkptCache, (s, abs), ckpt =>
-      dirWith(_.forall(_.isDigit))(new java.io.File(ckpt, "commits")) &&
-        dirWith(_.forall(_.isDigit))(new java.io.File(ckpt, "offsets")) &&
-        dirWith(_ => true)(new java.io.File(ckpt, "state")))
-    ssCkptCache.computeIfAbsent((s, abs), { _ =>
-      val base = scratch(s, "statestore", d)
-      val run = streamRuns.incrementAndGet()
-      val src = s"$base/src"
-      val ckpt = s"$base/ckpt_$run"
-      s.range(0, 600).select(col("id").as("v"))
-        .coalesce(1).write.mode("overwrite").parquet(src)
-      // Build the checkpoint in a 1-shuffle-partition session clone
-      // (VERDICT r9 #1): 7 keys need nowhere near 32 state files per
-      // commit, and the batch reads take their layout from the
-      // checkpoint itself — same rows, 32× less state I/O. AvailableNow
-      // processes the one parquet batch and self-terminates (no
-      // processAllAvailable round-trips).
-      val s2 = fewPartitionSession(s, 1)
-      val stream = s2.readStream
-        .schema(StructType(Seq(StructField("v", LongType)))).parquet(src)
-        .withColumn("k", col("v") % 7)
-        .groupBy(col("k")).agg(count(lit(1)).as("cnt"))
-      val name = "graft_statestore_" + run
-      val q = stream.writeStream.format("memory").queryName(name)
-        .outputMode("complete").option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(120000),
-        "statestore checkpoint build did not finish in 120 s")
-      finally q.stop()
-      graft.sources.SessionHooks.onApplicationEnd(s, s"ss-ckpt-$abs") {
-        () => ssCkptCache.remove((s, abs)); ()
-      }
-      ckpt
-    })
+    val base = scratch(s, "statestore", d)
+    val run = streamRuns.incrementAndGet()
+    val src = s"$base/src"
+    val ckpt = s"$base/ckpt_$run"
+    s.range(0, 600).select(col("id").as("v"))
+      .coalesce(1).write.mode("overwrite").parquet(src)
+    // Build the checkpoint in a 1-shuffle-partition session clone: 7 keys
+    // need nowhere near 32 state files per commit, and the batch reads
+    // take their layout from the checkpoint itself — same rows, 32× less
+    // state I/O. AvailableNow processes the one parquet batch and
+    // self-terminates (no processAllAvailable round-trips).
+    val s2 = fewPartitionSession(s, 1)
+    val stream = s2.readStream
+      .schema(StructType(Seq(StructField("v", LongType)))).parquet(src)
+      .withColumn("k", col("v") % 7)
+      .groupBy(col("k")).agg(count(lit(1)).as("cnt"))
+    val name = "graft_statestore_" + run
+    val q = stream.writeStream.format("memory").queryName(name)
+      .outputMode("complete").option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try require(q.awaitTermination(120000),
+      "statestore checkpoint build did not finish in 120 s")
+    finally q.stop()
+    ckpt
   }
 
   /** Pre-pay hooks for Bench's materialize_layout phase (VERDICT r16

@@ -3,10 +3,9 @@ package graft.sources
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Shared run-once-per-(session, tag) application-end hook, used by the
-  * session-keyed memo caches (Tables.relationCache, LlmText.pairsCache) to
-  * evict a stopped session's entries so a session-cycling harness cannot
-  * accumulate strong references to dead sessions (ADVICE r2). */
+/** Shared run-once-per-(session, tag) application-end hook: [[SessionMemo]]
+  * evicts a stopped session's entries through it, and the scratch,
+  * bucketed-layout and Derby cleanups release what a session created. */
 object SessionHooks {
   private val hooked =
     java.util.Collections.newSetFromMap(

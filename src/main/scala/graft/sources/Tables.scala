@@ -14,81 +14,46 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Per-(session, file) memo of the base relations. `spark.read.parquet`
-    * re-lists the path and re-reads footers on every call; with ~100
-    * registered queries each touching 1-3 fixture tables, that listing
-    * cost is pure per-query planning overhead. The fixtures are immutable
-    * for a session's lifetime (driver contract), so the lazily-built
-    * DataFrame — still just a logical plan, nothing is cached/executed —
-    * is safely shared across queries. Keyed by session because a plan is
-    * only valid in the session that built it. Entries are one per
-    * (session, fixture file) — ≤ ~a dozen per session, each a logical plan
-    * + file listing — and a stop-listener evicts a session's entries when
-    * its context ends, so even a session-cycling harness cannot accumulate
-    * references to dead sessions (ADVICE r2). */
-  private val relationCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  /** The base relations, memoized per (session, fixture file): the
+    * lazily-built DataFrame is a logical plan plus a file listing and
+    * footer read, which `spark.read.parquet` would otherwise redo for
+    * every query build. Sound because fixtures are immutable for a
+    * session's lifetime (driver contract) — which [[guardMtime]]
+    * enforces on every call. */
+  private val relations = new SessionMemo[DataFrame]()
 
-  /** First-seen (mtime, length) per (session, fixture path) — ADVICE r10
-    * #1, hardened per ADVICE r11 #2/#3. The memoized relation above
-    * caches the parquet footer read (and [[eventsRawTsType]] pins the
-    * streaming schema to it), which is only sound under the driver
-    * contract "fixtures are immutable for a session's lifetime". The
-    * driver HAS regenerated `/root/testdata` in place twice already
-    * (2026-08-13 and 2026-08-14, between sessions — both absorbed); if
-    * it ever regenerates MID-session, the next [[load]]/[[eventsRaw]]
-    * call fails here with one attributable error naming the file,
-    * instead of surfacing as a stale-plan hash mismatch or a silently
-    * skewed streaming schema pin. The baseline records mtime AND length
-    * because mtime alone can be preserved by `cp -p`/`rsync -t`/coarse
-    * filesystem timestamp granularity — a regenerated parquet file
-    * virtually never preserves both (the guard still cannot catch a
-    * same-length, same-mtime rewrite; FixtureContractSpec's content pins
-    * are the backstop for that). Checked on EVERY call (one stat(2) per
-    * query build — noise next to the footer read the cache avoids).
-    * Keyed and evicted exactly like the relation entries, so a
-    * post-regeneration NEW session legitimately re-records fresh
-    * baselines. */
-  private val mtimeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Long, Long)]
+  /** First-seen (mtime, length) per (session, fixture file). A fixture
+    * regenerated in place MID-session would leave every memoized
+    * relation and the streaming schema pin ([[eventsRawTsType]]) stale;
+    * the next [[load]]/[[eventsRaw]] instead fails here with one error
+    * naming the file. Length is recorded as well as mtime because
+    * `cp -p`, `rsync -t` and coarse timestamps can preserve mtime across
+    * a rewrite; a same-length, same-mtime rewrite still passes
+    * (FixtureContractSpec's content pins are the backstop). A new
+    * session records fresh baselines. */
+  private val firstSeen = new SessionMemo[(Long, Long)]()
 
-  private def guardMtime(s: SparkSession, rawPath: String): Unit = {
-    // Canonical key (same normalization as Scans.scratch/fragmentedEvents):
-    // two spellings of the same fixture path must share ONE first-seen
-    // baseline, or a regeneration between their first touches slips
-    // through as a fresh baseline on the second spelling.
-    val path = java.nio.file.Paths.get(rawPath)
-      .toAbsolutePath.normalize.toString
-    val f = new java.io.File(path)
+  private def guardMtime(s: SparkSession, sfDir: String, name: String)
+      : Unit = {
+    val f = new java.io.File(SessionMemo.norm(sfDir), s"$name.parquet")
     val now = (f.lastModified(), f.length())
-    // Missing file (lastModified == 0): don't record a baseline — let
-    // spark.read.parquet surface the real missing-file error, and a later
-    // successful load establish the baseline. Recording 0 here would turn
-    // every retry after the file appears into a misleading
-    // "changed mid-session" failure (ADVICE r11 #2).
+    // A missing file (lastModified == 0) records no baseline: the read
+    // surfaces the real missing-file error, and a later successful load
+    // establishes the baseline instead of failing as "changed".
     if (now._1 == 0L) return
-    mtimeCache.putIfAbsent((s, path), now) match {
-      case Some(first) if first != now =>
-        throw new IllegalStateException(
-          s"fixture $path changed mid-session (mtime,len $first -> $now): " +
-            "the driver regenerated testdata in place, so every memoized " +
-            "relation and schema pin for it is stale — restart the " +
-            "session/JVM and re-run (FixtureContractSpec names any " +
-            "logical-schema drift)")
-      case _ => ()
-    }
+    val first = firstSeen(s, sfDir, name)(now)
+    if (first != now)
+      throw new IllegalStateException(
+        s"fixture ${f.getPath} changed mid-session (mtime,len $first -> " +
+          s"$now): the driver regenerated testdata in place, so every " +
+          "memoized relation and schema pin for it is stale — restart " +
+          "the session/JVM and re-run (FixtureContractSpec names any " +
+          "logical-schema drift)")
   }
 
-  private def evictOnStop(s: SparkSession): Unit =
-    SessionHooks.onApplicationEnd(s, "tables") { () =>
-      relationCache.keys.filter(_._1 eq s).foreach(relationCache.remove)
-      mtimeCache.keys.filter(_._1 eq s).foreach(mtimeCache.remove)
-    }
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    evictOnStop(spark)
-    guardMtime(spark, s"$sfDir/$name.parquet")
-    relationCache.getOrElseUpdate((spark, s"$sfDir/$name.parquet"),
+    guardMtime(spark, sfDir, name)
+    relations(spark, sfDir, name)(
       spark.read.parquet(s"$sfDir/$name.parquet"))
   }
 
@@ -104,10 +69,9 @@ object Tables {
     * lazy evaluation (the scan reads the conf at execution).
     * [[events]] normalizes both generations to the same column type. */
   private def eventsRaw(s: SparkSession, d: String): DataFrame = {
-    evictOnStop(s)
-    guardMtime(s, s"$d/events.parquet")
+    guardMtime(s, d, "events")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    relationCache.getOrElseUpdate((s, s"$d/events.parquet#nanosAsLong"),
+    relations(s, d, "events#nanosAsLong")(
       s.read.parquet(s"$d/events.parquet"))
   }
 
@@ -143,7 +107,7 @@ object Tables {
     * file source (Scans.eventsFileStream, which pins its schema to the
     * RAW stored type) applies the IDENTICAL transform and a streaming
     * consumer that projects `ts` sees the same values as the batch path
-    * (ADVICE r10 #3) — works unchanged on batch and streaming relations
+    * — works unchanged on batch and streaming relations
     * (pure column expressions, no actions). */
   private[graft] def normalizeTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -157,8 +121,7 @@ object Tables {
         // diverge (div rounds toward zero, floor rounds down); the
         // contract is PARITY with the oracle, not either convention in
         // isolation, so if pre-epoch events ever become possible both
-        // engines' conventions must be re-checked together (ADVICE r10
-        // #2).
+        // engines' conventions must be re-checked together.
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType =>
         raw.withColumn("ts", col("ts").cast(TimestampType))

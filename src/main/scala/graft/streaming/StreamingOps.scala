@@ -595,7 +595,7 @@ object StreamingOps {
 
   /** The funnel on Spark 4's `transformWithState` — the successor
     * stateful-streaming API to `stream_stateful_custom`'s
-    * flatMapGroupsWithState (VERDICT r12 #1), run HERE as a real
+    * flatMapGroupsWithState, run HERE as a real
     * streaming query end-to-end: the fixture events land as TWO parquet
     * files, the file source admits them one per micro-batch
     * (maxFilesPerTrigger=1 under Trigger.AvailableNow), so a user whose
@@ -615,31 +615,24 @@ object StreamingOps {
     *
     * Cost shape (first sf0.1 sample 7.6 s, retune target ≤ ~1.5 s): the
     * two-file input staging is the query's PRECONDITION, not its
-    * demonstration — memoized per (session, sfDir) in [[twsInput]] with
-    * the standard revalidateMemo self-heal — and the streaming query
-    * runs in a 4-shuffle-partition session clone (VERDICT r9 #1
-    * rationale: ~1.5k funnel keys need nowhere near 32 RocksDB store
-    * instances per micro-batch; the clone also scopes the mandatory
-    * provider confs with no restore-on-exit hazard). Results stay
+    * demonstration — memoized per (session, sfDir) in [[twsInput]] —
+    * and the streaming query runs in a 4-shuffle-partition session clone
+    * (~1.5k funnel keys need nowhere near 32 RocksDB store instances
+    * per micro-batch; the clone also scopes the mandatory provider
+    * confs with no restore-on-exit hazard). Results stay
     * partition-count-independent — the CPUS=4/7/8/32 sweeps pin that. */
   /** Memoized two-file input staging for `stream_transform_with_state`:
     * the events projection split on event-time parity into exactly two
-    * one-file parquet halves (healthy = both halves still present), so
-    * spanning users exist and maxFilesPerTrigger=1 yields exactly two
-    * micro-batches. Same pid-keyed-scratch-under-session-key hazard and
-    * self-heal as Scans.fragmentedEvents. */
-  private val twsInCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]
+    * one-file parquet halves, so spanning users exist and
+    * maxFilesPerTrigger=1 yields exactly two micro-batches. A
+    * [[graft.operators.Scans.stampedMemo]]: both halves must be present
+    * AND whole, or the memo rebuilds. */
+  private val twsIn = graft.operators.Scans.stampedMemo()
 
   private[graft] def twsInput(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     import graft.operators.Scans
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    // exact stamped count (round-13 self-review): both halves must be
-    // present AND whole, or the memo rebuilds
-    Scans.revalidateMemo(twsInCache, (s, abs), Scans.healthyStamped)
-    twsInCache.computeIfAbsent((s, abs), { _ =>
+    twsIn(s, d) {
       val inDir = Scans.scratch(s, "tws_in", d)
       Scans.rmRecursive(new java.io.File(inDir))
       val ev = Tables.events(s, d)
@@ -654,11 +647,8 @@ object StreamingOps {
       ev.filter(pmod(col("es"), lit(2)) === 1).coalesce(1)
         .write.mode("append").parquet(inDir)
       Scans.stampExpected(inDir)
-      graft.sources.SessionHooks.onApplicationEnd(s, s"tws-in-$abs") {
-        () => twsInCache.remove((s, abs)); ()
-      }
       inDir
-    })
+    }
   }
 
   /** Memoized two-file staging for `stream_update_mode`: the (user_id,
@@ -671,9 +661,7 @@ object StreamingOps {
     * twsInput's shared files: stamping mtimes on a layout other rows
     * read would couple the rows through the filesystem. */
   /** Shared staged-layout writer for the admission-order stagings
-    * ([[twsTimerInput]], [[updInput]] — one definition, round-14 review;
-    * the same drift class the r4 review flagged for rmRecursive): each
-    * piece lands as ONE parquet file, stamped with strictly increasing
+    * ([[twsTimerInput]], [[updInput]], [[sjInput]]): each piece lands as ONE parquet file, stamped with strictly increasing
     * mtimes 10 s apart in write order, so the file source's
     * oldest-first admission under maxFilesPerTrigger=1 replays the
     * pieces as micro-batches in exactly this order. */
@@ -693,16 +681,12 @@ object StreamingOps {
     }
   }
 
-  private val updInCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]
+  private val updIn = graft.operators.Scans.stampedMemo()
 
   private[graft] def updInput(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     import graft.operators.Scans
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    Scans.revalidateMemo(updInCache, (s, abs), Scans.healthyStamped)
-    updInCache.computeIfAbsent((s, abs), { _ =>
+    updIn(s, d) {
       val inDir = Scans.scratch(s, "upd_in", d)
       Scans.rmRecursive(new java.io.File(inDir))
       val ev = Tables.events(s, d)
@@ -711,11 +695,8 @@ object StreamingOps {
         ev.filter(pmod(col("es"), lit(2)) === 0),
         ev.filter(pmod(col("es"), lit(2)) === 1)))
       Scans.stampExpected(inDir)
-      graft.sources.SessionHooks.onApplicationEnd(s, s"upd-in-$abs") {
-        () => updInCache.remove((s, abs)); ()
-      }
       inDir
-    })
+    }
   }
 
   /** 4-partition session clone with the RocksDB state-store provider
@@ -734,9 +715,7 @@ object StreamingOps {
     s2
   }
 
-  private val sjInCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]
+  private val sjIn = graft.operators.Scans.stampedMemo()
 
   /** Data chunks in the sjInput staging — one file and one micro-batch
     * each; the watermark sentinels ride in the last one. 2 is the proof
@@ -753,16 +732,13 @@ object StreamingOps {
   }
 
   /** Memoized TIME-CHUNKED staging for the file-source stream-stream
-    * join rows (VERDICT r16 #1: the flagship interval join previously
-    * ran as a registered BATCH twin plus MemoryStream spec proofs — no
-    * registered row drove the real symmetric-hash join state machine
-    * over a replayable source, so its 100 TB failure mode, join-state
-    * growth, was invisible to the scale probe). Events (clicks+views
+    * join rows: a replayable source that drives the real symmetric-hash
+    * join state machine, so join-state growth — its 100 TB failure
+    * mode — is visible to the scale probe. Events (clicks+views
     * only) are split into [[sjChunks]] range-disjoint TIME chunks (each
     * micro-batch carries a fixed addBatch/state-lifecycle bill, so the
-    * chunk count trades eviction granularity against that bill;
-    * VERDICT r18 #6 cut it from 4 to 2 — the minimum that still proves
-    * BOTH witnesses: pairs straddling the one chunk boundary only emit
+    * chunk count trades eviction granularity against that bill; 2 is
+    * the minimum that still proves BOTH witnesses: pairs straddling the one chunk boundary only emit
     * if the earlier side was retained in state ACROSS batches, and the
     * watermark advancing between the chunk batches evicts chunk-1 state
     * mid-stream, read by StreamingSpec as state high-water strictly
@@ -787,18 +763,16 @@ object StreamingOps {
   private[graft] def sjInput(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     import graft.operators.Scans
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    Scans.revalidateMemo(sjInCache, (s, abs), Scans.healthyStamped)
-    sjInCache.computeIfAbsent((s, abs), { _ =>
-      // Session-independent shared staging (VERDICT r17 #4): the chunks
-      // are a pure function of the events fixture, so key the directory
-      // by its path + mtime + size and let every JVM on this box reuse
-      // one build — a fresh bench JVM previously re-paid ~17 MB of
-      // staging shuffle and seconds of materialize_layout here. The
+    sjIn(s, d) {
+      // Session-independent shared staging: the chunks are a pure
+      // function of the events fixture, so key the directory by its
+      // path + mtime + size and let every JVM on this box reuse one
+      // build instead of re-paying ~17 MB of staging shuffle. The
       // rename publish preserves the chunk files' admission-order
       // mtimes ([[writeStampedPieces]]), which is all the file source's
       // oldest-first ordering reads — absolute stamp values don't
       // matter, only their order.
+      val abs = graft.sources.SessionMemo.norm(d)
       val src = new java.io.File(abs, "events.parquet")
       // the chunk count and the sentinel placement are part of the key:
       // a layout staged under a different chunking or with separate
@@ -807,12 +781,8 @@ object StreamingOps {
       // serving the old staging forever)
       val fp = s"c${sjChunks}_sentinel-last_m${src.lastModified}" +
         s"_s${src.length}"
-      // evict only the MEMO entry with the session (the map would
-      // otherwise pin dead sessions); the shared dir itself survives
-      // for the next JVM — that is the point.
-      graft.sources.SessionHooks.onApplicationEnd(s, s"sj-in-$abs") {
-        () => sjInCache.remove((s, abs)); ()
-      }
+      // only the memo ENTRY evicts with the session; the shared dir
+      // survives for the next JVM — that is the point.
       Scans.ensureShared(Scans.sharedScratchDir("sj_in", abs, fp),
           Scans.healthyStamped) { inDir =>
         val ev = Tables.events(s, d)
@@ -837,7 +807,7 @@ object StreamingOps {
           chunks.init :+ chunks.last.unionByName(sentinels))
         Scans.stampExpected(inDir)
       }
-    })
+    }
   }
 
   /** The real watermarked stream-stream interval join over the
@@ -1097,18 +1067,14 @@ object StreamingOps {
     * would buy the same firing for one more RocksDB commit cycle
     * (~0.6 s/run measured); if the no-data batch were ever NOT run, the
     * output would miss every session and the oracle would fail loudly —
-    * nothing silent rests on it. Same memo/self-heal pattern as
-    * [[twsInput]]; exact-count stamp covers all three files. */
-  private val twsTimerCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]
+    * nothing silent rests on it. A stamped memo like [[twsInput]]; the
+    * stamp covers all three files. */
+  private val twsTimerIn = graft.operators.Scans.stampedMemo()
 
   private[graft] def twsTimerInput(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     import graft.operators.Scans
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    Scans.revalidateMemo(twsTimerCache, (s, abs), Scans.healthyStamped)
-    twsTimerCache.computeIfAbsent((s, abs), { _ =>
+    twsTimerIn(s, d) {
       val inDir = Scans.scratch(s, "tws_timer_in", d)
       Scans.rmRecursive(new java.io.File(inDir))
       val ev = Tables.events(s, d)
@@ -1124,11 +1090,8 @@ object StreamingOps {
         ev.filter(col("es") >= cut).select(col("user_id"), col("ts")),
         sentinel(-1L, mx + 7200000000L)))
       Scans.stampExpected(inDir)
-      graft.sources.SessionHooks.onApplicationEnd(s, s"tws-timer-in-$abs") {
-        () => twsTimerCache.remove((s, abs)); ()
-      }
       inDir
-    })
+    }
   }
 
   /** Event-time TIMERS on `transformWithState` (VERDICT r13 #1): gap

@@ -268,7 +268,7 @@ class EdgeCasesSpec extends AnyFunSuite {
         s"streaming window bucket wrong: ${winRows.head}")
     } finally {
       // ADVICE r10 #4: these run-unique dirs used to accumulate across
-      // runs. The relationCache entries keyed to them are harmless (no
+      // runs. The Tables memo entries keyed to them are harmless (no
       // later test can re-derive a run-unique temp path) and evict with
       // the session.
       graft.operators.Scans.rmRecursive(new java.io.File(dLegacy))
@@ -379,7 +379,8 @@ class EdgeCasesSpec extends AnyFunSuite {
       "scan_recursive_lookup" -> "rec_lookup",
       "stream_update_mode" -> "upd_mode",
       "sink_stream_table" -> "stream_land_cp",
-      "stream_foreachbatch_upsert" -> "fbu_state")
+      "stream_foreachbatch_upsert" -> "fbu_state",
+      "opt_cbo_reorder" -> "cbo")
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     consumers.foreach { case (query, op) =>
       val n1 = SparkEntry.queries(query)(spark, TestSpark.SF001).count()
@@ -464,6 +465,22 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(bucketRows() == first,
       "join_bucketed read a table missing a bucket file after a partial " +
         "delete — the health check is not exact-count")
+    // opt_cbo_reorder's ANALYZEd tables live under one _cbo_ root with a
+    // subdirectory per table — delete one parquet file of `orders`
+    def cboRows(): Seq[String] =
+      SparkEntry.queries("opt_cbo_reorder")(spark, TestSpark.SF001)
+        .collect().map(_.toString).sorted.toSeq
+    val cboFirst = cboRows()
+    val cboRoots = layoutDirs("cbo")
+    assert(cboRoots.nonEmpty, "test setup: no cbo layout root found")
+    cboRoots.foreach { root =>
+      val orders = new java.io.File(root, "orders")
+      assert(orders.isDirectory, s"test setup: no orders table dir under $root")
+      deleteOne(orders, _.getName.endsWith(".parquet"))
+    }
+    assert(cboRows() == cboFirst,
+      "opt_cbo_reorder read an orders table missing a file after a " +
+        "partial delete — the cbo memo has no health check")
   }
 
   test("mid-session fixture regeneration fails loudly at the next load") {

@@ -513,7 +513,7 @@ class PlanSpec extends AnyFunSuite {
         p.take(1500))
     assert(!p.contains("BroadcastNestedLoopJoin")
       && !p.contains("CartesianProduct"), p.take(1200))
-    // the shared ps rollup must come from the RelationCache-persisted
+    // the shared ps rollup must come from the memo-persisted
     // relation, not a fresh lineitem aggregate per consumer
     assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
       s"ps must be the materialized rollup: ${p.take(1200)}")
