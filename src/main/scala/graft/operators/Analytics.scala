@@ -2365,9 +2365,9 @@ object Analytics {
     * (scan → filter → per-partition files committed atomically via the
     * file-commit protocol); appends never rewrite existing files, which
     * is exactly why the medallion bronze layer is built from them.
-    * Warehouse/catalog hygiene follows [[Scans]]' `sink_table_v2`: drop
-    * the table AND clear its stale warehouse location (the in-memory
-    * catalog dies with the JVM; the files do not). */
+    * Warehouse/catalog hygiene is [[Scans.freshManagedTable]]: drop the
+    * table AND clear its stale warehouse location (the in-memory catalog
+    * dies with the JVM; the files do not). */
   private val sqlInsertInto = Spec(
     "sql_insert_into",
     """SELECT st, COUNT(*) AS n,
@@ -2376,15 +2376,7 @@ object Analytics {
       |  SELECT o_orderstatus AS st, o_totalprice AS price FROM orders
       |  UNION ALL SELECT 'X', 1.0)
       |GROUP BY st ORDER BY st""".stripMargin) { (s, d) =>
-    val key = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-      .replaceAll("[^A-Za-z0-9]", "_")
-    val tbl = s"graft_ins_orders_$key"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    val whConf = s.conf.get("spark.sql.warehouse.dir")
-    val whPath =
-      if (whConf.startsWith("file:")) new java.net.URI(whConf).getPath
-      else whConf
-    Scans.rmRecursive(new java.io.File(new java.io.File(whPath), tbl))
+    val tbl = Scans.freshManagedTable(s, "graft_ins_orders", d)
     s.sql(s"CREATE TABLE $tbl (st STRING, price DOUBLE) USING parquet")
     Tables.orders(s, d).createOrReplaceTempView("graft_ins_src")
     s.sql(s"""INSERT INTO $tbl
@@ -2447,15 +2439,7 @@ object Analytics {
       |  UNION ALL SELECT 'Y', 9.5, 'none')
       |GROUP BY st, price, src ORDER BY st, price, src""".stripMargin) {
     (s, d) =>
-    val key = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-      .replaceAll("[^A-Za-z0-9]", "_")
-    val tbl = s"graft_def_orders_$key"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    val whConf = s.conf.get("spark.sql.warehouse.dir")
-    val whPath =
-      if (whConf.startsWith("file:")) new java.net.URI(whConf).getPath
-      else whConf
-    Scans.rmRecursive(new java.io.File(new java.io.File(whPath), tbl))
+    val tbl = Scans.freshManagedTable(s, "graft_def_orders", d)
     s.sql(s"""CREATE TABLE $tbl (
              |  st STRING,
              |  price DOUBLE DEFAULT 0.0,

@@ -819,8 +819,7 @@ object Joins {
     * Returns (ordersTable, customerTable) catalog names. */
   private[graft] def bucketedTables(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String) = {
-    val sfKey = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-      .replaceAll("[^A-Za-z0-9]", "_")
+    val sfKey = SessionMemo.pathKey(d)
     // pid-tagged like Scans.scratch: a concurrent JVM on the same sfDir
     // must never share — or clean up — this JVM's bucket files.
     val loc = s"${System.getProperty("java.io.tmpdir")}" +
@@ -1298,8 +1297,7 @@ object Joins {
   private[graft] def cboTables(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String, String) =
     cboLayout(s, d) {
-      val key = SessionMemo.norm(d).replaceAll("[^A-Za-z0-9]", "_")
-        .toLowerCase
+      val key = SessionMemo.pathKey(d).toLowerCase
       val loc = Scans.scratch(s, "cbo", d)
       def make(name: String, df: DataFrame, statCols: String): String = {
         val tbl = s"graft_cbo_${name}_$key"

@@ -148,7 +148,7 @@ object Maintenance {
     * the CBO feed: at 100 TB, join reorder and broadcast-vs-shuffle
     * decisions run off these catalog statistics, and a pipeline that
     * never ANALYZEs plans every join blind (size-of-files guesses only).
-    * The row creates a managed copy (the `sink_table_v2` lifecycle),
+    * The row creates a managed copy (fresh via `Scans.freshManagedTable`),
     * ANALYZEs it, and reads the stats back through the public DESCRIBE
     * surfaces: table row count from `DESCRIBE EXTENDED`'s Statistics
     * line, per-column min/max/null-count from
@@ -162,15 +162,7 @@ object Maintenance {
       |  MIN(c_nationkey) AS min_key, MAX(c_nationkey) AS max_key,
       |  CAST(0 AS BIGINT) AS n_nulls, TRUE AS ndv_in_band
       |FROM customer""".stripMargin) { (s, d) =>
-    val key = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-      .replaceAll("[^A-Za-z0-9]", "_")
-    val tbl = s"graft_stats_customer_$key"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    val whConf = s.conf.get("spark.sql.warehouse.dir")
-    val whPath =
-      if (whConf.startsWith("file:")) new java.net.URI(whConf).getPath
-      else whConf
-    Scans.rmRecursive(new java.io.File(new java.io.File(whPath), tbl))
+    val tbl = Scans.freshManagedTable(s, "graft_stats_customer", d)
     Tables.customer(s, d).writeTo(tbl).using("parquet").create()
     s.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS FOR COLUMNS c_nationkey")
     val statsLine = s.sql(s"DESCRIBE TABLE EXTENDED $tbl")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import graft.Spec
 import graft.sources.{SessionMemo, Tables}
+import graft.streaming.StreamingOps.runToEnd
 
 /** SURVEY.md §2.1 — scans / sources / sinks.
   *
@@ -105,36 +106,41 @@ object Scans {
     * (`createOrReplace` fails with UNSUPPORTED_FEATURE.TABLE_OPERATION —
     * staged replace needs a StagingTableCatalog like Iceberg's), so the
     * idempotent form HERE is drop-if-exists + `create()`; on a staging
-    * catalog the same line becomes `createOrReplace()`. Table name is
-    * sfDir-keyed (same hazard class as pid-keyed scratch: two sfDirs in
-    * one session must not race one identifier). The read-back goes
-    * through the catalog, so the oracle hash-checks the whole
-    * write-catalog-read loop. */
+    * catalog the same line becomes `createOrReplace()`
+    * ([[freshManagedTable]] does the drop). The read-back goes through
+    * the catalog, so the oracle hash-checks the whole write-catalog-read
+    * loop. */
   private val sinkTableV2 = Spec(
     "sink_table_v2",
     """SELECT c_nationkey, COUNT(*) AS n_customers,
       |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_acctbal
       |FROM customer GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    val key = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-      .replaceAll("[^A-Za-z0-9]", "_")
-    val tbl = s"graft_v2_custsum_$key"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    // The in-memory session catalog dies with its JVM but the managed
-    // table's FILES under the warehouse dir do not — for a fresh catalog
-    // the drop above is then a no-op and CTAS refuses the stale location
-    // (LOCATION_ALREADY_EXISTS). Clear it explicitly; with a durable
-    // metastore (production) the DROP alone removes the location.
-    val whConf = s.conf.get("spark.sql.warehouse.dir")
-    val whPath =
-      if (whConf.startsWith("file:")) new java.net.URI(whConf).getPath
-      else whConf
-    rmRecursive(new java.io.File(new java.io.File(whPath), tbl))
+    val tbl = freshManagedTable(s, "graft_v2_custsum", d)
     Tables.customer(s, d)
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("n_customers"),
         graft.functions.Det.dsum(col("c_acctbal")).as("sum_acctbal"))
       .writeTo(tbl).using("parquet").create()
     s.table(tbl).orderBy(col("c_nationkey"))
+  }
+
+  /** Drops the managed table `<prefix>_<pathKey(d)>` and clears its
+    * warehouse location, ready for a fresh CREATE; returns the name. The
+    * in-memory session catalog dies with its JVM but the managed table's
+    * FILES under the warehouse dir do not — for a fresh catalog the DROP
+    * is then a no-op and CTAS refuses the stale location
+    * (LOCATION_ALREADY_EXISTS). So the location is cleared explicitly;
+    * with a durable metastore (production) the DROP alone removes it.
+    * The sfDir key keeps two sfDirs in one session off one identifier. */
+  private[graft] def freshManagedTable(s: org.apache.spark.sql.SparkSession,
+      prefix: String, d: String): String = {
+    val tbl = s"${prefix}_${SessionMemo.pathKey(d)}"
+    s.sql(s"DROP TABLE IF EXISTS $tbl")
+    val wh = s.conf.get("spark.sql.warehouse.dir")
+    val whPath = if (wh.startsWith("file:")) new java.net.URI(wh).getPath
+      else wh
+    rmRecursive(new java.io.File(whPath, tbl))
+    tbl
   }
 
   /** Manifest-driven file pruning — the metadata layer every table format
@@ -584,8 +590,7 @@ object Scans {
 
   private[graft] def scratch(s: org.apache.spark.sql.SparkSession,
       op: String, sfDir: String): String = {
-    val abs = java.nio.file.Paths.get(sfDir).toAbsolutePath.normalize.toString
-    val key = abs.replaceAll("[^A-Za-z0-9]", "_")
+    val key = SessionMemo.pathKey(sfDir)
     val dir =
       s"${System.getProperty("java.io.tmpdir")}/graft_p${jvmTag}_${op}_$key"
     graft.sources.SessionHooks.onApplicationEnd(s, s"scratch-$op-$key") {
@@ -608,8 +613,7 @@ object Scans {
     * tmp reaper like a crashed JVM's [[scratch]] leftovers. */
   private[graft] def sharedScratchDir(op: String, sfDir: String,
       fingerprint: String): String = {
-    val abs = java.nio.file.Paths.get(sfDir).toAbsolutePath.normalize.toString
-    val key = abs.replaceAll("[^A-Za-z0-9]", "_")
+    val key = SessionMemo.pathKey(sfDir)
     s"${System.getProperty("java.io.tmpdir")}/graft_shared_${op}_${key}_$fingerprint"
   }
 
@@ -925,7 +929,7 @@ object Scans {
   /** One checkpointed streaming aggregation per (session, sfDir), shared
     * by `scan_state_store` (reads the state DATA) and
     * `scan_state_metadata` (reads the state METADATA): the build is
-    * deterministic — a single AvailableNow batch over a one-file parquet
+    * deterministic — a single run-to-end batch over a one-file parquet
     * series, one shuffle partition — so every consumer sees the identical
     * state-version lineage (batch 0 only) and the two registry rows pay
     * for ONE build per run instead of two.
@@ -953,21 +957,16 @@ object Scans {
     // Build the checkpoint in a 1-shuffle-partition session clone: 7 keys
     // need nowhere near 32 state files per commit, and the batch reads
     // take their layout from the checkpoint itself — same rows, 32× less
-    // state I/O. AvailableNow processes the one parquet batch and
-    // self-terminates (no processAllAvailable round-trips).
+    // state I/O.
     val s2 = fewPartitionSession(s, 1)
     val stream = s2.readStream
       .schema(StructType(Seq(StructField("v", LongType)))).parquet(src)
       .withColumn("k", col("v") % 7)
       .groupBy(col("k")).agg(count(lit(1)).as("cnt"))
     val name = "graft_statestore_" + run
-    val q = stream.writeStream.format("memory").queryName(name)
-      .outputMode("complete").option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000),
-      "statestore checkpoint build did not finish in 120 s")
-    finally q.stop()
+    runToEnd("statestore checkpoint build", stream.writeStream
+      .format("memory").queryName(name)
+      .outputMode("complete").option("checkpointLocation", ckpt))
     ckpt
   }
 
@@ -1085,12 +1084,11 @@ object Scans {
     * the first question an operator asks a misbehaving 100 TB streaming
     * pipeline before reaching for the state data itself. Exercised at
     * test level since round 9 (StreamingRecoverySpec); registered in
-    * round 10 because the AvailableNow single-batch build made every
+    * round 10 because the run-to-end single-batch build made every
     * field deterministic — operator 0 / `stateStoreSave` / store
     * `default`, exactly one shuffle partition, batch range 0..0 — so the
     * row gets a full VALUES-style oracle instead of the weaker
-    * rows-only check (VERDICT r9 #7, closing the last "every usable
-    * source" ambiguity). Shares the memoized checkpoint build above:
+    * rows-only check. Shares the memoized checkpoint build above:
     * registering this row adds a metadata read, not a second build. */
   private val scanStateMetadata = Spec(
     "scan_state_metadata",
@@ -1148,18 +1146,16 @@ object Scans {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         graft.functions.Det.dsum6(col("value")).as("sum_value"))
-    val name = "graft_src_stream_" + java.nio.file.Paths.get(d)
-      .toAbsolutePath.normalize.toString.replaceAll("[^A-Za-z0-9]", "_")
-    val q = stream.writeStream.format("memory").queryName(name)
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
+    val name = "graft_src_stream_" + SessionMemo.pathKey(d)
+    runToEnd("file source stream", stream.writeStream.format("memory")
+      .queryName(name).outputMode("complete"))
     s.table(name).orderBy(col("event_type"))
   }
 
   /** Event-time windowed aggregation over the streaming FILE source — the
     * first registered streaming consumer that PROJECTS `ts`, which makes
     * the generation-normalization inside [[eventsFileStream]]
-    * load-bearing instead of defensive (ADVICE r10 #3): the window
+    * load-bearing instead of defensive: the window
     * boundaries are computed from the normalized session-local TIMESTAMP
     * µs, so the result is identical on the ns and µs fixture generations
     * (asserted per-generation in EdgeCasesSpec) and identical to the
@@ -1201,15 +1197,13 @@ object Scans {
       |FROM events GROUP BY 1
       |ORDER BY ws_us""".stripMargin) { (s, d) =>
     val stream = twoHourWindowAgg(eventsFileStream(s, d))
-    val name = "graft_src_stream_win_" + java.nio.file.Paths.get(d)
-      .toAbsolutePath.normalize.toString.replaceAll("[^A-Za-z0-9]", "_")
-    val q = stream.writeStream.format("memory").queryName(name)
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
+    val name = "graft_src_stream_win_" + SessionMemo.pathKey(d)
+    runToEnd("windowed file source stream", stream.writeStream
+      .format("memory").queryName(name).outputMode("complete"))
     s.table(name).orderBy(col("ws_us"))
   }
 
-  /** Rate-source streaming demo (VERDICT r8 #5 — the last unexercised
+  /** Rate-source streaming demo (the last unexercised
     * public streaming source in the image; genre repos demo it as the
     * no-broker load generator). The rate family emits (timestamp, value)
     * with value a gapless 0,1,2,… sequence — timestamps are wall-clock
@@ -1220,9 +1214,9 @@ object Scans {
     * which is itself the point: the source is the data. numPartitions=4
     * exercises the source's distributed shape (values are spread across
     * partitions, so the prefix provably needs all of them). Since round
-    * 10 this runs the `rate-micro-batch` member of the family under
-    * Trigger.AvailableNow (see the in-body comment for why the
-    * wall-clock `rate` variant has a ~1 s drain floor). */
+    * 10 this runs the `rate-micro-batch` member of the family to its end
+    * (see the in-body comment for why the wall-clock `rate` variant has
+    * a ~1 s drain floor). */
   private val streamRuns = new java.util.concurrent.atomic.AtomicInteger
 
   /** Poll-drain a running streaming query until `have()` reaches `target`
@@ -1272,7 +1266,7 @@ object Scans {
       |FROM range(0, 1000) t(i) GROUP BY 1 ORDER BY 1""".stripMargin) {
     (s, d) =>
     val n = 1000L
-    // rate-MICRO-BATCH variant of the rate family (VERDICT r9 #1): the
+    // rate-MICRO-BATCH variant of the rate family: the
     // plain `rate` source advances its offset at whole-SECOND granularity
     // (rows available = elapsed_seconds × rowsPerSecond — measured, and
     // visible in RateStreamMicroBatchStream.latestOffset), which puts an
@@ -1281,7 +1275,7 @@ object Scans {
     // member Spark added for exactly this: batch k carries values
     // [k·rowsPerBatch, (k+1)·rowsPerBatch) with no wall-clock coupling,
     // so with rowsPerBatch = n the FIRST batch is precisely the 0..n-1
-    // prefix and Trigger.AvailableNow processes it and self-terminates —
+    // prefix and an AvailableNow run processes it and self-terminates —
     // no poll loop, no overshoot, ~0.3 s instead of ~1.6 s.
     val stream = s.readStream.format("rate-micro-batch")
       .option("rowsPerBatch", n.toString)
@@ -1291,13 +1285,8 @@ object Scans {
     // Unique sink name per invocation: a same-session re-run must get a
     // fresh memory table, not the stopped predecessor's rows.
     val name = "graft_rate_stream_" + streamRuns.incrementAndGet()
-    val q = stream.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000),
-      "rate source did not finish its available-now batch in 120 s")
-    finally q.stop()
+    runToEnd("rate source", stream.writeStream.format("memory")
+      .queryName(name).outputMode("append"))
     require(s.table(name).filter(col("value") < n).count() == n,
       s"rate source delivered an incomplete 0..${n - 1} prefix")
     s.table(name).filter(col("value") < n)
@@ -1466,15 +1455,13 @@ object Scans {
     // directories THIS run writes — stale batch=N dirs from an earlier run
     // with different batching would otherwise union into the read-back.
     rmRecursive(new java.io.File(out))
-    val q = eventsFileStream(s, d)
+    runToEnd("foreachBatch sink stream", eventsFileStream(s, d)
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("value"))
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         batch.write.mode("overwrite").parquet(s"$out/batch=$id")
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
     s.read.parquet(out)
       .select(col("event_id"), col("user_id"), col("value"))
       .orderBy(col("event_id"))
@@ -1535,8 +1522,8 @@ object Scans {
     * owning schema/location (at 100 TB: the bronze-layer landing table
     * every medallion pipeline starts with). Per-invocation hygiene is
     * the union of two prior lessons: the managed table's FILES outlive
-    * the in-memory catalog across JVMs ([[sinkTableV2]] — drop + clear
-    * the warehouse location), and a persisted CHECKPOINT would replay
+    * the in-memory catalog across JVMs ([[freshManagedTable]]), and a
+    * persisted CHECKPOINT would replay
     * nothing into the freshly-dropped table on re-invocation, silently
     * emitting zero rows — the checkpoint is removed with the table so
     * offsets restart with it. Batch/stream parity is the oracle: the
@@ -1548,30 +1535,13 @@ object Scans {
       |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY event_type
       |ORDER BY event_type""".stripMargin) { (s, d) =>
-    val key = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-      .replaceAll("[^A-Za-z0-9]", "_")
-    val tbl = s"graft_stream_land_$key"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    val whConf = s.conf.get("spark.sql.warehouse.dir")
-    val whPath =
-      if (whConf.startsWith("file:")) new java.net.URI(whConf).getPath
-      else whConf
-    rmRecursive(new java.io.File(new java.io.File(whPath), tbl))
+    val tbl = freshManagedTable(s, "graft_stream_land", d)
     val cp = scratch(s, "stream_land_cp", d)
     rmRecursive(new java.io.File(cp))
-    val q = eventsFileStream(s, d)
+    runToEnd("stream-to-table landing", eventsFileStream(s, d)
       .select(col("event_id"), col("event_type"), col("value"))
       .writeStream
-      .option("checkpointLocation", cp)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .toTable(tbl)
-    // Bounded like every other streaming row (ADVICE r14 #1): an
-    // unbounded awaitTermination on a wedged AvailableNow query would
-    // hang the whole verify/bench run; 180 s matches the StreamingOps
-    // pattern and fails loudly instead.
-    try require(q.awaitTermination(180000),
-      "stream-to-table landing did not finish in 180 s")
-    finally q.stop()
+      .option("checkpointLocation", cp), _.toTable(tbl))
     s.table(tbl)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),

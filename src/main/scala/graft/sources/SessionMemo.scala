@@ -66,6 +66,12 @@ object SessionMemo {
   def norm(sfDir: String): String =
     java.nio.file.Paths.get(sfDir).toAbsolutePath.normalize.toString
 
+  /** [[norm]] with every non-alphanumeric character mapped to `_`: the
+    * sfDir component of scratch and shared dir names, catalog table names
+    * and streaming query names. */
+  def pathKey(sfDir: String): String =
+    norm(sfDir).replaceAll("[^A-Za-z0-9]", "_")
+
   /** Small derived relations that more than one part of a plan (or more
     * than one registered row) consumes — an LM table, a name dictionary,
     * range-partitioned rank keys, the partsupp rollup. The build must

@@ -2,6 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode,
+  StreamingQuery, TimeMode, Trigger}
+import org.apache.spark.sql.types._
 import graft.Spec
 import graft.functions.Det
 import graft.sources.Tables
@@ -35,6 +38,38 @@ object StreamingOps {
     profileStreamProgress, foreachBatchUpsert, chainedAggSpec,
     sourceStreamJoin, sourceStreamJoinOuter)
 
+  /** How long any finite streaming query may run before its row fails. */
+  private val runBound = java.time.Duration.ofSeconds(180)
+
+  /** Runs a finite streaming query to its end — the one way every such
+    * row finishes (ARCHITECTURE §3). `Trigger.AvailableNow` fixes the end
+    * offset at start; the query processes everything available, plus the
+    * trailing no-data batch a moved watermark asks for, and then stops
+    * itself. The wait is bounded: a wedged query fails its row with a
+    * message naming `what` instead of hanging the run. `stop()` runs in
+    * `finally`, so no exit path leaves a query live holding its state
+    * stores while a later run deletes its checkpoint (a no-op once the
+    * query terminated). A failed query's own exception propagates from
+    * `awaitTermination` unchanged. Returns the terminated query, whose
+    * `recentProgress` stays readable. `start` is `_.toTable(t)` for a
+    * catalog sink. */
+  private[graft] def runToEnd(what: String, writer: DataStreamWriter[_],
+      start: DataStreamWriter[_] => StreamingQuery = _.start())
+      : StreamingQuery = {
+    val q = start(writer.trigger(Trigger.AvailableNow()))
+    try require(q.awaitTermination(runBound.toMillis),
+      s"$what did not finish in ${runBound.toSeconds} s")
+    finally q.stop()
+    q
+  }
+
+  /** A `foreachBatch` sink that appends each micro-batch, tagged with its
+    * `batch_id`, to the parquet dir `outDir` — the per-batch emission
+    * ledger of the update-mode rows. */
+  private def batchLedger(outDir: String): (DataFrame, Long) => Unit =
+    (df, id) => df.withColumn("batch_id", lit(id))
+      .write.mode("append").parquet(outDir)
+
   /** `StreamingQuery.recentProgress` — the per-micro-batch observability
     * surface (`StreamingQueryProgress`: batchId, numInputRows, sink
     * numOutputRows) that a 100 TB streaming deployment alarms on: input
@@ -58,23 +93,14 @@ object StreamingOps {
       |  (SELECT COUNT(*) FROM e WHERE es % 2 = 1),
       |  (SELECT COUNT(DISTINCT user_id) FROM e)
       |ORDER BY batch_id""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
     val inDir = updInput(s, d)
     val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("es", LongType)))
-    val name = "graft_progress_" + java.nio.file.Paths.get(d)
-      .toAbsolutePath.normalize.toString.replaceAll("[^A-Za-z0-9]", "_")
-    val q = s2.readStream.schema(schema)
+    val name = "graft_progress_" + graft.sources.SessionMemo.pathKey(d)
+    val q = runToEnd("progress query", s2.readStream.schema(updSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
       .groupBy(col("user_id")).count()
       .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(180000),
-      "progress query did not finish in 180 s")
-    finally q.stop()
+      .outputMode("complete"))
     val rows = q.recentProgress.toSeq
       .filter(_.numInputRows > 0)
       .map(p => (p.batchId, p.numInputRows, p.sink.numOutputRows))
@@ -111,29 +137,21 @@ object StreamingOps {
       |SELECT user_id, MAX(es) AS last_es,
       |  CAST(COUNT(*) AS BIGINT) AS n_events
       |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
     import graft.operators.Scans
     val inDir = updInput(s, d)
     val s2 = Scans.fewPartitionSession(s, 4)
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("es", LongType)))
     val out = Scans.scratch(s, "fbu_state", d)
     Scans.rmRecursive(new java.io.File(out))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     val base = s"$out/state"
     val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = s2.readStream.schema(schema)
+    runToEnd("upsert stream", s2.readStream.schema(updSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (upsertMergeBatch(out, batch, id)) nBatches.incrementAndGet()
         ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(180000),
-      "upsert stream did not finish in 180 s")
-    finally q.stop()
+      })
     require(nBatches.get >= 2,
       s"only ${nBatches.get} data batch(es) — the merge path was never " +
         "exercised across a batch boundary")
@@ -598,7 +616,7 @@ object StreamingOps {
     * flatMapGroupsWithState, run HERE as a real
     * streaming query end-to-end: the fixture events land as TWO parquet
     * files, the file source admits them one per micro-batch
-    * (maxFilesPerTrigger=1 under Trigger.AvailableNow), so a user whose
+    * (maxFilesPerTrigger=1 under [[runToEnd]]), so a user whose
     * events span the file boundary only produces the correct final row
     * if [[FunnelProcessor]]'s ValueState genuinely carried across
     * batches. TWS mandates the RocksDB state-store provider (the
@@ -628,6 +646,10 @@ object StreamingOps {
     * [[graft.operators.Scans.stampedMemo]]: both halves must be present
     * AND whole, or the memo rebuilds. */
   private val twsIn = graft.operators.Scans.stampedMemo()
+
+  /** Column layout of the [[twsInput]] staging. */
+  private val twsSchema = StructType(Seq(StructField("user_id", LongType),
+    StructField("event_type", StringType), StructField("es", LongType)))
 
   private[graft] def twsInput(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
@@ -683,6 +705,10 @@ object StreamingOps {
 
   private val updIn = graft.operators.Scans.stampedMemo()
 
+  /** Column layout of the [[updInput]] staging. */
+  private val updSchema = StructType(Seq(StructField("user_id", LongType),
+    StructField("es", LongType)))
+
   private[graft] def updInput(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     import graft.operators.Scans
@@ -724,12 +750,9 @@ object StreamingOps {
 
   /** Column layout of the [[sjInput]] staging, declared so the streaming
     * read needs no schema-inference listing/footer job per op. */
-  private val sjSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("event_id", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("ts", TimestampType)))
-  }
+  private val sjSchema = StructType(Seq(StructField("event_id", LongType),
+    StructField("user_id", LongType), StructField("event_type", StringType),
+    StructField("ts", TimestampType)))
 
   /** Memoized TIME-CHUNKED staging for the file-source stream-stream
     * join rows: a replayable source that drives the real symmetric-hash
@@ -754,9 +777,9 @@ object StreamingOps {
     * (a click and a view with negative event_ids/user_ids at max + 2 d):
     * its batch still filters and evicts with the pre-batch watermark, so
     * no real row of that chunk is late, and it leaves the watermark past
-    * every real row — the trailing no-data micro-batch that
-    * `Trigger.AvailableNow` runs whenever the watermark advanced then
-    * evicts all real state and flushes the OUTER variant's unmatched
+    * every real row — the trailing no-data micro-batch that an
+    * AvailableNow run ([[runToEnd]]) adds whenever the watermark advanced
+    * then evicts all real state and flushes the OUTER variant's unmatched
     * tail before the query terminates ([[fileStreamJoin]]). Sentinels
     * themselves never emit — nothing ever passes a watermark beyond
     * them — and are filtered defensively anyway. */
@@ -822,7 +845,7 @@ object StreamingOps {
     * batch parity: time-ordered chunks mean zero late drops, inner
     * matches emit as found, and the sentinel pair in the last chunk
     * moves the watermark past every real row, so the trailing no-data
-    * batch `Trigger.AvailableNow` runs before terminating flushes the
+    * batch [[runToEnd]] runs before terminating flushes the
     * outer tail (see [[sjInput]]); one op is [[sjChunks]] data batches
     * plus that one. The session clone pins the state layout: 4 shuffle
     * partitions (the parent's 32 would be pure fixed I/O at fixture
@@ -837,8 +860,6 @@ object StreamingOps {
     * per-batch floor. */
   private[graft] def fileStreamJoin(s: org.apache.spark.sql.SparkSession,
       d: String, joinType: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.operators.Scans
     val inDir = sjInput(s, d)
     val s2 = rocksDbSession(s)
     // the sentinel only advances the watermark past the tail after its
@@ -864,15 +885,10 @@ object StreamingOps {
         coalesce(col("c_uid"), col("v_uid")).as("user_id"),
         unix_micros(col("c_ts")).as("click_us"),
         unix_micros(col("v_ts")).as("view_us"))
-    val name = "graft_sj_" + joinType + "_" + java.nio.file.Paths.get(d)
-      .toAbsolutePath.normalize.toString.replaceAll("[^A-Za-z0-9]", "_")
-    val q = joined.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    // stop() in finally: on the timeout path the query must not stay
-    // live holding its state stores (no-op once it terminated)
-    try require(q.awaitTermination(180000),
-      "stream-stream join query did not finish in 180 s")
-    finally q.stop()
+    val name = "graft_sj_" + joinType + "_" +
+      graft.sources.SessionMemo.pathKey(d)
+    runToEnd("stream-stream join query", joined.writeStream
+      .format("memory").queryName(name).outputMode("append"))
     // The sentinel filter runs on the BATCH read of the memory table,
     // never inside the streaming plan: a post-join `click_id >= 0` is a
     // LEFT-side predicate, and PushPredicateThroughJoin pushes those
@@ -961,26 +977,15 @@ object StreamingOps {
     * micro-batch, update-mode groupBy-count, per-batch ledger out. */
   private[graft] def updateModeLedger(s: org.apache.spark.sql.SparkSession,
       inDir: String, base: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
     val chk = s"$base/chk"; val outDir = s"$base/out"
     val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("es", LongType)))
-    val q = s2.readStream.schema(schema)
+    runToEnd("update-mode query", s2.readStream.schema(updSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
       .groupBy(col("user_id")).count()
       .writeStream
       .option("checkpointLocation", chk)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(outDir)
-      }
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(180000),
-      "update-mode query did not finish in 180 s")
-    finally q.stop()
+      .foreachBatch(batchLedger(outDir))
+      .outputMode("update"))
     s.read.parquet(outDir)
       .select(col("batch_id"), col("user_id"), col("count").as("cnt"))
       .orderBy(col("batch_id"), col("user_id"))
@@ -1003,8 +1008,6 @@ object StreamingOps {
       |FROM e JOIN fp ON e.user_id = fp.user_id
       |GROUP BY e.user_id
       |ORDER BY e.user_id""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
-    import org.apache.spark.sql.types._
     val base = graft.operators.Scans.scratch(s, "tws", d)
     graft.operators.Scans.rmRecursive(new java.io.File(base)) // idempotent
     val chk = s"$base/chk"; val outDir = s"$base/out"
@@ -1012,9 +1015,7 @@ object StreamingOps {
     // TWS mandates RocksDB
     val s2 = rocksDbSession(s)
     import s2.implicits._
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("event_type", StringType), StructField("es", LongType)))
-    val q = s2.readStream.schema(schema)
+    runToEnd("transformWithState query", s2.readStream.schema(twsSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
       .as[(Long, String, Long)]
       .groupByKey(_._1)
@@ -1026,20 +1027,8 @@ object StreamingOps {
         "clicks_before_first_purchase", "first_es", "last_es")
       .writeStream
       .option("checkpointLocation", chk)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(outDir)
-      }
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow()).start()
-    // stop() in finally (round-13 self-review, same shape as
-    // Scans.statefulCheckpoint): on the timeout path the query must not
-    // stay live holding RocksDB stores while a later invocation
-    // rmRecursive's its checkpoint out from under it. No-op if the query
-    // already terminated.
-    try require(q.awaitTermination(180000),
-      "transformWithState query did not finish in 180 s")
-    finally q.stop()
+      .foreachBatch(batchLedger(outDir))
+      .outputMode(OutputMode.Update()))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("batch_id").desc)
     s.read.parquet(outDir)
@@ -1094,7 +1083,7 @@ object StreamingOps {
     }
   }
 
-  /** Event-time TIMERS on `transformWithState` (VERDICT r13 #1): gap
+  /** Event-time TIMERS on `transformWithState`: gap
     * sessionization where each key's session is closed by a
     * `handleExpiredTimer` firing at watermark ≥ last event + gap — see
     * [[SessionTimerProcessor]] for the state/timer design and why the
@@ -1127,8 +1116,6 @@ object StreamingOps {
       |  MAX(es) + 1800000000 AS session_end_us, COUNT(*) AS n_events
       |FROM y GROUP BY user_id, sid
       |ORDER BY user_id, session_start_us""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
-    import org.apache.spark.sql.types._
     val base = graft.operators.Scans.scratch(s, "tws_timer", d)
     graft.operators.Scans.rmRecursive(new java.io.File(base)) // idempotent
     val chk = s"$base/chk"; val outDir = s"$base/out"
@@ -1149,7 +1136,7 @@ object StreamingOps {
     import s2.implicits._
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("ts", TimestampType)))
-    val q = s2.readStream.schema(schema)
+    runToEnd("stream_tws_timers query", s2.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
       .withWatermark("ts", "1 minute")
       .select(col("user_id"), unix_micros(col("ts")).as("es"))
@@ -1161,16 +1148,12 @@ object StreamingOps {
       .toDF("user_id", "session_start_us", "session_end_us", "n_events")
       .writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", chk)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(180000),
-      "stream_tws_timers query did not finish in 180 s")
-    finally q.stop()
+      .outputMode(OutputMode.Append()))
     s.read.parquet(outDir).filter(col("user_id") >= 0)
       .orderBy(col("user_id"), col("session_start_us"))
   }
 
-  /** MapState on `transformWithState` (VERDICT r13 #1): per-user
+  /** MapState on `transformWithState`: per-user
     * event-type counters held in one RocksDB map per key and updated in
     * place across micro-batches — see [[TypeCountsProcessor]]. Reuses the
     * [[twsInput]] parity staging (one file per micro-batch), so final
@@ -1184,17 +1167,13 @@ object StreamingOps {
     """SELECT user_id, event_type, COUNT(*) AS n_events
       |FROM events GROUP BY 1, 2
       |ORDER BY user_id, event_type""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
-    import org.apache.spark.sql.types._
     val base = graft.operators.Scans.scratch(s, "tws_map", d)
     graft.operators.Scans.rmRecursive(new java.io.File(base)) // idempotent
     val chk = s"$base/chk"; val outDir = s"$base/out"
     val inDir = twsInput(s, d)
     val s2 = rocksDbSession(s)
     import s2.implicits._
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("event_type", StringType), StructField("es", LongType)))
-    val q = s2.readStream.schema(schema)
+    runToEnd("stream_tws_mapstate query", s2.readStream.schema(twsSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
       .as[(Long, String, Long)]
       .groupByKey(_._1)
@@ -1204,15 +1183,8 @@ object StreamingOps {
       .toDF("user_id", "event_type", "n_events")
       .writeStream
       .option("checkpointLocation", chk)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(outDir)
-      }
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(180000),
-      "stream_tws_mapstate query did not finish in 180 s")
-    finally q.stop()
+      .foreachBatch(batchLedger(outDir))
+      .outputMode(OutputMode.Update()))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("batch_id").desc)
@@ -1231,10 +1203,11 @@ object StreamingOps {
       .orderBy(col("event_id"))
   }
 
-  /** Incremental batch processing with restart — Trigger.AvailableNow +
-    * a checkpoint + the exactly-once parquet file sink: the production
-    * shape of every periodic ingest job (run on a schedule, process ONLY
-    * files that arrived since the last run, stop). Two separate query
+  /** Incremental batch processing with restart — [[runToEnd]] (an
+    * AvailableNow run) + a checkpoint + the exactly-once parquet file
+    * sink: the production shape of every periodic ingest job (run on a
+    * schedule, process ONLY files that arrived since the last run,
+    * stop). Two separate query
     * incarnations run here against the same checkpoint: the first sees
     * half the corpus, the second — a genuine restart, new query object —
     * sees the directory with both halves but processes only the unseen
@@ -1252,21 +1225,17 @@ object StreamingOps {
     """SELECT event_id, user_id, value FROM events
       |WHERE event_type = 'purchase'
       |ORDER BY event_id""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
     val base = graft.operators.Scans.scratch(s, "increstart", d)
     graft.operators.Scans.rmRecursive(new java.io.File(base)) // idempotent re-run
     val inDir = s"$base/in"; val chk = s"$base/chk"; val outDir = s"$base/out"
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    def runOnce(): Unit = {
-      val q = s.readStream.schema(ev.schema).parquet(inDir)
+    def runOnce() = runToEnd("incremental restart run",
+      s.readStream.schema(ev.schema).parquet(inDir)
         .filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("value"))
         .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+        .option("path", outDir).option("checkpointLocation", chk))
     ev.filter(pmod(col("event_id"), lit(2)) === 0)
       .write.mode("append").parquet(inDir)
     runOnce()
