@@ -125,56 +125,35 @@ object Bench {
     // measure the join, and shrinks the first-sample/retime calibration
     // band the load-adjudication rule reads.
     val matLayout = timed {
-      // Round 21 (optimization; guide §2.6 "overlap independent jobs"):
-      // the staged layouts below are mutually independent — distinct
-      // scratch/checkpoint directories, distinct memo keys, session
-      // CLONES for any per-query conf — so they now run as concurrent
-      // driver-side lanes on a small pool and the scheduler back-fills
-      // the tail of one staging with the next one's tasks. Conf
-      // isolation: NO lane mutates the shared session's SQLConf —
-      // cboTables' CBO confs live in the opt_cbo_reorder row body
-      // (query time, sequential), and warmRuntimeFilter scopes its
-      // bloom/broadcast confs on a throwaway session clone (see its
-      // docstring — a shared-session conf window here was once observed
-      // by a concurrent lane's planner as a +7 MB shuffle_mb wobble).
-      // materializeLayouts + the warm share a lane for load balance. The
-      // field still reports the phase's wall time; failure semantics
-      // are unchanged (any lane failure rethrows, timed() reports -1).
-      // Lane results are Try-wrapped so one failure cannot leave the
-      // other lanes un-awaited (a detached staging writing into a dir
-      // a retry later rebuilds).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val lanes: Seq[() => Unit] = Seq(
-        () => {
-          graft.operators.Joins.materializeLayouts(spark, sfDir): Unit
-          graft.operators.Joins.warmRuntimeFilter(spark, sfDir)
-        },
-        () => graft.streaming.StreamingOps.twsInput(spark, sfDir): Unit,
-        () => graft.streaming.StreamingOps.twsTimerInput(spark, sfDir): Unit,
-        () => graft.streaming.StreamingOps.updInput(spark, sfDir): Unit,
-        () => graft.streaming.StreamingOps.sjInput(spark, sfDir): Unit,
-        () => graft.operators.Scans.prepayStateCheckpoint(spark, sfDir),
-        () => graft.operators.Scans.warmDerby(spark, sfDir),
-        () => graft.operators.Scans.warmSocketSource(spark),
-        () => graft.operators.LlmVector.materializeIvfPqLayout(spark, sfDir))
-      val futures = lanes.map(f => Future(scala.util.Try(f())))
-      // Drain EVERY lane before surfacing any failure (ADVICE r21 #1):
-      // the inner Try only catches NonFatal, so a fatal lane error
-      // (LinkageError/OOM in a classload-heavy warm) fails the Future
-      // itself — a sequential Await.result loop would throw mid-map and
-      // leave later lanes un-awaited, exactly the detached-staging
-      // hazard the Try-wrapping was added to close. Await.ready never
-      // throws the lane's error; the flatten folds the Future's own
-      // Try into the lane Try so collectFirst sees both failure kinds.
-      futures.foreach(Await.ready(_, Duration.Inf))
-      val done = futures.map(_.value.get.flatten)
-      pool.shutdown()
-      done.collectFirst { case scala.util.Failure(e) => throw e }
-        .foreach(identity)
+      // The staged layouts below are mutually independent — distinct
+      // scratch/checkpoint directories, distinct memo keys — so they run
+      // as concurrent driver-side lanes and the scheduler back-fills the
+      // tail of one staging with the next one's tasks. No lane sets a
+      // conf on the shared session: a query's own confs live on a
+      // Sessions.scoped clone, so a concurrent lane's planner never sees
+      // them. materializeLayouts + the warm share a lane for load
+      // balance. The field reports the phase's wall time; a lane failure
+      // rethrows (timed() reports -1) only after Overlap's finally has
+      // drained the other lanes, so no detached staging outlives it.
+      graft.operators.Overlap.overlapped(4) { implicit ec =>
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.duration.Duration
+        Seq[() => Unit](
+          () => {
+            graft.operators.Joins.materializeLayouts(spark, sfDir): Unit
+            graft.operators.Joins.warmRuntimeFilter(spark, sfDir)
+          },
+          () => graft.streaming.StreamingOps.twsInput(spark, sfDir): Unit,
+          () => graft.streaming.StreamingOps.twsTimerInput(spark, sfDir): Unit,
+          () => graft.streaming.StreamingOps.updInput(spark, sfDir): Unit,
+          () => graft.streaming.StreamingOps.sjInput(spark, sfDir): Unit,
+          () => graft.operators.Scans.prepayStateCheckpoint(spark, sfDir),
+          () => graft.operators.Scans.warmDerby(spark, sfDir),
+          () => graft.operators.Scans.warmSocketSource(spark),
+          () => graft.operators.LlmVector.materializeIvfPqLayout(spark, sfDir))
+          .map(lane => Future(lane()))
+          .foreach(Await.result(_, Duration.Inf))
+      }
       // The lane membership above preserves every prior round's prepay
       // rationale verbatim: sjInput (VERDICT r16 #6), the statestore
       // checkpoint memo + embedded Derby boot (VERDICT r16 #6), the

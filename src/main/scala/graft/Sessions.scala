@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The session every `main` runs on. */
+/** The session every `main` runs on, and the one way a query gets its
+  * own confs (ARCHITECTURE.md "Session confs"). */
 object Sessions {
   /** `local[cpus]` with shuffle partitions = cpus (the driver contract's
     * sizing), the UTC session time zone every oracle hash assumes, and
@@ -14,4 +15,20 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+
+  /** A clone of `s` with `confs` set. It shares `s`'s SparkContext, cache
+    * and catalog but owns its SQLConf, which starts from the SparkConf:
+    * runtime sets on `s` do not carry over, and nothing set here is seen
+    * by `s` or by any concurrent query. */
+  def scoped(s: SparkSession, confs: (String, String)*): SparkSession = {
+    val s2 = s.newSession()
+    confs.foreach { case (k, v) => s2.conf.set(k, v) }
+    s2
+  }
+
+  /** `df`'s plan run on a [[scoped]] clone of its session: it is
+    * optimized, planned and executed under `confs`, while its relations
+    * (and every memo that built them) stay the caller's. */
+  def scoped(df: DataFrame, confs: (String, String)*): DataFrame =
+    org.apache.spark.sql.graft.Rebind(scoped(df.sparkSession, confs: _*), df)
 }

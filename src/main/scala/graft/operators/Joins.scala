@@ -262,23 +262,6 @@ object Joins {
     out
   }
 
-  /** Scoped session-conf override: saves the previous values, runs `body`,
-    * restores (or unsets) on the way out. The caller must FORCE any plan it
-    * wants optimized under the overridden confs inside `body` (Spark
-    * optimizes lazily at first action / `executedPlan` access, and a
-    * QueryExecution caches its plans once forced) — otherwise the
-    * restored values win. Used instead of a session-wide set so one
-    * operator's tuning can never bleed into another query's plan. */
-  private[operators] def withConfs[T](s: org.apache.spark.sql.SparkSession,
-      kv: (String, String)*)(body: => T): T = {
-    val prev = kv.map { case (k, _) => k -> s.conf.getOption(k) }
-    kv.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
   /** Runtime bloom-filter join pruning — the ROW-level sibling of
     * `join_dpp`'s partition-level pruning, and the pruning path that
     * matters at 100 TB when the fact is NOT laid out by the join key (the
@@ -295,35 +278,34 @@ object Joins {
     * broadcastable dim skips it — the broadcast already avoids shuffling
     * the fact by key... but not scanning+shuffling fact ROWS, which the
     * bloom still prunes; Spark's rule is conservative here), so the
-    * broadcast threshold is disabled inside the scope; the
+    * broadcast threshold is disabled on the query's clone; the
     * application-side floor (10 GB default — real clusters shouldn't
-    * bloom tiny scans) is lowered for fixture sizes. The plan is forced
-    * inside the scope, so nothing leaks to other queries. The filter is
+    * bloom tiny scans) is lowered for fixture sizes. The filter is
     * a pure optimization — false positives just pass rows the join drops
     * anyway — so the oracle is the plain join. */
+  private val bloomConfs = Seq(
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.sql.optimizer.runtime.bloomFilter." +
+      "applicationSideScanSizeThreshold" -> "0",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
   private val bloom = Spec(
     "join_bloom",
     """SELECT l.l_orderkey, l.l_linenumber, l.l_quantity, p.p_name
       |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
       |WHERE p.p_brand = 'Brand#19'
       |ORDER BY l.l_orderkey, l.l_linenumber""".stripMargin) { (s, d) =>
-    withConfs(s,
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val out = Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          col("l_partkey"))
-        .join(Tables.part(s, d)
-          .filter(col("p_brand") === "Brand#19")
-          .select(col("p_partkey"), col("p_name")),
-          col("l_partkey") === col("p_partkey"))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          col("p_name"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-      out.queryExecution.executedPlan // pin the bloom-injected plan in scope
-      out
-    }
+    val out = Tables.lineitem(s, d)
+      .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
+        col("l_partkey"))
+      .join(Tables.part(s, d)
+        .filter(col("p_brand") === "Brand#19")
+        .select(col("p_partkey"), col("p_name")),
+        col("l_partkey") === col("p_partkey"))
+      .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
+        col("p_name"))
+      .orderBy(col("l_orderkey"), col("l_linenumber"))
+    graft.Sessions.scoped(out, bloomConfs: _*)
   }
 
   /** Pre-pay the runtime-bloom-filter first-touch (VERDICT r17 #3):
@@ -333,31 +315,17 @@ object Joins {
     * machinery no other registered row exercises. Warm it with a tiny
     * part⋈part join under the same scoped confs — real file scans so
     * InjectRuntimeFilter actually fires — leaving the timed row's
-    * steady sample to measure the real lineitem-side pruning. */
+    * steady sample to measure the real lineitem-side pruning. Like every
+    * per-query conf, the bloom confs live on a clone (Bench runs this
+    * warm beside other staging lanes, which must not see them); the plan
+    * is built on `s`, so the part relation is the caller's memo entry. */
   private[graft] def warmRuntimeFilter(s: org.apache.spark.sql.SparkSession,
       d: String): Unit = {
-    // Round 21: the warm runs on a throwaway session CLONE, not via
-    // withConfs on the shared session. Bench's materialize_layout now
-    // overlaps independent stagings (guide §2.6), and a shared-session
-    // conf window — autoBroadcastJoinThreshold=-1 held for this warm's
-    // duration — could be observed by a CONCURRENT lane planning its
-    // staging query, flipping a staged build's join strategy for that
-    // run (seen once as a +7 MB shuffle_mb wobble in an r21 capture;
-    // shuffle_mb is supposed to be byte-stable). The clone owns its
-    // SQLConf, so nothing is observable outside; the warm's actual
-    // payload — BloomFilterAggregate/might_contain classload + codegen
-    // — is JVM-wide either way.
-    val s2 = graft.operators.Scans.fewPartitionSession(s,
-      s.conf.get("spark.sql.shuffle.partitions").toInt)
-    s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    s2.conf.set("spark.sql.optimizer.runtime.bloomFilter." +
-      "applicationSideScanSizeThreshold", "0")
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val p = Tables.part(s2, d)
-    p.select(col("p_partkey"))
+    val p = Tables.part(s, d)
+    graft.Sessions.scoped(p.select(col("p_partkey"))
       .join(p.filter(col("p_brand") === "Brand#19")
         .select(col("p_partkey").as("k")),
-        col("p_partkey") === col("k"))
+        col("p_partkey") === col("k")), bloomConfs: _*)
       .count(): Unit
   }
 
@@ -627,17 +595,14 @@ object Joins {
     * partitions qualify as skewed; the result (an aggregate over the
     * joined rows) is unaffected by how AQE slices the work, which is
     * exactly the point — the oracle checks the plain join. */
-  /** The skewed join, EXECUTED under the scoped AQE-skew confs (AQE
-    * decides skew splits at runtime from real partition sizes, so unlike
-    * join_bloom's optimize-time injection the confs must cover the
-    * ACTION, not just planning — the result is collected in scope).
-    * Returns the 3 result rows, the executed plan string (carrying the
-    * skew markers for JoinsSpec), and the schema. Key mapping: 8 of
-    * every 10 orderkeys land on hot key 0, the rest keep their mod-10
-    * class — an 8×-median hot partition AQE must subdivide. */
-  def skewAqeRun(s: org.apache.spark.sql.SparkSession, d: String)
-      : (Array[org.apache.spark.sql.Row], String,
-         org.apache.spark.sql.types.StructType) = {
+  /** The skewed join on a clone carrying the AQE-skew confs (AQE
+    * decides skew splits at runtime from real partition sizes, so the
+    * confs must cover the ACTION, not just planning — the clone's conf
+    * does, whenever the frame runs). Key mapping: 8 of every 10
+    * orderkeys land on hot key 0, the rest keep their mod-10 class — an
+    * 8×-median hot partition AQE must subdivide. */
+  private def skewAqeFrame(s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame = {
     val hotOf = (k: Column) =>
       when(pmod(k, lit(10L)) < 8, 0L).otherwise(pmod(k, lit(10L)))
     val factBase = Tables.lineitem(s, d)
@@ -665,7 +630,36 @@ object Joins {
     val factBytes = factBase.queryExecution.optimizedPlan.stats.sizeInBytes
     val skewThresholdBytes = (factBytes / 16).max(1)
     val advisoryBytes = (factBytes / 32).max(1)
-    withConfs(s,
+    val fact = factBase
+      // AQE splits a skewed partition at MAPPER boundaries; the tiny
+      // fixture file scans as ONE map task, which is unsplittable by
+      // definition. Round-robin to 16 mappers first — the multi-mapper
+      // shuffle geometry any real cluster has.
+      .repartition(16)
+    // The dim side must be PATTERN-PURE: OptimizeSkewedJoin only
+    // matches SMJ(Sort(ShuffleStage), Sort(ShuffleStage)), and a
+    // distinct/aggregate fused between the Sort and the stage blocks
+    // the rewrite (a real-world gotcha worth pinning: put the dim's
+    // dedup BEFORE its shuffle, or the skew split silently never
+    // happens). Enumerate the 3 hot keys on the driver — a dim-key
+    // enumeration, the shape a broadcast-ineligible keyed dim has.
+    import s.implicits._
+    val hotKeys = Tables.orders(s, d)
+      .select(hotOf(col("o_orderkey")).as("hot2"))
+      .distinct().collect().map(_.getLong(0)).sorted.toSeq
+    val dim = hotKeys.map(k => (k, k.toString)).toDF("hot2", "status")
+    // aggregate on status ALONE: hash(hot) would satisfy a grouping
+    // that includes hot, gluing the aggregate into the join stage and
+    // giving the skew split a downstream distribution to violate;
+    // grouping by the (join-key-independent, as far as Catalyst knows)
+    // status column puts a fresh exchange above the join, the shape a
+    // real skewed fact-dim join has
+    val out = fact.join(dim, col("hot") === col("hot2"))
+      .groupBy(col("status"))
+      .agg(count(lit(1)).as("n"),
+        Det.dsum(col("l_extendedprice")).as("sum_price"))
+      .orderBy(col("status"))
+    graft.Sessions.scoped(out,
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
@@ -675,45 +669,17 @@ object Joins {
         advisoryBytes.toString,
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> "8",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val fact = factBase
-        // AQE splits a skewed partition at MAPPER boundaries; the tiny
-        // fixture file scans as ONE map task, which is unsplittable by
-        // definition. Round-robin to 16 mappers first — the multi-mapper
-        // shuffle geometry any real cluster has.
-        .repartition(16)
-      // The dim side must be PATTERN-PURE: OptimizeSkewedJoin only
-      // matches SMJ(Sort(ShuffleStage), Sort(ShuffleStage)), and a
-      // distinct/aggregate fused between the Sort and the stage blocks
-      // the rewrite (a real-world gotcha worth pinning: put the dim's
-      // dedup BEFORE its shuffle, or the skew split silently never
-      // happens). Enumerate the 3 hot keys on the driver — a dim-key
-      // enumeration, the shape a broadcast-ineligible keyed dim has.
-      import s.implicits._
-      val hotKeys = Tables.orders(s, d)
-        .select(hotOf(col("o_orderkey")).as("hot2"))
-        .distinct().collect().map(_.getLong(0)).sorted.toSeq
-      val dim = hotKeys.map(k => (k, k.toString)).toDF("hot2", "status")
-      // aggregate on status ALONE: hash(hot) would satisfy a grouping
-      // that includes hot, gluing the aggregate into the join stage and
-      // giving the skew split a downstream distribution to violate;
-      // grouping by the (join-key-independent, as far as Catalyst knows)
-      // status column puts a fresh exchange above the join, the shape a
-      // real skewed fact-dim join has
-      val out = fact.join(dim, col("hot") === col("hot2"))
-        .groupBy(col("status"))
-        .agg(count(lit(1)).as("n"),
-          Det.dsum(col("l_extendedprice")).as("sum_price"))
-        .orderBy(col("status"))
-      val rows = out.collect() // the skew-aware execution happens HERE
-      val planStr = out.queryExecution.executedPlan match {
-        // unwrap: the adaptive root's toString prints only itself
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan.toString
-        case p => p.toString
-      }
-      (rows, planStr, out.schema)
-    }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+  }
+
+  /** [[skewAqeFrame]] executed: the 3 result rows, the executed plan
+    * string (carrying the skew markers for PlanSpec), and the schema. */
+  def skewAqeRun(s: org.apache.spark.sql.SparkSession, d: String)
+      : (Array[org.apache.spark.sql.Row], String,
+         org.apache.spark.sql.types.StructType) = {
+    val out = skewAqeFrame(s, d)
+    val rows = out.collect()
+    (rows, finalPlanString(out), out.schema)
   }
 
   private val skewAqe = Spec(
@@ -729,9 +695,7 @@ object Joins {
        |  ON hot = hot2
        |GROUP BY status
        |ORDER BY status""".stripMargin) { (s, d) =>
-    val (rows, _, schema) = skewAqeRun(s, d)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      .orderBy(col("status"))
+    skewAqeFrame(s, d)
   }
 
   private val salted = Spec(
@@ -1201,8 +1165,8 @@ object Joins {
         |FROM a GROUP BY n
         |ORDER BY agg, grp""".stripMargin)
     // count() would execute a DIFFERENT derived plan and leave out's
-    // own adaptive plan unfinalized (same trap skewAqeRun documents) —
-    // collect() executes THIS queryExecution.
+    // own adaptive plan unfinalized — collect() executes THIS
+    // queryExecution.
     val rows = out.collect()
     val ep = finalPlanString(out)
     // Non-adaptive plans print the reuse as a ReusedExchange node; the
@@ -1211,14 +1175,14 @@ object Joins {
     require(ep.contains("ReusedExchange") || reusedStageId(ep).nonEmpty,
       "exchange reuse did not fire — the shared per-customer aggregate " +
         "is being computed twice:\n" + ep.take(1500))
-    // Return the witnessed execution's own rows (the skewAqe idiom) —
-    // a plain `out` would re-execute the whole plan on the write.
+    // Return the witnessed execution's own rows — a plain `out` would
+    // re-execute the whole plan on the write.
     s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
       .orderBy(col("agg"), col("grp"))
   }
 
   /** The adaptive root's toString prints only itself — unwrap to the
-    * final physical tree (same idiom as [[skewAqeRun]]). */
+    * final physical tree. */
   private def finalPlanString(df: DataFrame): String =
     df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -1356,9 +1320,9 @@ object Joins {
     * selective nation filter last); the body proves causality in both
     * directions — without CBO the optimizer keeps the written order
     * (bottom join touches orders), with CBO + stats the bottom join
-    * pairs customer with the filtered nation and orders joins LAST —
-    * and returns the witnessed execution's own rows (the skewAqe
-    * idiom). Results are order-independent, which is exactly what the
+    * pairs customer with the filtered nation and orders joins LAST. The
+    * returned frame runs on the CBO clone, so it executes the witnessed
+    * plan. Results are order-independent, which is exactly what the
     * fixture-parquet oracle checks. */
   private val cboReorder = Spec(
     "opt_cbo_reorder",
@@ -1386,18 +1350,14 @@ object Joins {
     // witness below vacuous.
     require(bottomJoinString(s.sql(q)).contains(tOrders),
       "control failed: written-order plan no longer starts from orders")
-    withConfs(s,
+    val out = graft.Sessions.scoped(s.sql(q),
       "spark.sql.cbo.enabled" -> "true",
       "spark.sql.cbo.joinReorder.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val out = s.sql(q)
-      val bottom = bottomJoinString(out)
-      require(bottom.contains(tNation) && !bottom.contains(tOrders),
-        "CBO join reorder did not fire — the selective dim still joins " +
-          s"last:\n${bottom.take(1500)}")
-      val rows = out.collect() // execute THIS queryExecution in scope
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        .orderBy(col("n_name"))
-    }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val bottom = bottomJoinString(out)
+    require(bottom.contains(tNation) && !bottom.contains(tOrders),
+      "CBO join reorder did not fire — the selective dim still joins " +
+        s"last:\n${bottom.take(1500)}")
+    out
   }
 }

@@ -430,7 +430,8 @@ object LlmText {
     * unchanged) and capped at 1024 (task-launch overhead bound). At
     * 100 TB this is the standard practice the row models: shuffle
     * width follows input volume, not a global constant. */
-  private def substrateShuffleWidth(s: SparkSession, d: String): Int = {
+  private[graft] def substrateShuffleWidth(s: SparkSession,
+      d: String): Int = {
     val base = s.conf.get("spark.sql.shuffle.partitions").toInt
     val bytes = pathBytes(new java.io.File(
       java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString,
@@ -438,26 +439,22 @@ object LlmText {
     math.max(base, math.min(1024, (bytes / (64L << 10)).toInt))
   }
 
+  /** The build runs on a clone at [[substrateShuffleWidth]]; the frame it
+    * returns (and memoizes) is bound to `s`, so consumers plan at the
+    * session width and read the cache. When the build ran WIDER than
+    * the session, the tiny filtered pair set is repartitioned back down
+    * before persisting: the cached representation's partition count is
+    * what every steady consumer pays per scan (measured: a 291-partition
+    * cache at the 32× probe scale turned the 0.15 s steady read into
+    * 1.6 s of task-launch overhead), while the extra shuffle moves only
+    * the near-dup pairs — kilobytes. At equal widths the exchange is
+    * skipped, so fixture-scale plans stay byte-identical. */
   private def computeNgramPairs(s: SparkSession, d: String,
       maxDf: Int): DataFrame = {
     val base = s.conf.get("spark.sql.shuffle.partitions").toInt
     val width = substrateShuffleWidth(s, d)
-    Joins.withConfs(s, "spark.sql.shuffle.partitions" -> width.toString) {
-      computeNgramPairsScoped(s, d, maxDf, cacheWidth =
-        if (width == base) 0 else base)
-    }
-  }
-
-  /** `cacheWidth` > 0 ⇒ the build ran WIDER than the session default and
-    * the tiny filtered pair set must be repartitioned back down before
-    * persisting: the cached representation's partition count is what
-    * every steady consumer pays per scan (measured: a 291-partition
-    * cache at the 32× probe scale turned the 0.15 s steady read into
-    * 1.6 s of task-launch overhead), while the extra shuffle moves only
-    * the near-dup pairs — kilobytes. 0 ⇒ build width == session width,
-    * skip the exchange so fixture-scale plans stay byte-identical. */
-  private def computeNgramPairsScoped(s: SparkSession, d: String,
-      maxDf: Int, cacheWidth: Int): DataFrame = {
+    val onBuildWidth = (df: DataFrame) => graft.Sessions.scoped(df,
+      "spark.sql.shuffle.partitions" -> width.toString)
     // The postings index feeds three consumers below (sizes, the df cap,
     // and both sides of the self-join); persist it for the computation and
     // release it once the memoized pairs are materialized.
@@ -497,9 +494,8 @@ object LlmText {
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_a"),
         col("n_b"), col("jaccard"))
-    val pairs =
-      (if (cacheWidth > 0) filtered.repartition(cacheWidth) else filtered)
-        .persist()
+    val pairs = if (width == base) filtered else filtered.repartition(base)
+    val built = onBuildWidth(pairs).persist()
     val t0 = System.nanoTime()
     // Materialize the pairs eagerly, then drop the (large) index. Since
     // round 8 the bench PRE-PAYS this cost (Bench times the forcing
@@ -525,10 +521,10 @@ object LlmText {
     val dropped = Overlap.overlapped(2) { implicit ec =>
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
-      val pairsF = Future(pairs.count())
-      val diagF = Future(dfAgg.filter(col("df") > maxDf)
+      val pairsF = Future(built.count())
+      val diagF = Future(onBuildWidth(dfAgg.filter(col("df") > maxDf)
         .agg(coalesce(sum(col("df")), lit(0L)).as("postings"),
-          count(lit(1)).as("shingles")).first())
+          count(lit(1)).as("shingles"))).first())
       Await.result(pairsF, Duration.Inf)
       Await.result(diagF, Duration.Inf)
     }

@@ -958,7 +958,7 @@ object Scans {
     // need nowhere near 32 state files per commit, and the batch reads
     // take their layout from the checkpoint itself — same rows, 32× less
     // state I/O.
-    val s2 = fewPartitionSession(s, 1)
+    val s2 = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "1")
     val stream = s2.readStream
       .schema(StructType(Seq(StructField("v", LongType)))).parquet(src)
       .withColumn("k", col("v") % 7)
@@ -1032,7 +1032,7 @@ object Scans {
     }, "graft-socket-warm")
     feeder.setDaemon(true)
     feeder.start()
-    val s2 = fewPartitionSession(s, 1)
+    val s2 = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "1")
     val words = s2.readStream.format("socket")
       .option("host", server.getInetAddress.getHostAddress)
       .option("port", server.getLocalPort.toString)
@@ -1244,21 +1244,6 @@ object Scans {
     require(n >= target, s"$what drained only $n of $target${diag()}")
   }
 
-  /** Session clone with few shuffle partitions for the tiny streaming
-    * demos (VERDICT r9 #1): a complete-mode aggregate over a few hundred
-    * rows commits one state file per shuffle partition per micro-batch, so
-    * the parent session's 32 partitions are pure fixed I/O overhead here.
-    * `newSession` shares the SparkContext but gets its own SQLConf and
-    * catalog — the demo's state layout shrinks without touching any other
-    * query (and the statestore batch read takes its partitioning from the
-    * checkpoint itself, so results stay partition-count-independent). */
-  private[graft] def fewPartitionSession(s: org.apache.spark.sql.SparkSession,
-      partitions: Int): org.apache.spark.sql.SparkSession = {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    s2
-  }
-
   private val sourceStreamRate = Spec(
     "source_stream_rate",
     """SELECT CAST(i % 10 AS BIGINT) AS bucket, COUNT(*) AS n,
@@ -1354,7 +1339,7 @@ object Scans {
     // One-shuffle-partition session clone (VERDICT r9 #1): the
     // complete-mode aggregate commits per-shuffle-partition state every
     // micro-batch, and a 5-key word count needs exactly one.
-    val s2 = fewPartitionSession(s, 1)
+    val s2 = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "1")
     val words = s2.readStream.format("socket")
       .option("host", server.getInetAddress.getHostAddress)
       .option("port", server.getLocalPort.toString)

@@ -94,7 +94,7 @@ object StreamingOps {
       |  (SELECT COUNT(DISTINCT user_id) FROM e)
       |ORDER BY batch_id""".stripMargin) { (s, d) =>
     val inDir = updInput(s, d)
-    val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
+    val s2 = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "4")
     val name = "graft_progress_" + graft.sources.SessionMemo.pathKey(d)
     val q = runToEnd("progress query", s2.readStream.schema(updSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
@@ -139,7 +139,7 @@ object StreamingOps {
       |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
     import graft.operators.Scans
     val inDir = updInput(s, d)
-    val s2 = Scans.fewPartitionSession(s, 4)
+    val s2 = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "4")
     val out = Scans.scratch(s, "fbu_state", d)
     Scans.rmRecursive(new java.io.File(out))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
@@ -725,21 +725,23 @@ object StreamingOps {
     }
   }
 
-  /** 4-partition session clone with the RocksDB state-store provider
-    * and changelog checkpointing — the production provider at 100 TB of
-    * state (it spills to local disk), and the one transformWithState
-    * mandates. Scoped to a clone so the conf cannot leak into sibling
-    * queries and needs no restore on exit. */
-  private def rocksDbSession(s: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.SparkSession = {
-    val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    s2.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled", "true")
-    s2
-  }
+  /** The confs of the RocksDB-backed streaming queries' clones: 4
+    * shuffle partitions, and the RocksDB state-store provider with
+    * changelog checkpointing — the production provider at 100 TB of state
+    * (it spills to local disk), and the one transformWithState
+    * mandates. */
+  private val rocksDb = Seq(
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.streaming.stateStore.providerClass" -> ("org.apache.spark." +
+      "sql.execution.streaming.state.RocksDBStateStoreProvider"),
+    "spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled" -> "true")
+
+  /** Pinned where a query's output depends on the trailing no-data
+    * micro-batch (default true; pinned so a cluster-level override cannot
+    * silently change the result). */
+  private val noDataBatches =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "true"
 
   private val sjIn = graft.operators.Scans.stampedMemo()
 
@@ -849,8 +851,7 @@ object StreamingOps {
     * outer tail (see [[sjInput]]); one op is [[sjChunks]] data batches
     * plus that one. The session clone pins the state layout: 4 shuffle
     * partitions (the parent's 32 would be pure fixed I/O at fixture
-    * scale — the [[graft.operators.Scans.fewPartitionSession]]
-    * rationale; results are partition-count independent, part of the
+    * scale; results are partition-count independent, part of the
     * registry contract), the RocksDB provider with changelog
     * checkpointing (state spills to local disk — the 100 TB provider),
     * and join state format 3, which keeps both sides' rows and match
@@ -861,11 +862,10 @@ object StreamingOps {
   private[graft] def fileStreamJoin(s: org.apache.spark.sql.SparkSession,
       d: String, joinType: String): DataFrame = {
     val inDir = sjInput(s, d)
-    val s2 = rocksDbSession(s)
     // the sentinel only advances the watermark past the tail after its
     // batch; the trailing no-data micro-batch is what evicts and flushes
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    s2.conf.set("spark.sql.streaming.join.stateFormatVersion", "3")
+    val s2 = graft.Sessions.scoped(s, rocksDb ++ Seq(noDataBatches,
+      "spark.sql.streaming.join.stateFormatVersion" -> "3"): _*)
     val raw = s2.readStream.schema(sjSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
     val clicks = raw.filter(col("event_type") === "click")
@@ -978,7 +978,7 @@ object StreamingOps {
   private[graft] def updateModeLedger(s: org.apache.spark.sql.SparkSession,
       inDir: String, base: String): DataFrame = {
     val chk = s"$base/chk"; val outDir = s"$base/out"
-    val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
+    val s2 = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "4")
     runToEnd("update-mode query", s2.readStream.schema(updSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
       .groupBy(col("user_id")).count()
@@ -1013,7 +1013,7 @@ object StreamingOps {
     val chk = s"$base/chk"; val outDir = s"$base/out"
     val inDir = twsInput(s, d)
     // TWS mandates RocksDB
-    val s2 = rocksDbSession(s)
+    val s2 = graft.Sessions.scoped(s, rocksDb: _*)
     import s2.implicits._
     runToEnd("transformWithState query", s2.readStream.schema(twsSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
@@ -1127,12 +1127,9 @@ object StreamingOps {
     // input staging pre-paid in bench's materialize_layout. A 2-partition
     // clone measured no faster than the family's 4 (the cycle cost is
     // batch lifecycle, not per-partition stores), so 4 is kept.
-    val s2 = rocksDbSession(s)
     // the sentinel advances the watermark; the timers FIRE in the
-    // trailing no-data batch — pin the conf that guarantees it runs
-    // (default true; pinned so a cluster-level override cannot silently
-    // empty this query's output)
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    // trailing no-data batch
+    val s2 = graft.Sessions.scoped(s, rocksDb :+ noDataBatches: _*)
     import s2.implicits._
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("ts", TimestampType)))
@@ -1171,7 +1168,7 @@ object StreamingOps {
     graft.operators.Scans.rmRecursive(new java.io.File(base)) // idempotent
     val chk = s"$base/chk"; val outDir = s"$base/out"
     val inDir = twsInput(s, d)
-    val s2 = rocksDbSession(s)
+    val s2 = graft.Sessions.scoped(s, rocksDb: _*)
     import s2.implicits._
     runToEnd("stream_tws_mapstate query", s2.readStream.schema(twsSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)

@@ -26,8 +26,16 @@ class QueriesSmokeSpec extends AnyFunSuite {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name executes on sf0.001") {
+      val confs = spark.conf.getAll
       val n = fn(spark, SF001).count()
       assert(n >= 0)
+      // A row's own confs belong on a Sessions.scoped clone. The one
+      // exception: the events readers set nanosAsLong on the caller's
+      // session, because the parquet scan reads it from the session that
+      // built the relation when the scan executes.
+      val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+      assert(spark.conf.getAll - nanos == confs - nanos,
+        s"$name changed the shared session's confs")
     }
   }
 }
