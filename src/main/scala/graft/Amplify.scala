@@ -37,9 +37,9 @@ import org.apache.spark.sql.functions._
   * (tools/scale_probe.py measures per-row wall-time slopes across
   * 1× → 8× → 32×), not a correctness check; correctness is the driver's
   * sf0.01 gate. Timestamps are written back with their stored physical
-  * type untouched (events.ts stays TIMESTAMP_NTZ µs, so
-  * Tables.normalizeTs and the streaming schema pins behave identically
-  * on amplified dirs). */
+  * type untouched (events.ts stays TIMESTAMP_NTZ µs, so Tables.events
+  * and every staging written through it behave identically on
+  * amplified dirs). */
 object Amplify {
 
   /** One stride for every BIGINT key column: far above any fixture key
@@ -124,10 +124,10 @@ object Amplify {
         .reduce(_ unionAll _)
       if (name == "events") {
         // events must land as a single FILE, like the driver fixture:
-        // the streaming file source's listing can't see a Spark-written
-        // events.parquet/ DIRECTORY (TESTDATA gotcha), and the
-        // streaming rows are probe targets too. coalesce(1) then lift
-        // the lone part file out of the directory.
+        // the stream-join staging keys its shared dir by that file's
+        // mtime and size (StreamingOps.sjInput), and the streaming rows
+        // are probe targets too. coalesce(1) then lift the lone part
+        // file out of the directory.
         val tmp = s"$outDir/_events_tmp"
         out.coalesce(1).write.mode("overwrite").parquet(tmp)
         val part = new java.io.File(tmp).listFiles()

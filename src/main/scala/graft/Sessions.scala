@@ -16,15 +16,24 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 
+  /** One clone per (caller session, exact conf list). A clone's first
+    * streaming query adds its query manager's listener bus to the
+    * SparkContext for good, so a clone per run would pin every earlier
+    * clone and its memory sinks. The entry is keyed by no sfDir: one
+    * clone serves them all. */
+  private val clones = new graft.sources.SessionMemo[SparkSession]()
+
   /** A clone of `s` with `confs` set. It shares `s`'s SparkContext, cache
     * and catalog but owns its SQLConf, which starts from the SparkConf:
     * runtime sets on `s` do not carry over, and nothing set here is seen
-    * by `s` or by any concurrent query. */
-  def scoped(s: SparkSession, confs: (String, String)*): SparkSession = {
-    val s2 = s.newSession()
-    confs.foreach { case (k, v) => s2.conf.set(k, v) }
-    s2
-  }
+    * by `s` or by any concurrent query. Every call with the same `s` and
+    * `confs` returns the same clone, so no caller may set a conf on it. */
+  def scoped(s: SparkSession, confs: (String, String)*): SparkSession =
+    clones(s, "", confs.mkString(",")) {
+      val s2 = s.newSession()
+      confs.foreach { case (k, v) => s2.conf.set(k, v) }
+      s2
+    }
 
   /** `df`'s plan run on a [[scoped]] clone of its session: it is
     * optimized, planned and executed under `confs`, while its relations

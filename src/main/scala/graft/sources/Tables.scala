@@ -24,8 +24,8 @@ object Tables {
 
   /** First-seen (mtime, length) per (session, fixture file). A fixture
     * regenerated in place MID-session would leave every memoized
-    * relation and the streaming schema pin ([[eventsRawTsType]]) stale;
-    * the next [[load]]/[[eventsRaw]] instead fails here with one error
+    * relation stale; the next [[load]]/[[eventsRaw]] instead fails here
+    * with one error
     * naming the file. Length is recorded as well as mtime because
     * `cp -p`, `rsync -t` and coarse timestamps can preserve mtime across
     * a rewrite; a same-length, same-mtime rewrite still passes
@@ -75,14 +75,6 @@ object Tables {
       s.read.parquet(s"$d/events.parquet"))
   }
 
-  /** The `ts` type as stored in the fixture file (LongType for the legacy
-    * ns generation under the nanosAsLong conf, TimestampNTZType for the
-    * current µs generation) — the streaming file source pins its schema to
-    * this, since a streaming schema pin must match the file exactly. */
-  def eventsRawTsType(s: SparkSession, d: String):
-      org.apache.spark.sql.types.DataType =
-    eventsRaw(s, d).schema("ts").dataType
-
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = load(s, d, "customer")
@@ -103,13 +95,10 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame =
     normalizeTs(eventsRaw(s, d))
 
-  /** The generation-normalization itself, factored out so the streaming
-    * file source (Scans.eventsFileStream, which pins its schema to the
-    * RAW stored type) applies the IDENTICAL transform and a streaming
-    * consumer that projects `ts` sees the same values as the batch path
-    * — works unchanged on batch and streaming relations
-    * (pure column expressions, no actions). */
-  private[graft] def normalizeTs(raw: DataFrame): DataFrame = {
+  /** The generation-normalization of [[events]]. The streaming rows read
+    * `ts` from a staging written through [[events]]
+    * (`StreamingOps.eventsInput`), so this is its only use. */
+  private def normalizeTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     raw.schema("ts").dataType match {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode,
   StreamingQuery, TimeMode, Trigger}
@@ -47,9 +47,9 @@ object StreamingOps {
     * trailing no-data batch a moved watermark asks for, and then stops
     * itself. The wait is bounded: a wedged query fails its row with a
     * message naming `what` instead of hanging the run. `stop()` runs in
-    * `finally`, so no exit path leaves a query live holding its state
-    * stores while a later run deletes its checkpoint (a no-op once the
-    * query terminated). A failed query's own exception propagates from
+    * `finally` ([[stop]]), so no exit path leaves a query live holding its
+    * state stores while a later run deletes its checkpoint (a no-op once
+    * the query terminated). A failed query's own exception propagates from
     * `awaitTermination` unchanged. Returns the terminated query, whose
     * `recentProgress` stays readable. `start` is `_.toTable(t)` for a
     * catalog sink. */
@@ -59,8 +59,16 @@ object StreamingOps {
     val q = start(writer.trigger(Trigger.AvailableNow()))
     try require(q.awaitTermination(runBound.toMillis),
       s"$what did not finish in ${runBound.toSeconds} s")
-    finally q.stop()
+    finally stop(q)
     q
+  }
+
+  /** Stops `q` and drops the listener its run's session copy left on the
+    * context's bus ([[org.apache.spark.sql.graft.RunSessionRelease]]),
+    * so a re-run pins nothing. */
+  private[graft] def stop(q: StreamingQuery): Unit = {
+    q.stop()
+    org.apache.spark.sql.graft.RunSessionRelease(q)
   }
 
   /** A `foreachBatch` sink that appends each micro-batch, tagged with its
@@ -75,13 +83,12 @@ object StreamingOps {
     * numOutputRows) that a 100 TB streaming deployment alarms on: input
     * starvation, sink fan-out explosions, and batch skew all show up
     * here before they show up in lag. Deterministic because the input is
-    * the memoized parity staging ([[updInput]]: one file per parity,
-    * admission-ordered, maxFilesPerTrigger=1 ⇒ exactly two data
-    * batches): batch 0 ingests the even-µs rows, batch 1 the odd-µs
-    * rows, and the complete-mode sink emits the cumulative distinct-user
-    * table each batch. The oracle recomputes all four numbers from
-    * `events` directly; trailing no-data batches are filtered by
-    * numInputRows > 0. */
+    * the memoized parity staging ([[eventsInput]] read by
+    * [[parityStream]] ⇒ exactly two data batches): batch 0 ingests the
+    * even-µs rows, batch 1 the odd-µs rows, and the complete-mode sink
+    * emits the cumulative distinct-user table each batch. The oracle
+    * recomputes all four numbers from `events` directly; trailing no-data
+    * batches are filtered by numInputRows > 0. */
   private val profileStreamProgress = Spec(
     "profile_stream_progress",
     """WITH e AS (SELECT user_id, epoch_us(ts) AS es FROM events)
@@ -93,11 +100,11 @@ object StreamingOps {
       |  (SELECT COUNT(*) FROM e WHERE es % 2 = 1),
       |  (SELECT COUNT(DISTINCT user_id) FROM e)
       |ORDER BY batch_id""".stripMargin) { (s, d) =>
-    val inDir = updInput(s, d)
+    val inDir = eventsInput(s, d)
     val s2 = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "4")
     val name = "graft_progress_" + graft.sources.SessionMemo.pathKey(d)
-    val q = runToEnd("progress query", s2.readStream.schema(updSchema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
+    val q = runToEnd("progress query",
+      parityStream(s2, inDir, "user_id", "es")
       .groupBy(col("user_id")).count()
       .writeStream.format("memory").queryName(name)
       .outputMode("complete"))
@@ -117,7 +124,7 @@ object StreamingOps {
     * landed table always holds ONE row per key with (max event time,
     * running count) — state the APPEND-mode file sink structurally
     * cannot express (it can never retract a key's previous row). The
-    * two-batch parity staging ([[updInput]], maxFilesPerTrigger=1) makes
+    * two-batch parity staging ([[eventsInput]], [[parityStream]]) makes
     * the merge observable: batch 1 must REPLACE batch-0 rows for users
     * spanning the parity split, and a `require` pins ≥2 data batches so
     * the row can never silently degrade to a single-batch write.
@@ -138,15 +145,14 @@ object StreamingOps {
       |  CAST(COUNT(*) AS BIGINT) AS n_events
       |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
     import graft.operators.Scans
-    val inDir = updInput(s, d)
+    val inDir = eventsInput(s, d)
     val s2 = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "4")
     val out = Scans.scratch(s, "fbu_state", d)
     Scans.rmRecursive(new java.io.File(out))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     val base = s"$out/state"
     val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-    runToEnd("upsert stream", s2.readStream.schema(updSchema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
+    runToEnd("upsert stream", parityStream(s2, inDir, "user_id", "es")
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (upsertMergeBatch(out, batch, id)) nBatches.incrementAndGet()
@@ -170,7 +176,7 @@ object StreamingOps {
     val base = s"$out/state"
     val baseF = new java.io.File(base)
     val tmpF = new java.io.File(s"$out/tmp_$id")
-    // Sweep retired-state orphans FIRST (ADVICE r15 #1): a crash between
+    // Sweep retired-state orphans FIRST: a crash between
     // the two renames below (or after the swap, before rmRecursive)
     // leaves an old_<id> copy of the pre-merge base on disk — without
     // this sweep each such crash permanently leaks one full state copy.
@@ -182,7 +188,7 @@ object StreamingOps {
       .getOrElse(Array.empty[java.io.File])
       .filter(f => f.isDirectory && f.getName.startsWith("old_"))
       .foreach(Scans.rmRecursive)
-    // The batch-id ledger lives INSIDE the state dir (ADVICE r14 #2):
+    // The batch-id ledger lives INSIDE the state dir:
     // the `_done_<id>` markers are staged into tmp alongside the merged
     // parquet, so the single rename below publishes state + ledger
     // atomically — there is no window where swapped-but-unmarked state
@@ -325,7 +331,7 @@ object StreamingOps {
     * propagated across the join (Spark derives the join output's event
     * time from c.ts minus the interval allowance) gating both eviction
     * AND window emission. This is the first thing a real pipeline does
-    * after joining clicks⋈views (VERDICT r5 gap #1) and it is NOT
+    * after joining clicks⋈views, and it is NOT
     * implied by testing the stages separately: the failure mode it
     * pins is watermark mis-propagation, where the downstream agg either
     * never fires or drops rows the join legitimately emitted.
@@ -611,82 +617,13 @@ object StreamingOps {
     halfHourAgg(Tables.events(s, d)).orderBy(col("ws_us"), col("event_type"))
   }
 
-  /** The funnel on Spark 4's `transformWithState` — the successor
-    * stateful-streaming API to `stream_stateful_custom`'s
-    * flatMapGroupsWithState, run HERE as a real
-    * streaming query end-to-end: the fixture events land as TWO parquet
-    * files, the file source admits them one per micro-batch
-    * (maxFilesPerTrigger=1 under [[runToEnd]]), so a user whose
-    * events span the file boundary only produces the correct final row
-    * if [[FunnelProcessor]]'s ValueState genuinely carried across
-    * batches. TWS mandates the RocksDB state-store provider (the
-    * HDFS-backed default is rejected at query start —
-    * TransformWithStateSpec pins that rejection), so the provider +
-    * changelog-checkpointing confs are pinned on a session CLONE scoped
-    * to this query. Update-mode emissions are captured per batch via
-    * foreachBatch with the batch id; the registered result is the LAST
-    * emission per user — the final funnel state — which the batch-twin
-    * oracle recomputes declaratively. Event-order note: [[Funnel.update]]
-    * is arrival-order-insensitive (min/max/count aggregates and a
-    * min-purchase-filtered click set), so batch boundaries never change
-    * the final row.
-    *
-    * Cost shape (first sf0.1 sample 7.6 s, retune target ≤ ~1.5 s): the
-    * two-file input staging is the query's PRECONDITION, not its
-    * demonstration — memoized per (session, sfDir) in [[twsInput]] —
-    * and the streaming query runs in a 4-shuffle-partition session clone
-    * (~1.5k funnel keys need nowhere near 32 RocksDB store instances
-    * per micro-batch; the clone also scopes the mandatory provider
-    * confs with no restore-on-exit hazard). Results stay
-    * partition-count-independent — the CPUS=4/7/8/32 sweeps pin that. */
-  /** Memoized two-file input staging for `stream_transform_with_state`:
-    * the events projection split on event-time parity into exactly two
-    * one-file parquet halves, so spanning users exist and
-    * maxFilesPerTrigger=1 yields exactly two micro-batches. A
-    * [[graft.operators.Scans.stampedMemo]]: both halves must be present
-    * AND whole, or the memo rebuilds. */
-  private val twsIn = graft.operators.Scans.stampedMemo()
-
-  /** Column layout of the [[twsInput]] staging. */
-  private val twsSchema = StructType(Seq(StructField("user_id", LongType),
-    StructField("event_type", StringType), StructField("es", LongType)))
-
-  private[graft] def twsInput(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    import graft.operators.Scans
-    twsIn(s, d) {
-      val inDir = Scans.scratch(s, "tws_in", d)
-      Scans.rmRecursive(new java.io.File(inDir))
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), col("event_type"),
-          unix_micros(col("ts")).as("es"))
-      // two one-file halves split on event-time parity: both halves stay
-      // dense and any user with events of both µs-parities spans the
-      // micro-batch boundary, which is what makes cross-batch ValueState
-      // carriage observable in the final output.
-      ev.filter(pmod(col("es"), lit(2)) === 0).coalesce(1)
-        .write.mode("append").parquet(inDir)
-      ev.filter(pmod(col("es"), lit(2)) === 1).coalesce(1)
-        .write.mode("append").parquet(inDir)
-      Scans.stampExpected(inDir)
-      inDir
-    }
-  }
-
-  /** Memoized two-file staging for `stream_update_mode`: the (user_id,
-    * es) projection split on µs parity — same split rule as [[twsInput]]
-    * so spanning users exist — but with ADMISSION-ORDER MTIMES stamped
-    * (the [[twsTimerInput]] discipline): unlike the funnel, whose final
-    * row is batch-order-insensitive, update-mode EMISSION SETS are
-    * defined per batch, so "even half is micro-batch 0" must be pinned,
-    * not assumed from write latency. Own layout rather than mutating
-    * twsInput's shared files: stamping mtimes on a layout other rows
-    * read would couple the rows through the filesystem. */
   /** Shared staged-layout writer for the admission-order stagings
-    * ([[twsTimerInput]], [[updInput]], [[sjInput]]): each piece lands as ONE parquet file, stamped with strictly increasing
-    * mtimes 10 s apart in write order, so the file source's
-    * oldest-first admission under maxFilesPerTrigger=1 replays the
-    * pieces as micro-batches in exactly this order. */
+    * ([[eventsInput]], [[twsTimerInput]], [[sjInput]]): each piece lands
+    * as ONE parquet file, stamped with strictly increasing mtimes 10 s
+    * apart in write order, so the file source's oldest-first admission
+    * under maxFilesPerTrigger=1 replays the pieces as micro-batches in
+    * exactly this order. The `_graft_expected` stamp goes last, so a
+    * stamped memo serves the layout only while every piece is whole. */
   private def writeStampedPieces(inDir: String, pieces: Seq[DataFrame])
       : Unit = {
     var seen = Set.empty[String]
@@ -701,29 +638,56 @@ object StreamingOps {
       }
       seen = files.map(_.getName).toSet
     }
+    graft.operators.Scans.stampExpected(inDir)
   }
 
-  private val updIn = graft.operators.Scans.stampedMemo()
+  private val eventsIn = graft.operators.Scans.stampedMemo()
 
-  /** Column layout of the [[updInput]] staging. */
-  private val updSchema = StructType(Seq(StructField("user_id", LongType),
-    StructField("es", LongType)))
+  /** Column layout of the [[eventsInput]] staging. A reader pins the
+    * subset it needs; parquet resolves the columns by name. */
+  private val eventsSchema = StructType(Seq(
+    StructField("event_id", LongType), StructField("user_id", LongType),
+    StructField("event_type", StringType), StructField("ts", TimestampType),
+    StructField("es", LongType), StructField("value", DoubleType)))
 
-  private[graft] def updInput(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
+  /** The memoized events staging every file-source row reads, except the
+    * stream-stream join ([[sjInput]]) and the timer row
+    * ([[twsTimerInput]]). It holds (event_id, user_id, event_type, ts,
+    * es, value), with `ts` already `Tables.events`' normalized TIMESTAMP
+    * µs and `es` its epoch µs, as two one-file halves split on µs parity,
+    * the even half admitted first. Both halves stay dense, and every user
+    * with events of both parities spans the batch boundary: the parity
+    * rows ([[parityStream]]) only get their final state right if it was
+    * carried across batches, and their per-batch emission sets rest on
+    * "the even half is batch 0", which the admission-order mtimes pin
+    * instead of leaving it to write latency. */
+  private[graft] def eventsInput(s: SparkSession, d: String): String = {
     import graft.operators.Scans
-    updIn(s, d) {
-      val inDir = Scans.scratch(s, "upd_in", d)
+    eventsIn(s, d) {
+      val inDir = Scans.scratch(s, "events_in", d)
       Scans.rmRecursive(new java.io.File(inDir))
       val ev = Tables.events(s, d)
-        .select(col("user_id"), unix_micros(col("ts")).as("es"))
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("ts"), unix_micros(col("ts")).as("es"), col("value"))
       writeStampedPieces(inDir, Seq(
         ev.filter(pmod(col("es"), lit(2)) === 0),
         ev.filter(pmod(col("es"), lit(2)) === 1)))
-      Scans.stampExpected(inDir)
       inDir
     }
   }
+
+  /** `cols` of an [[eventsInput]]-shaped staging at `inDir`, streamed on
+    * `s` one file per micro-batch: the even-µs half is data batch 0 and
+    * the odd half data batch 1. */
+  private def parityStream(s: SparkSession, inDir: String, cols: String*)
+      : DataFrame =
+    s.readStream.schema(StructType(cols.map(eventsSchema(_))))
+      .option("maxFilesPerTrigger", "1").parquet(inDir)
+
+  /** The whole [[eventsInput]] staging streamed on `s` with no per-trigger
+    * limit, so both halves arrive in one data batch. */
+  private[graft] def eventsStream(s: SparkSession, d: String): DataFrame =
+    s.readStream.schema(eventsSchema).parquet(eventsInput(s, d))
 
   /** The confs of the RocksDB-backed streaming queries' clones: 4
     * shuffle partitions, and the RocksDB state-store provider with
@@ -830,7 +794,6 @@ object StreamingOps {
         }
         writeStampedPieces(inDir,
           chunks.init :+ chunks.last.unionByName(sentinels))
-        Scans.stampExpected(inDir)
       }
     }
   }
@@ -965,7 +928,7 @@ object StreamingOps {
       |ORDER BY batch_id, user_id""".stripMargin) { (s, d) =>
     val base = graft.operators.Scans.scratch(s, "upd_mode", d)
     graft.operators.Scans.rmRecursive(new java.io.File(base))
-    updateModeLedger(s, updInput(s, d), base)
+    updateModeLedger(s, eventsInput(s, d), base)
   }
 
   /** The `stream_update_mode` streaming core, factored so
@@ -979,8 +942,7 @@ object StreamingOps {
       inDir: String, base: String): DataFrame = {
     val chk = s"$base/chk"; val outDir = s"$base/out"
     val s2 = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "4")
-    runToEnd("update-mode query", s2.readStream.schema(updSchema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
+    runToEnd("update-mode query", parityStream(s2, inDir, "user_id", "es")
       .groupBy(col("user_id")).count()
       .writeStream
       .option("checkpointLocation", chk)
@@ -991,6 +953,31 @@ object StreamingOps {
       .orderBy(col("batch_id"), col("user_id"))
   }
 
+  /** The funnel on Spark 4's `transformWithState` — the successor
+    * stateful-streaming API to `stream_stateful_custom`'s
+    * flatMapGroupsWithState, run HERE as a real streaming query
+    * end-to-end over the [[eventsInput]] parity staging, admitted one
+    * file per micro-batch ([[parityStream]]), so a user whose events
+    * span the file boundary only produces the correct final row if
+    * [[FunnelProcessor]]'s ValueState genuinely carried across batches.
+    * TWS mandates the RocksDB state-store provider (the HDFS-backed
+    * default is rejected at query start — TransformWithStateSpec pins
+    * that rejection), so the provider + changelog-checkpointing confs
+    * are pinned on a session CLONE scoped to this query. Update-mode
+    * emissions are captured per batch via foreachBatch with the batch
+    * id; the registered result is the LAST emission per user — the
+    * final funnel state — which the batch-twin oracle recomputes
+    * declaratively. Event-order note: [[Funnel.update]] is
+    * arrival-order-insensitive (min/max/count aggregates and a
+    * min-purchase-filtered click set), so batch boundaries never change
+    * the final row.
+    *
+    * Cost shape: the two-file input staging is the query's
+    * PRECONDITION, not its demonstration, so it is memoized and pre-paid
+    * by Bench; the streaming query runs in a 4-shuffle-partition clone
+    * (~1.5k funnel keys need nowhere near 32 RocksDB store instances per
+    * micro-batch). Results stay partition-count-independent — the
+    * CPUS=4/7/8/32 sweeps pin that. */
   private val transformWithState = Spec(
     "stream_transform_with_state",
     """WITH e AS (
@@ -1011,12 +998,12 @@ object StreamingOps {
     val base = graft.operators.Scans.scratch(s, "tws", d)
     graft.operators.Scans.rmRecursive(new java.io.File(base)) // idempotent
     val chk = s"$base/chk"; val outDir = s"$base/out"
-    val inDir = twsInput(s, d)
+    val inDir = eventsInput(s, d)
     // TWS mandates RocksDB
     val s2 = graft.Sessions.scoped(s, rocksDb: _*)
     import s2.implicits._
-    runToEnd("transformWithState query", s2.readStream.schema(twsSchema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
+    runToEnd("transformWithState query",
+      parityStream(s2, inDir, "user_id", "event_type", "es")
       .as[(Long, String, Long)]
       .groupByKey(_._1)
       .transformWithState(new FunnelProcessor, TimeMode.None(),
@@ -1056,7 +1043,7 @@ object StreamingOps {
     * would buy the same firing for one more RocksDB commit cycle
     * (~0.6 s/run measured); if the no-data batch were ever NOT run, the
     * output would miss every session and the oracle would fail loudly —
-    * nothing silent rests on it. A stamped memo like [[twsInput]]; the
+    * nothing silent rests on it. A stamped memo like [[eventsInput]]; the
     * stamp covers all three files. */
   private val twsTimerIn = graft.operators.Scans.stampedMemo()
 
@@ -1078,7 +1065,6 @@ object StreamingOps {
         ev.filter(col("es") < cut).select(col("user_id"), col("ts")),
         ev.filter(col("es") >= cut).select(col("user_id"), col("ts")),
         sentinel(-1L, mx + 7200000000L)))
-      Scans.stampExpected(inDir)
       inDir
     }
   }
@@ -1152,8 +1138,8 @@ object StreamingOps {
 
   /** MapState on `transformWithState`: per-user
     * event-type counters held in one RocksDB map per key and updated in
-    * place across micro-batches — see [[TypeCountsProcessor]]. Reuses the
-    * [[twsInput]] parity staging (one file per micro-batch), so final
+    * place across micro-batches — see [[TypeCountsProcessor]]. Reads the
+    * [[eventsInput]] parity staging (one file per micro-batch), so final
     * counts are only right if the map carried across the batch boundary;
     * update-mode emissions are captured per batch via foreachBatch and
     * the last emission per (user, type) — the final counter value — is
@@ -1167,11 +1153,11 @@ object StreamingOps {
     val base = graft.operators.Scans.scratch(s, "tws_map", d)
     graft.operators.Scans.rmRecursive(new java.io.File(base)) // idempotent
     val chk = s"$base/chk"; val outDir = s"$base/out"
-    val inDir = twsInput(s, d)
+    val inDir = eventsInput(s, d)
     val s2 = graft.Sessions.scoped(s, rocksDb: _*)
     import s2.implicits._
-    runToEnd("stream_tws_mapstate query", s2.readStream.schema(twsSchema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
+    runToEnd("stream_tws_mapstate query",
+      parityStream(s2, inDir, "user_id", "event_type", "es")
       .as[(Long, String, Long)]
       .groupByKey(_._1)
       .transformWithState(new TypeCountsProcessor, TimeMode.None(),

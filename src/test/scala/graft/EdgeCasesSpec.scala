@@ -199,7 +199,7 @@ class EdgeCasesSpec extends AnyFunSuite {
     // nanosAsLong conf makes a true TIMESTAMP(NANOS) column read as
     // exactly that, and Spark cannot write TIMESTAMP(NANOS) itself.)
     import spark.implicits._
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
     val us = 1704067200123456L // 2024-01-01 00:00:00.123456 UTC
     val ns = us * 1000L + 789L // sub-µs tail the legacy path truncates away
     val dLegacy = java.nio.file.Files.createTempDirectory("graft_gen_ns").toString
@@ -242,17 +242,13 @@ class EdgeCasesSpec extends AnyFunSuite {
       assert(a == b, s"generations diverged: legacy=$a current=$b")
       assert(a.toInstant == java.time.Instant.ofEpochSecond(
         us / 1000000L, (us % 1000000L) * 1000L))
-      // the streaming file source derives its schema pin from the raw type…
-      assert(graft.sources.Tables.eventsRawTsType(spark, dLegacy) == LongType)
-      assert(graft.sources.Tables.eventsRawTsType(spark, dCurrent)
-        == TimestampNTZType)
-      // …and surfaces the NORMALIZED ts for both generations (ADVICE r10
-      // #3): a streaming consumer that projects ts now sees the
+      // The streaming file source surfaces the NORMALIZED ts for both
+      // generations: a streaming consumer that projects ts sees the
       // batch-identical session-local TIMESTAMP µs, never the raw
       // generation-dependent Long / TIMESTAMP_NTZ.
-      assert(graft.operators.Scans.eventsFileStream(spark, dLegacy)
+      assert(graft.streaming.StreamingOps.eventsStream(spark, dLegacy)
         .schema("ts").dataType == TimestampType)
-      assert(graft.operators.Scans.eventsFileStream(spark, dCurrent)
+      assert(graft.streaming.StreamingOps.eventsStream(spark, dCurrent)
         .schema("ts").dataType == TimestampType)
       // End-to-end through the registered consumer (source_stream_window,
       // the streaming query that PROJECTS ts): the event-time window
@@ -369,7 +365,7 @@ class EdgeCasesSpec extends AnyFunSuite {
       "sink_partitioned" -> "part_sink",
       "sink_stream_foreach" -> "foreach_sink",
       "sink_compacted" -> "compact_out", "zorder_layout" -> "zorder",
-      "source_stream_file" -> "stream_src",
+      "source_stream_file" -> "events_in",
       "stream_incremental_restart" -> "increstart",
       "stream_transform_with_state" -> "tws",
       "stream_tws_timers" -> "tws_timer",
@@ -423,30 +419,31 @@ class EdgeCasesSpec extends AnyFunSuite {
         s"test setup: nothing to partially delete under $dir")
       graft.operators.Scans.rmRecursive(victim.get)
     }
-    val cases: Seq[(String, String, java.io.File => Boolean)] = Seq(
+    val cases: Seq[(Seq[String], String, java.io.File => Boolean)] = Seq(
       // one of the 64 fragmented-events shards
-      ("sink_compacted", "compact_frag", _.getName.endsWith(".parquet")),
+      (Seq("sink_compacted"), "compact_frag", _.getName.endsWith(".parquet")),
       // one whole c_nationkey= partition directory
-      ("join_dpp", "dpp_customer", _.getName.startsWith("c_nationkey=")),
-      // one of the two parity-half input files
-      ("stream_transform_with_state", "tws_in",
-        _.getName.endsWith(".parquet")),
+      (Seq("join_dpp"), "dpp_customer", _.getName.startsWith("c_nationkey=")),
+      // one of the two parity halves of the events staging, read by a
+      // parity row, the update-mode ledger and a one-batch reader
+      (Seq("stream_transform_with_state", "stream_update_mode",
+        "source_stream_file"), "events_in", _.getName.endsWith(".parquet")),
       // one of the four chronological/sentinel files of the timer staging
-      ("stream_tws_timers", "tws_timer_in",
-        _.getName.endsWith(".parquet")),
-      // one of the two parity-half files of the update-mode staging
-      ("stream_update_mode", "upd_in", _.getName.endsWith(".parquet")))
-    cases.foreach { case (query, op, pick) =>
-      def rows(): Seq[String] =
+      (Seq("stream_tws_timers"), "tws_timer_in",
+        _.getName.endsWith(".parquet")))
+    cases.foreach { case (queries, op, pick) =>
+      def rows(query: String): Seq[String] =
         SparkEntry.queries(query)(spark, TestSpark.SF001)
           .collect().map(_.toString).sorted.toSeq
-      val first = rows()
+      val first = queries.map(rows)
       val dirs = layoutDirs(op)
       assert(dirs.nonEmpty, s"test setup: no $op layout dir found")
       dirs.foreach(deleteOne(_, pick))
-      assert(rows() == first,
-        s"$query served a TRUNCATED $op layout after a partial delete — " +
-          "the health check is not exact-count")
+      queries.zip(first).foreach { case (query, want) =>
+        assert(rows(query) == want,
+          s"$query served a TRUNCATED $op layout after a partial delete — " +
+            "the health check is not exact-count")
+      }
     }
     // join_bucketed's layout lives under one _bucketed_ root with a
     // subdirectory per table — delete one bucket FILE inside one table

@@ -30,7 +30,7 @@ class QueriesSmokeSpec extends AnyFunSuite {
       val n = fn(spark, SF001).count()
       assert(n >= 0)
       // A row's own confs belong on a Sessions.scoped clone. The one
-      // exception: the events readers set nanosAsLong on the caller's
+      // exception: Tables.eventsRaw sets nanosAsLong on the caller's
       // session, because the parquet scan reads it from the session that
       // built the relation when the scan executes.
       val nanos = "spark.sql.legacy.parquet.nanosAsLong"

@@ -1,23 +1,26 @@
 package graft
 
 import java.util.UUID
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, pmod, unix_micros}
 import org.apache.spark.sql.graft.ListenerBus
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.streaming.StreamingQueryListener.{
-  QueryStartedEvent, QueryTerminatedEvent}
+  QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingOps
 
 /** [[StreamingOps.runToEnd]], the one way a finite streaming query ends,
   * tested once at the abstraction; then the registry-wide check that no
-  * row leaves a streaming query running. */
+  * row leaves a streaming query running, or leaves a listener or a temp
+  * view behind when it runs again; then the one events staging the
+  * file-source rows share. */
 class StreamRunnerSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -87,13 +90,22 @@ class StreamRunnerSpec extends AnyFunSuite {
     "sink_stream_table", "source_stream_file", "source_stream_window",
     "sink_stream_foreach", "source_stream_socket")
 
+  /** Temp views of `s`: a memory sink registers one on the session that
+    * started its query. */
+  private def tempViews(s: SparkSession): Int =
+    s.catalog.listTables().collect().count(_.isTemporary)
+
   test("registry hygiene: every query a streaming row starts has " +
       "terminated when the row returns") {
     // Started/terminated run ids are read off the context's shared bus,
     // which also carries the queries of session clones. Each row runs in
     // a fresh session, so no memoized build (the statestore checkpoint
     // two rows share) is served from an earlier run: every row really
-    // starts a query.
+    // starts a query. A second run in that session must add no listener
+    // to the context bus (a new clone's query manager, or the session copy
+    // Spark runs a stateful query on, would) and no memory-sink view, on
+    // the session or on the 1-partition clone the socket row uses.
+    val sc = spark.sparkContext
     val started = ConcurrentHashMap.newKeySet[UUID]()
     val terminated = ConcurrentHashMap.newKeySet[UUID]()
     val listener = new SparkListener {
@@ -103,20 +115,89 @@ class StreamRunnerSpec extends AnyFunSuite {
         case _ =>
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    try streamingRows.foreach { row =>
-      val s = spark.newSession()
-      ListenerBus.drain(spark.sparkContext)
+    // a second run may serve a memoized build and start no query
+    def runOnce(row: String, s: SparkSession, first: Boolean): Unit = {
+      ListenerBus.drain(sc)
       val before = started.asScala.toSet
       assert(SparkEntry.queries(row)(s, SF001).count() > 0, s"$row is empty")
-      ListenerBus.drain(spark.sparkContext)
+      ListenerBus.drain(sc)
       val runs = started.asScala.toSet -- before
-      assert(runs.nonEmpty, s"$row started no streaming query")
+      assert(runs.nonEmpty || !first, s"$row started no streaming query")
       val live = runs.filterNot(terminated.contains)
       assert(live.isEmpty, s"$row left ${live.size} of ${runs.size} " +
         "streaming queries running")
       assert(s.streams.active.isEmpty, s"$row left queries active in its " +
         s"session: ${s.streams.active.map(_.name).toSeq}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    sc.addSparkListener(listener)
+    try streamingRows.foreach { row =>
+      val s = spark.newSession()
+      runOnce(row, s, first = true)
+      val oneWide = Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "1")
+      val views = (tempViews(s), tempViews(oneWide))
+      val listeners = ListenerBus.listeners(sc)
+      runOnce(row, s, first = false)
+      assert(ListenerBus.listeners(sc) == listeners,
+        s"$row's second run added ${ListenerBus.listeners(sc) - listeners} " +
+          "listener(s) to the context bus")
+      assert((tempViews(s), tempViews(oneWide)) == views,
+        s"$row's second run changed the (session, 1-partition clone) " +
+          s"temp-view counts from $views to " +
+          s"${(tempViews(s), tempViews(oneWide))}")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one events staging feeds the nine file-source rows: two data " +
+      "batches for the parity rows, one for the others") {
+    val parityRows = Seq("stream_transform_with_state",
+      "stream_tws_mapstate", "stream_update_mode", "profile_stream_progress",
+      "stream_foreachbatch_upsert")
+    val oneBatchRows = Seq("source_stream_file", "source_stream_window",
+      "sink_stream_foreach", "sink_stream_table")
+    val sc = spark.sparkContext
+    val s = spark.newSession()
+    val even = graft.sources.Tables.events(s, SF001)
+      .filter(pmod(unix_micros(col("ts")), lit(2)) === 0).count()
+    // progress events of every query, clones' included, from the
+    // context's bus
+    val progress = new ConcurrentLinkedQueue[QueryProgressEvent]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: QueryProgressEvent => progress.add(p); ()
+        case _ =>
+      }
+    }
+    /** `row`'s data batches' numInputRows, in batch order. */
+    def dataBatches(row: String): Seq[Long] = {
+      ListenerBus.drain(sc)
+      progress.clear()
+      assert(SparkEntry.queries(row)(s, SF001).count() > 0, s"$row is empty")
+      ListenerBus.drain(sc)
+      progress.asScala.toSeq.map(_.progress).filter(_.numInputRows > 0)
+        .sortBy(_.batchId).map(_.numInputRows)
+    }
+    def staged(): Map[String, Long] = {
+      val dir = new java.io.File(StreamingOps.eventsInput(s, SF001))
+      dir.listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getName -> f.lastModified).toMap
+    }
+    sc.addSparkListener(listener)
+    try {
+      val first = dataBatches(parityRows.head)
+      val layout = staged()
+      assert(layout.size == 2, s"the staging holds ${layout.size} files")
+      (first +: parityRows.tail.map(dataBatches)).zip(parityRows).foreach {
+        case (batches, row) =>
+          assert(batches.size == 2 && batches.head == even,
+            s"$row ran data batches $batches; want 2, the first with " +
+              s"the $even even-µs events")
+      }
+      oneBatchRows.foreach { row =>
+        val batches = dataBatches(row)
+        assert(batches.size == 1, s"$row ran data batches $batches; want 1")
+      }
+      assert(staged() == layout,
+        "a row rebuilt or replaced the shared events staging")
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -392,7 +392,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
   test("source_stream_window shape under RocksDB: parity + provider proof") {
     withRocksDb {
       val stream = graft.operators.Scans.twoHourWindowAgg(
-        graft.operators.Scans.eventsFileStream(spark, SF001))
+        graft.streaming.StreamingOps.eventsStream(spark, SF001))
       val name = s"graft_rocks_win_${System.nanoTime()}"
       val q = stream.writeStream.format("memory").queryName(name)
         .outputMode("complete").start()

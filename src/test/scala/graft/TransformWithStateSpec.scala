@@ -435,7 +435,7 @@ class TransformWithStateSpec extends AnyFunSuite {
     // MapState variant: final per-(user, type) counters from the
     // registered row must equal a plain batch GROUP BY — and some
     // (user, type) pair must have events of both µs-parities (the
-    // twsInput file split), so a correct final count proves the map
+    // eventsInput file split), so a correct final count proves the map
     // carried across the micro-batch boundary (counts are additive; a
     // reset-to-empty bug undercounts every spanning pair).
     import spark.implicits._

@@ -32,15 +32,16 @@ correctness check (the driver's sf0.01 gate is). Most streaming rows
 are micro-batch lifecycle floors, but the real-stream rows whose
 input mass scales ARE probed — the round-16 five (file-source window
 agg, TWS funnel, update-mode ledger, foreachBatch upsert, chained
-window aggs; graft.Amplify writes events as a single FILE so the
-streaming file source can list it) plus, round 17, the file-source
-stream-stream interval joins (source_stream_join / _outer, which
-re-chunk events into time-ordered micro-batches so watermark-driven
-state eviction actually runs), the remaining stateful rows, the
-TPC-H tail, the write paths, and a MEMORY/STATE axis: TimeQ now
-emits [timeqm] lines (per-task peak execution memory, spill bytes,
-streaming state rows/bytes high-water) and the report flags
-super-linear state growth that wall-time cannot see.
+window aggs; each reads events through a staging written from
+Tables.events, so no streaming schema pins the fixture file) plus,
+round 17, the file-source stream-stream interval joins
+(source_stream_join / _outer, which re-chunk events into time-ordered
+micro-batches so watermark-driven state eviction actually runs), the
+remaining stateful rows, the TPC-H tail, the write paths, and a
+MEMORY/STATE axis: TimeQ now emits [timeqm] lines (per-task peak
+execution memory, spill bytes, streaming state rows/bytes high-water)
+and the report flags super-linear state growth that wall-time cannot
+see.
 """
 import json, math, os, re, subprocess, sys
 
