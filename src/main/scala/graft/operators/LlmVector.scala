@@ -122,16 +122,10 @@ object LlmVector {
       .orderBy(col("probe_id"), col("rk"))
   }
 
-  /** Embedding-cosine near-duplicate pairs (score ≥ 0.99). Candidates come
-    * from the same hyperplane-LSH buckets as [[annLsh]]: each vector is
-    * bucketed once, one side multi-probes every bucket within hamming ≤ 2 of
-    * its own, and the pair meets on a bucket equi-join — work ∝ co-bucketed
-    * pairs, never all-pairs, and nothing is collected to the driver. The
-    * exact sequential-fold cosine then verifies each candidate. At cosine ≥
-    * 0.99 the angle is ~8°, so P(a pair lands > 2 sign-bits apart over 8
-    * hyperplanes) ≈ 1e-3 — recall indistinguishable from exact at fixture
-    * scale (oracle stays the brute-force SQL) and the property that makes it
-    * run at 100 TB. */
+  /** Embedding-cosine near-duplicate pairs (score ≥ 0.99): hyperplane-LSH
+    * block keys, then the exact sequential-fold cosine on each candidate
+    * ([[embedNearDupPairs]]). The oracle stays the brute-force SQL; the
+    * registered row runs the multiprobe scheme at every fixture sf. */
   private val dedupEmbed = Spec(
     "llm_dedup_embed",
     s"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -143,109 +137,93 @@ object LlmVector {
       Tables.embeddings(s, d).select(col("vec_id"), col("embedding")), 0.99)
   }
 
-  /** Reusable embedding near-dup pipeline (LSH-bucketed candidates + exact
-    * cosine verification) so tests can run it on synthetic borderline
-    * corpora.
+  /** Embedding near-dup pairs over (vec_id, embedding) rows, so tests can
+    * run it on synthetic borderline corpora. Parity with the brute-force
+    * oracle is probabilistic: a qualifying pair that shares no block is
+    * missed, with the per-pair probability each scheme logs.
     *
-    * INVARIANT (ADVICE r3/r4): oracle parity is probabilistic, not exact —
-    * a qualifying ≥threshold pair whose 8-plane sign buckets differ in MORE
-    * than the radius-4 multi-probe flips is silently missed. At cos ≥ 0.99
-    * the angle is ≤ 8.1°, so P[a single hyperplane separates the pair] ≤
-    * 8.1/180 ≈ 0.045 and P[>4 of 8 planes do] ≈ C(8,5)·0.045⁵ ≈ 1e-5 —
-    * three orders of magnitude below the radius-2 bound this op shipped
-    * with, making an LSH miss as improbable as llm_dedup_near's banded
-    * bound, fixture regeneration included. BorderlineParitySpec pins a
-    * synthetic borderline construction AND (r5) a NULL-text corpus. The
-    * cost is 163 vs 37 probe buckets per row — still bucket-equi-join work
-    * ∝ co-bucketed pairs, never all-pairs, so the 100 TB shape is
-    * unchanged. */
+    * Density dispatch: the 8-plane multiprobe has only 256 buckets, so its
+    * candidate mass is ~163·n²/256 — quadratic once buckets fill, and more
+    * planes cannot help (holding its miss bound forces the probe radius,
+    * and its C(p, r) probe count, up as fast as the buckets shrink). Up to
+    * 32 vectors per bucket it keeps its tighter bound and its
+    * deterministic recovery of BorderlineParitySpec's adversarial pair;
+    * past that the AND-OR tables take over, whose candidate mass is
+    * linear in n and whose bound holds over the hyperplane randomness
+    * only — checked by BorderlineParitySpec's brute-force parity and the
+    * `llm_dedup_embed_ortables` oracle row. The count() is one cheap pass
+    * on a job that is all-pairs-shaped anyway. */
   def embedNearDupPairs(vecs: DataFrame, threshold: Double): DataFrame = {
-    // Density dispatch (round-16 scale probe): the radius-4 multiprobe
-    // over 8 planes has only 256 buckets, so its candidate mass is
-    // ~163·n²/256 — measured slope 2.32 (113 s) at the 32× amplified
-    // corpus (64 k vectors). Growing the plane count can't save
-    // multiprobe: holding the 1e-5 miss bound forces the probe radius
-    // (and its C(p, r) probe count) up as fast as the buckets shrink.
-    // Past occupancy ~32/bucket the OR-of-tables construction (the
-    // classic E2LSH AND-OR form) takes over; below it the multiprobe
-    // path keeps its deterministic-adversarial coverage
-    // (BorderlineParitySpec) and tighter 1e-5 bound. The count() is
-    // one cheap extra pass on a job that is all-pairs-shaped anyway.
-    // RECALL CONTRACT IS CARDINALITY-DEPENDENT (ADVICE r16, documented
-    // honestly): below the cliff the registered row carries the
-    // multiprobe's deterministic-adversarial 1e-5 bound and is
-    // oracle-verified at every fixture sf; above it the OR-tables path
-    // carries the probabilistic 1e-4 hyperplane-randomness bound,
-    // verified by BorderlineParitySpec's brute-force parity plus the
-    // forced-construction oracle row `llm_dedup_embed_ortables` (round
-    // 17), which replays the AND-OR candidate generation in DuckDB.
-    // Log the branch taken so probe/bench artifacts are attributable.
     val n = vecs.count()
-    val useOr = n > 256L * 32
-    System.err.println(s"[graft] embedNearDupPairs n=$n path=" +
-      (if (useOr) "or-tables" else "multiprobe"))
-    if (!useOr) embedNearDupMultiprobe(vecs, threshold)
+    if (n <= 256L * 32) embedNearDupMultiprobe(vecs, threshold)
     else embedNearDupOrTables(vecs, threshold, n)
   }
 
-  /** The ≤8192-vector path: single 8-plane table, radius-4 multiprobe —
-    * P[miss at cos ≥ 0.99] ≈ 1e-5 (ADVICE r3/r4 bound), deterministic
-    * recovery of the constructed 3-4-flip adversarial pair. */
+  private def embedPairs(op: String, blocks: Blocking.Blocks,
+      vecs: DataFrame, threshold: Double): DataFrame =
+    Blocking.blockedPairs(op, blocks,
+      vecs.select(col("vec_id"), col("embedding")), ("vec_a", "vec_b"),
+      "score")(org.apache.spark.sql.graft.CosineSimilarity(_, _),
+      _ >= threshold)
+
   private[graft] def embedNearDupMultiprobe(vecs: DataFrame,
-      threshold: Double): DataFrame = {
-    val emb = vecs.withColumn("bucket",
-      org.apache.spark.sql.graft.HyperplaneBucket(col("embedding"), nPlanes, 0))
-    // Multi-probe expansion on one side only: the flip matching the two
-    // buckets' XOR is unique, so each qualifying pair meets exactly once.
-    val a = emb.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
+      threshold: Double): DataFrame =
+    embedPairs("embedNearDupMultiprobe", multiprobeBlocks(vecs, threshold),
+      vecs, threshold)
+
+  /** P[one random hyperplane separates two vectors at cosine θ]. */
+  private def planeFlip(threshold: Double): Double =
+    math.acos(threshold) / math.Pi
+
+  /** The small-corpus scheme: one 8-plane table, and the probing side
+    * expands to every bucket within `lshRadius` sign flips of its own. Each
+    * probed bucket is the own bucket XOR one distinct mask, so two buckets
+    * meet through at most one mask and a pair meets at most once. A
+    * qualifying pair is missed only if more than `lshRadius` of the planes
+    * separate it: ≈ 1e-5 at cos ≥ 0.99, the price of 163 probed buckets
+    * per row. */
+  private[graft] def multiprobeBlocks(vecs: DataFrame,
+      threshold: Double): Blocking.Blocks = {
+    val own = vecs.select(col("vec_id"),
+      org.apache.spark.sql.graft.HyperplaneBucket(col("embedding"), nPlanes, 0)
+        .as("bucket"))
+    val probe = own.select(col("vec_id"),
       explode(array(probeBuckets(nPlanes, lshRadius)
         .map(f => f(col("bucket"))): _*)).as("bucket"))
-    val b = emb.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-      col("bucket"))
-    a.join(b, Seq("bucket"))
-      .filter(col("vec_a") < col("vec_b"))
-      .withColumn("score", cosineCol("ea", "eb"))
-      .filter(col("score") >= threshold)
-      .select(col("vec_a"), col("vec_b"), col("score"))
-      .orderBy(col("vec_a"), col("vec_b"))
+    val eps = planeFlip(threshold)
+    def choose(k: Int) =
+      (1 to k).foldLeft(1.0)((c, i) => c * (nPlanes - k + i) / i)
+    val miss = (lshRadius + 1 to nPlanes).map(k =>
+      choose(k) * math.pow(eps, k) * math.pow(1 - eps, nPlanes - k)).sum
+    Blocking.Blocks(s"multiprobe(planes=$nPlanes,radius=$lshRadius)",
+      Blocking.bound(miss), own, probe, meetsOnce = true)
   }
 
-  /** The large-corpus path: T independent tables of b planes each
-    * (AND within a table, OR across tables — Indyk/Motwani). b grows
-    * with n to hold per-bucket occupancy at ~8 (candidate mass stays
-    * ~T·8·n — LINEAR in n at any density; re-probed 113 s → seconds at
-    * the 32× corpus), and T is derived from the threshold's per-plane
-    * flip probability ε = acos(θ)/π so that the per-pair miss bound
-    * (1−(1−ε)^b)^T ≤ 1e-4. Honest bound note: unlike the multiprobe
-    * path this guarantee is probabilistic over the hyperplanes only —
-    * there is no deterministic adversarial-geometry recovery; that is
-    * the standard trade every production-scale LSH dedup makes, and
-    * why the small-corpus path keeps the stronger scheme. A pair can
-    * meet in several tables, so candidates dedupe on (vec_a, vec_b)
-    * before the exact-cosine verify. */
+  /** The large-corpus scheme: T independent tables of b planes each (AND
+    * within a table, OR across tables — Indyk/Motwani), b and T from
+    * [[orTableParams]]. Candidate mass stays ~T·8·n, linear in n at any
+    * density. The miss bound (1−(1−ε)^b)^T holds over the hyperplane
+    * randomness only — no deterministic recovery of adversarial geometry,
+    * the standard trade of production-scale LSH dedup and the reason the
+    * small-corpus scheme stays. A pair can share a bucket in several
+    * tables. */
   private[graft] def embedNearDupOrTables(vecs: DataFrame,
       threshold: Double, n: Long): DataFrame = {
     val (b, tables) = orTableParams(n, threshold)
-    val tabled = vecs.select(col("vec_id"), col("embedding"),
+    val index = vecs.select(col("vec_id"),
       explode(array((0 until tables).map(t => struct(lit(t).as("t"),
         org.apache.spark.sql.graft.HyperplaneBucket(
           col("embedding"), b, t).as("bkt"))): _*)).as("tb"))
-    val a = tabled.select(col("vec_id").as("vec_a"),
-      col("embedding").as("ea"), col("tb"))
-    val bs = tabled.select(col("vec_id").as("vec_b"),
-      col("embedding").as("eb"), col("tb"))
-    a.join(bs, Seq("tb"))
-      .filter(col("vec_a") < col("vec_b"))
-      .dropDuplicates(Seq("vec_a", "vec_b"))
-      .withColumn("score", cosineCol("ea", "eb"))
-      .filter(col("score") >= threshold)
-      .select(col("vec_a"), col("vec_b"), col("score"))
-      .orderBy(col("vec_a"), col("vec_b"))
+    val miss = math.pow(1 - math.pow(1 - planeFlip(threshold), b), tables)
+    embedPairs("embedNearDupOrTables",
+      Blocking.Blocks(s"or-tables(n=$n,b=$b,T=$tables)", Blocking.bound(miss),
+        index, index, meetsOnce = false),
+      vecs, threshold)
   }
 
   /** AND-OR table parameters for n vectors at `threshold`: b planes per
     * table (AND within a table) grown to hold per-bucket occupancy at
-    * ~8, but CAPPED AT 31 (ADVICE r16): [[org.apache.spark.sql.graft
+    * ~8, but CAPPED AT 31: [[org.apache.spark.sql.graft
     * .HyperplaneBucketImpl]] packs one sign bit per plane into an Int
     * with `sig |= (1 << p)`, and Java's shift-mod-32 would silently
     * alias plane p with plane p−32 past b = 31 — bucket bits become ORs
@@ -262,8 +240,7 @@ object LlmVector {
   private[graft] def orTableParams(n: Long, threshold: Double): (Int, Int) = {
     val b = math.min(31, math.max(nPlanes,
       math.ceil(math.log(n / 8.0) / math.log(2)).toInt))
-    val eps = math.acos(threshold) / math.Pi
-    val survive = math.pow(1 - eps, b)
+    val survive = math.pow(1 - planeFlip(threshold), b)
     val tables = math.max(2,
       math.ceil(math.log(1e-4) / math.log1p(-survive)).toInt)
     (b, tables)
@@ -276,12 +253,12 @@ object LlmVector {
     * fixture sf. */
   private val orTablesForcedN = 32768L
 
-  /** Exact DuckDB replay of the AND-OR candidate generation (VERDICT
-    * r16 #4): the density dispatch routes the registered
-    * `llm_dedup_embed` through the multiprobe path at every fixture sf,
-    * which left the production-scale OR-tables branch scalatest-only.
-    * This oracle pins the construction itself, the round-9 annLsh-replay
-    * way: the literal ±1 sign matrix for all T·b planes as a VALUES
+  /** Exact DuckDB replay of the AND-OR candidate generation: the density
+    * dispatch routes the registered `llm_dedup_embed` through the
+    * multiprobe scheme at every fixture sf, so without this row the
+    * production-scale OR-tables scheme would be scalatest-only. This
+    * oracle pins the construction itself, the way the annLsh replay
+    * does: the literal ±1 sign matrix for all T·b planes as a VALUES
     * table, the bit-exact sequential dot fold (`list_reduce` over
     * `list(... ORDER BY dim)` prepended with 0.0 — the [[cosineSql]]
     * determinism contract; sign·float is an IEEE negation, never a
@@ -344,7 +321,7 @@ object LlmVector {
   /** Deterministic random-hyperplane signs for LSH: ±1 per (plane, dim).
     * Murmur-style avalanche, NOT a linear congruential form: a linear form
     * makes sign(p + k, d) a fixed transform of sign(p, d) for some strides
-    * k (the r2 version had sign(p+8, d) == -sign(p, d), so a "second hash
+    * k (a linear form gave sign(p+8, d) == -sign(p, d), so a "second hash
     * table" partitioned space identically to the first — double the scan,
     * zero recall gained). */
   def hyperplaneSign(plane: Int, dim: Int): Int = {
@@ -354,14 +331,13 @@ object LlmVector {
   }
 
   private val nPlanes = 8
-  private val lshRadius = 4 // dedup_embed's radius: P[miss] ≈ 1e-5 bound
+  private val lshRadius = 4 // dedup_embed's multiprobe radius
 
-  /** llm_ann_lsh's config, re-chosen by the round-8 AnnTune sweep after
-    * the probing strategy changed to query-directed (see
-    * [[lshTopkDirected]]): 8 tables × the 12 margin-cheapest flip sets
-    * measure recall@5 0.86 at a 43.3 % scan on sf0.1 (VERDICT r7 #5:
-    * first LSH point with recall ≥ 0.85 under half the corpus — the
-    * round-6 blind radius-2 config paid a 60 % scan for 0.88). Across
+  /** llm_ann_lsh's config, chosen by the AnnTune sweep for query-directed
+    * probing (see [[lshTopkDirected]]): 8 tables × the 12 margin-cheapest
+    * flip sets measure recall@5 0.86 at a 43.3 % scan on sf0.1 — the
+    * first LSH point with recall ≥ 0.85 under half the corpus (blind
+    * radius-2 probing paid a 60 % scan for 0.88). Across
     * fixtures: 0.86 @ 41.5 % at sf0.01, and 0.80 floor-exact at sf0.001
     * (the IVF-documented small-N pattern: 10 probes × 5 neighbors over
     * 50 vectors leaves no statistical room; deterministic, so not
@@ -515,17 +491,17 @@ object LlmVector {
     * construction; the bench reports recall@5 (`ann_recall`) next to the
     * exact baseline and LlmSpec asserts the ≥ 0.8 floor.
     *
-    * Shipped config (round-8 AnnTune sweep): 8 planes, EIGHT independent
+    * Shipped config (AnnTune sweep): 8 planes, EIGHT independent
     * hash tables, QUERY-DIRECTED probing of the 12 margin-cheapest flip
     * sets per (probe, table) — measured recall@5 0.86 at a 43.3 % scan
-    * fraction on sf0.1; the round-6 blind radius-2 config paid a 60 %
-    * scan for 0.88. The fixture geometry is near-orthogonal
+    * fraction on sf0.1; blind radius-2 probing paid a 60 % scan for
+    * 0.88. The fixture geometry is near-orthogonal
     * (top-5 neighbors at cosine ≈ 0.37 over a ≈ 0 background), LSH's
     * worst case — the scan fraction for a given recall falls fast as
     * real embedding corpora cluster. The data-adaptive IVF below still
     * holds the better frontier on this geometry (0.90 at 40 %). */
-  /** Exact DuckDB replay of [[lshTopkDirected]] (retires the r8 declared
-    * no_oracle skip, VERDICT r8 #2). The pipeline is deterministic end to
+  /** Exact DuckDB replay of [[lshTopkDirected]], so the row is
+    * hash-checked rather than skipped as oracle-less. The pipeline is deterministic end to
     * end, so the oracle recomputes ALL of it rather than a weaker partial
     * check:
     *  - the hyperplane sign matrix is data-INdependent (a pure function of
@@ -716,14 +692,14 @@ object LlmVector {
     * to the data, so the recall/scan trade beats the data-oblivious
     * hyperplane LSH above; both are reported next to the exact baseline by
     * the bench (`ann_recall`, `ivf_recall`). Hash-exact oracle-checked
-    * since round 9 (the [[annIvfOracleSql]] Lloyd replay below); IvfSpec
+    * (the [[annIvfOracleSql]] Lloyd replay below); IvfSpec
     * asserts the ≥ 0.8 recall floor, determinism, and single-cell
     * assignment — the semantic quality the hash can't express.
     *
-    * Shipped config (r4 AnnTune sweep at larger cell counts, VERDICT r3
-    * #4): 48 cells, nProbe 19 — measured recall@5 0.90 at a 39.7 % scan
-    * fraction on sf0.1, strictly better than r3's 24/12 point (0.92 @
-    * 49.4 %) on the scan axis for the same ≥0.85 recall bar. The full r4
+    * Shipped config (AnnTune sweep at larger cell counts): 48 cells,
+    * nProbe 19 — measured recall@5 0.90 at a 39.7 % scan fraction on
+    * sf0.1, strictly better than the 24/12 point (0.92 @ 49.4 %) on the
+    * scan axis for the same ≥0.85 recall bar. The full sweep
     * frontier: (48,14) 0.78@29 %, (48,17) 0.82@35 %, (48,19) 0.90@40 %,
     * (64,26) 0.86@41 % — finer quantizers keep paying off until ~k=48,
     * then the 2048-row training sample's per-cell support (~40 vectors at
@@ -734,7 +710,7 @@ object LlmVector {
     * here; on clustered real-world embeddings the same design reaches it
     * at far smaller fractions. */
   /** Exact DuckDB replay of [[ivfTopk]] INCLUDING the driver-side Lloyd
-    * training (retires the r8 declared no_oracle skip, VERDICT r8 #2).
+    * training, so the row is hash-checked rather than skipped.
     * [[ivfCentroids]] is a deterministic sequence of double ops — sample =
     * the sampleCap lowest vec_ids, per-vector normalization, ivfIters
     * assignment/mean/renormalize rounds, every accumulation a strict
@@ -865,7 +841,7 @@ object LlmVector {
   }
 
   private val annIvf = Spec("llm_ann_ivf", annIvfOracleSql) { (s, d) =>
-    // ADVICE r9 #3: the oracle above hardcodes ivfK cells and dims 0..63
+    // The oracle above hardcodes ivfK cells and dims 0..63
     // while the Scala path adapts — pin the domain restriction as a named
     // runtime check so a future fixture outside it fails with a reason,
     // not as an opaque hash mismatch.
@@ -1017,8 +993,8 @@ object LlmVector {
     * is WHAT the scan touches: the resident relation is
     * (vec_id, cell, codes) — 16 five-bit codes per vector instead of
     * the 256-byte embedding, the ~25× memory/bandwidth lever — READ
-    * FROM THE PAY-ONCE [[ivfPqResidentDir]] LAYOUT (round 19; build
-    * visible in materialize_layout, steady time = scan+ADC+re-rank),
+    * FROM THE PAY-ONCE [[ivfPqResidentDir]] LAYOUT (build visible in
+    * materialize_layout, steady time = scan+ADC+re-rank),
     * scored by asymmetric distance (normalized probe · PQ
     * reconstruction, a codegen'd [[org.apache.spark.sql.graft.PqAdc]]
     * fold), and only the ADC top-[[pqShortlist]] per probe fetch their
@@ -1191,46 +1167,34 @@ object LlmVector {
       Tables.documents(s, d).select(col("doc_id"), col("text")), 0.7)
   }
 
-  /** Reusable MinHash pipeline so tests can run it on synthetic corpora.
+  /** MinHash near-dup pairs over (doc_id, text) rows, so tests can run it
+    * on synthetic corpora: band-hash block keys, then the exact
+    * shingle-set Jaccard on each candidate.
     *
-    * Round-21 optimization adjudication (guide §2.4), NO code change:
-    * the static plan shows FOUR scan+explode+aggregate subtrees of
-    * `documents` (band-join sides a/b, verify-join sides a/b), but the
-    * EXECUTED plan collapses them to exactly TWO runtime stages — the
-    * signature shuffle and the collect_set shuffle each run once, with
+    * The static plan shows four scan+explode+aggregate subtrees of the
+    * documents (block-join sides a/b, verify-join sides a/b), but the
+    * executed plan runs exactly two runtime stages — the signature
+    * shuffle and the collect_set shuffle each run once, with
     * `ReusedExchange` serving the b-sides (witness:
     * plans/r21/llm_dedup_near_runtime_reuse.txt). A merged
-    * signatures+set aggregate (one groupBy producing both) was tried
-    * and is a no-op: Catalyst's column pruning correctly splits it back
-    * into the pruned pair, which AQE then reuses pairwise as before.
-    * Collapsing 2 → 1 scan would need a persisted/checkpointed
-    * substrate, rejected by the at-scale memory argument (the cached
-    * sig+set relation is ∝ corpus — ~3 GB at the x124 probe scale —
-    * pinned for the query's lifetime; recompute beats cache here, the
-    * same adjudication as graph_pagerank's loop leaves). */
+    * signatures+set aggregate is a no-op: column pruning splits it back
+    * into the pruned pair. One scan instead of two would need a persisted
+    * substrate ∝ corpus (~3 GB at the x124 probe scale) pinned for the
+    * query's lifetime; recomputing is cheaper. */
   def minhashPairs(docs: DataFrame, threshold: Double): DataFrame = {
     val sh = minhashShingles(docs)
-    val banded = minhashBanded(sh)
-    val cands = banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.band_idx") === col("b.band_idx")
-          && col("a.band_hash") === col("b.band_hash")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
     val sets = sh.groupBy(col("doc_id"))
       .agg(collect_set(col("h")).as("set"))
-    cands
-      .join(sets.select(col("doc_id").as("doc_a"), col("set").as("set_a")),
-        "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("set").as("set_b")),
-        "doc_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("set_a"), col("set_b"))).cast("double")
-          / size(array_union(col("set_a"), col("set_b"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    val banded = minhashBanded(sh)
+    val rowsPerBand = K / bands
+    val miss = math.pow(1 - math.pow(threshold, rowsPerBand), bands)
+    Blocking.blockedPairs("minhashPairs",
+      Blocking.Blocks(s"minhash-bands(${bands}x$rowsPerBand)",
+        Blocking.bound(miss), banded, banded, meetsOnce = false),
+      sets, ("doc_a", "doc_b"), "jaccard")(
+      (a, b) => size(array_intersect(a, b)).cast("double")
+        / size(array_union(a, b)),
+      _ >= threshold)
   }
 
   /** (doc_id, h) 64-bit-hashed distinct 3-shingles — stage 1 of
@@ -1327,7 +1291,7 @@ object LlmVector {
     * per-char `charAt` (astral codepoints would diverge — two UTF-16 units
     * vs one codepoint — and are out of the signature's documented domain).
     * Prototyped bit-exact against a reference port at sf0.01 AND sf0.1
-    * before shipping (round 8). */
+    * before shipping. */
   private def simhashOracleSql(maxHamming: Int): String = {
     val fnvStep = sqlMult64(
       "(h - (h % 2097152)) + xor(CAST(h % 2097152 AS BIGINT), " +
@@ -1380,56 +1344,58 @@ object LlmVector {
        |ORDER BY doc_a, doc_b""".stripMargin
   }
 
-  /** SimHash near-dup: one 64-bit signature per doc, candidates via
-    * 16-bit-chunk LSH, then hamming ≤ 3 verification. Oracle-checked
-    * (upgraded from a declared candidate-generator, VERDICT r6/r7 #1):
-    * the output is EXACTLY the set of pairs at signature hamming ≤ 3, by
-    * the pigeonhole theorem — hamming ≤ 3 means at most 3 of the 4
-    * 16-bit chunks can differ, so some chunk is equal and the candidate
-    * join finds the pair. Deterministic completeness, not a probabilistic
-    * bound: unlike MinHash banding (miss prob ≤ 7.6e-8) the chunk split
-    * cannot miss a qualifying pair at all, while the plan still runs the
-    * bucketed LSH join (measured 3.4 % of all-pairs at sf0.01 AND sf0.1 —
-    * the fraction is scale-stable because 16-bit buckets don't saturate),
-    * never the quadratic product. The oracle recomputes the signature
-    * from scratch in SQL ([[simhashOracleSql]]), so the hash-match
-    * certifies the full pipeline: tokenization, FNV-1a, avalanche, votes,
-    * chunk-LSH recall, and the hamming verify. */
+  /** SimHash near-dup: one 64-bit signature per doc, 16-bit-chunk block
+    * keys, then hamming ≤ 3 verification. The output is EXACTLY the set of
+    * pairs at signature hamming ≤ 3, by the pigeonhole theorem
+    * ([[simhashBlocks]]) — deterministic completeness, not a probabilistic
+    * bound like MinHash banding's — while the plan still runs the blocked
+    * join (measured 3.4 % of all-pairs at sf0.01 AND sf0.1: 16-bit buckets
+    * don't saturate), never the quadratic product. The oracle recomputes
+    * the signature from scratch in SQL ([[simhashOracleSql]]), so the
+    * hash-match certifies the full pipeline: tokenization, FNV-1a,
+    * avalanche, votes, chunk recall, and the hamming verify. */
   private val dedupSimhash = Spec(
     "llm_dedup_simhash", simhashOracleSql(3)) { (s, d) =>
     simhashPairs(Tables.documents(s, d).select(col("doc_id"), col("text")), 3)
   }
 
-  /** 64-bit signature split into this many equal chunks for the LSH join;
-    * pigeonhole completeness holds for maxHamming < simhashChunks.
-    * ScaleStressSpec measures chunk-bucket fan-out against this layout. */
+  /** 64-bit signature split into this many equal chunks for the block
+    * keys; pigeonhole completeness holds for maxHamming < simhashChunks. */
   private[graft] val simhashChunks = 4
 
-  def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
+  /** (doc_id, sig): the native codegen expression, not a UDF; LlmSpec pins
+    * it bit-equal to [[simhash64]]. */
+  private[graft] def simhashSigs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      org.apache.spark.sql.graft.SimHash64(col("text")).as("sig"))
+
+  /** (doc_id, chunk_idx, chunk) block keys. Two signatures at hamming h
+    * differ in at most h chunks, so for h < simhashChunks some chunk is
+    * equal and the pair is always a candidate. Past that two signatures
+    * can differ in every chunk (bits 0, 16, 32 and 48) and be silently
+    * lost, so such a maxHamming is rejected. */
+  private[graft] def simhashBlocks(sigs: DataFrame,
+      maxHamming: Int): Blocking.Blocks = {
+    require(maxHamming < simhashChunks,
+      s"simhash maxHamming $maxHamming must be < simhashChunks = " +
+        s"$simhashChunks: past it a pair can differ in every chunk and " +
+        "the chunk blocking is no longer exact")
     val chunkBits = 64 / simhashChunks
     val chunkMask = (1L << chunkBits) - 1
-    // native codegen expression, not a UDF (it was the one non-codegen
-    // node in this pipeline); LlmSpec pins it bit-equal to simhash64
-    val sigs = docs.select(col("doc_id"),
-      org.apache.spark.sql.graft.SimHash64(col("text")).as("sig"))
-    val chunked = sigs.select(col("doc_id"), col("sig"),
+    val index = sigs.select(col("doc_id"),
       posexplode(array((0 until simhashChunks).map(i =>
         shiftright(col("sig"), i * chunkBits).bitwiseAND(lit(chunkMask))): _*))
         .as(Seq("chunk_idx", "chunk")))
-    chunked.alias("a")
-      .join(chunked.alias("b"),
-        col("a.chunk_idx") === col("b.chunk_idx")
-          && col("a.chunk") === col("b.chunk")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .distinct()
+    Blocking.Blocks(s"chunks(${simhashChunks}x$chunkBits-bit)",
+      "0 exact (pigeonhole)", index, index, meetsOnce = false)
+  }
+
+  def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
+    val sigs = simhashSigs(docs)
+    Blocking.blockedPairs("simhashPairs", simhashBlocks(sigs, maxHamming),
+      sigs, ("doc_a", "doc_b"), "hamming")(
       // codegen'd built-in, not a UDF: popcount of the signature XOR
-      .withColumn("hamming",
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-      .orderBy(col("doc_a"), col("doc_b"))
+      (a, b) => bit_count(a.bitwiseXOR(b)).cast("int"), _ <= maxHamming)
   }
 
   /** Multimodal record assembly: documents ⟕ embeddings into one struct
@@ -1502,8 +1468,8 @@ object LlmVector {
       |    (x, y) -> x + y) AS BIGINT) AS px_checksum
       |FROM (SELECT doc_id, COALESCE(text, '') AS text FROM documents)
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    // The COALESCE above mirrors the Spark-side null guard below (ADVICE
-    // r3): both engines must agree that a NULL text decodes as the empty
+    // The COALESCE above mirrors the Spark-side null guard below: both
+    // engines must agree that a NULL text decodes as the empty
     // document (w=4, h=3, checksum=0), or a fixture regeneration that
     // introduces NULL text breaks parity silently.
     import s.implicits._
@@ -1574,7 +1540,7 @@ object LlmVector {
        |  (ev.vec_id IS NOT NULL) AS evicted
        |FROM members m LEFT JOIN evicted ev ON m.vec_id = ev.vec_id
        |ORDER BY m.vec_id""".stripMargin) { (s, d) =>
-    // ADVICE r17 #2 — the llm_ann_ivf oracle-domain idiom: the oracle SQL
+    // The llm_ann_ivf oracle-domain idiom: the oracle SQL
     // above replays the EXACT k=16 path, which the dispatch only takes at
     // n <= 8192. A fixture grown past that would flip the engine to the
     // production LSH-scaled path and surface as an opaque hash mismatch
@@ -1678,7 +1644,7 @@ object LlmVector {
     * [[orTableParams]] lesson (never widen a bitset past its width). */
   def semDedupParams(n: Long): (Int, Int) = {
     val k = math.max(16, math.ceil(n / 256.0).toInt)
-    // ⌈log₂⌉ in integer arithmetic (ADVICE r17 #4): the floating form
+    // ⌈log₂⌉ in integer arithmetic: the floating form
     // ⌈log(k/8)/log(2)⌉ can round log2 UP at exact powers of two
     // (4.000000000000001 → 5), silently picking one extra hyperplane.
     // ⌈log₂(x)⌉ == ⌈log₂(⌈x⌉)⌉ for x > 0 (both count the power-of-two

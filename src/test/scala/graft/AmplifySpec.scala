@@ -27,12 +27,9 @@ class AmplifySpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val out: String = {
-    val dir = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_p${graft.operators.Scans.jvmTag}_amplify_test")
-    graft.operators.Scans.rmRecursive(dir)
-    Amplify.amplify(spark, SF001, dir.toString, 3)
-    dir.toString
+    val dir = TestSpark.tempDir("graft_amplify_test").toString
+    Amplify.amplify(spark, SF001, dir, 3)
+    dir
   }
 
   test("keys are stride-disjoint and cardinality scales exactly") {

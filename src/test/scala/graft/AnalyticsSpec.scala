@@ -66,7 +66,7 @@ class AnalyticsSpec extends AnyFunSuite {
       (1L, ns(1), 10L, "a", 1.0, "{}"), (2L, ns(3), 10L, "a", 1.0, "{}"),
       (3L, ns(1), 11L, "b", 1.0, "{}"), (4L, ns(2), 11L, "b", 1.0, "{}"),
       (5L, ns(2), 12L, "b", 1.0, "{}"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_gaps")
+    val dir = TestSpark.tempDir("graft_gaps")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("gap_fill_daily")(spark, dir.toString)

@@ -170,7 +170,7 @@ class BenchSpec extends AnyFunSuite {
     // Wrapper shape mirrors the driver's BENCH_r<n>.json: the bench
     // stdout line embedded in a "tail" field, possibly with leading
     // noise before the JSON line.
-    val dir = java.nio.file.Files.createTempDirectory("benchspec_").toFile
+    val dir = TestSpark.tempDir("benchspec_").toFile
     def write(name: String, tail: String): Unit = {
       val m = new com.fasterxml.jackson.databind.ObjectMapper
       val root = m.createObjectNode()

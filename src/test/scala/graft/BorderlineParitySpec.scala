@@ -231,7 +231,7 @@ class BorderlineParitySpec extends AnyFunSuite {
     // the oracle's closed-form prediction for the empty document.
     import spark.implicits._
     val docs = Seq((1L, null: String), (2L, ""), (3L, "abc"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nulltext")
+    val tmp = TestSpark.tempDir("graft_nulltext")
     docs.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = SparkEntry.queries("llm_multimodal_decode")(spark, tmp.toString)

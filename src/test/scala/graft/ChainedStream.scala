@@ -60,7 +60,7 @@ object ChainedStream {
     val chained = graft.streaming.StreamingOps.joinThenWindow(
       memC.toDF().withWatermark("ts", Watermark),
       memV.toDF().withWatermark("ts", Watermark), BandMinutes)
-    val base = Files.createTempDirectory("graft_chain").toString
+    val base = TestSpark.tempDir("graft_chain").toString
     val outDir = s"$base/out"
     val chkDir = s"$base/chk"
     def start() = chained.writeStream.format("parquet")

@@ -202,8 +202,8 @@ class EdgeCasesSpec extends AnyFunSuite {
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
     val us = 1704067200123456L // 2024-01-01 00:00:00.123456 UTC
     val ns = us * 1000L + 789L // sub-µs tail the legacy path truncates away
-    val dLegacy = java.nio.file.Files.createTempDirectory("graft_gen_ns").toString
-    val dCurrent = java.nio.file.Files.createTempDirectory("graft_gen_us").toString
+    val dLegacy = TestSpark.tempDir("graft_gen_ns").toString
+    val dCurrent = TestSpark.tempDir("graft_gen_us").toString
     // The driver fixtures are single parquet FILES, and the streaming
     // file source's directory listing does not descend into a
     // Spark-written `events.parquet/` DIRECTORY — so write each synthetic
@@ -211,7 +211,7 @@ class EdgeCasesSpec extends AnyFunSuite {
     // move the lone part file to `<gen>/events.parquet`.
     def writeSingleFile(df: org.apache.spark.sql.DataFrame,
         dest: String): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft_gen_stage")
+      val stage = TestSpark.tempDir("graft_gen_stage")
       df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
       val part = new java.io.File(stage.toString).listFiles()
         .find(_.getName.endsWith(".parquet"))
@@ -487,7 +487,7 @@ class EdgeCasesSpec extends AnyFunSuite {
     // guard must surface it as one attributable error at the next load —
     // not as a stale-plan hash mismatch hours later.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mtime").toString
+    val dir = TestSpark.tempDir("graft_mtime").toString
     try {
       val path = s"$dir/region.parquet"
       Seq((0, "AFRICA")).toDF("r_regionkey", "r_name")
@@ -511,7 +511,7 @@ class EdgeCasesSpec extends AnyFunSuite {
     // every retry after the file appears throw the misleading
     // "changed mid-session" error instead of succeeding.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_miss").toString
+    val dir = TestSpark.tempDir("graft_miss").toString
     try {
       intercept[Exception] { // real missing-file error surfaces
         graft.sources.Tables.load(spark, dir, "nation").count()
@@ -534,12 +534,12 @@ class EdgeCasesSpec extends AnyFunSuite {
     // regeneration; the (mtime, length) baseline catches any rewrite that
     // changes the byte count.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_len").toString
+    val dir = TestSpark.tempDir("graft_len").toString
     // Write `df` as ONE plain parquet file at dest (the /root/testdata
     // layout): Spark writes a directory; move its single part file out.
     def writeSingleFile(df: org.apache.spark.sql.DataFrame,
         dest: java.io.File): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft_len_stage")
+      val stage = TestSpark.tempDir("graft_len_stage")
       df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
       val part = stage.toFile.listFiles()
         .find(_.getName.endsWith(".parquet"))

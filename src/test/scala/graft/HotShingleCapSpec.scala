@@ -48,7 +48,7 @@ class HotShingleCapSpec extends AnyFunSuite {
   type Row = org.apache.spark.sql.Row
 
   test("cap drops pairs glued only by hot shingles, keeps genuine near-dups") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hotshingle")
+    val dir = TestSpark.tempDir("graft_hotshingle")
       .toString
     corpus(dir)
     val uncapped = pairsAt(dir, maxDf = 1024)

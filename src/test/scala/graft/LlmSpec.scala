@@ -76,6 +76,40 @@ class LlmSpec extends AnyFunSuite {
     assert(!plan.contains("UDF"), s"simhash plan still contains a UDF:\n$plan")
   }
 
+  test("simhash rejects maxHamming >= simhashChunks instead of losing pairs") {
+    import spark.implicits._
+    // Two signatures one bit apart in each 16-bit chunk: hamming 4, yet
+    // no chunk is equal, so the chunk blocking never pairs them.
+    val n = LlmVector.simhashChunks
+    val far = (0 until n).map(c => 1L << (c * 64 / n)).reduce(_ | _)
+    val sigs = Seq((1L, 0L), (2L, far)).toDF("doc_id", "sig")
+    assert(LlmVector.hamming64(0L, far) == n)
+    val shared = LlmVector.simhashBlocks(sigs, n - 1).index
+      .groupBy("chunk_idx", "chunk").count().filter(col("count") > 1).count()
+    assert(shared == 0, "the pair must share no chunk")
+    val docs = docsDf(Seq(1L -> baseText, 2L -> baseText))
+    val err = intercept[IllegalArgumentException](
+      LlmVector.simhashPairs(docs, n))
+    assert(err.getMessage.contains(s"simhashChunks = $n"), err.getMessage)
+    assert(LlmVector.simhashPairs(docs, n - 1).count() == 1)
+  }
+
+  test("blockedPairs emits each verified pair once, oriented and ordered") {
+    import spark.implicits._
+    import graft.operators.Blocking
+    // Three blocks: (1, 2) share two of them, (3, 4) one; 2 and 3 none.
+    val index = Seq((2L, 7L), (1L, 7L), (1L, 8L), (2L, 8L), (4L, 9L),
+      (3L, 9L)).toDF("id", "k")
+    val payload = Seq((1L, 10), (2L, 11), (3L, 30), (4L, 50)).toDF("id", "v")
+    def pairs(meetsOnce: Boolean) = Blocking.blockedPairs("test",
+        Blocking.Blocks("test", "0", index, index, meetsOnce), payload,
+        ("a", "b"), "gap")((x, y) => abs(x - y), _ <= 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    assert(pairs(meetsOnce = false) == Seq((1L, 2L, 1)))
+    // A scheme that claims once-only meetings gets no dedupe.
+    assert(pairs(meetsOnce = true) == Seq((1L, 2L, 1), (1L, 2L, 1)))
+  }
+
   test("cosine self-similarity is exactly 1 on normalized comparison") {
     val emb = graft.sources.Tables.embeddings(spark, SF001).limit(20)
     val self = emb.select(col("vec_id"),
@@ -250,7 +284,7 @@ class LlmSpec extends AnyFunSuite {
       2L -> "delta one", 3L -> "epsilon zeta",
       5L -> "brand new text", 10L -> "brand new text",
       15L -> "only here once", 20L -> "  EPSILON ZETA  ")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_incdedup")
+    val tmp = TestSpark.tempDir("graft_incdedup")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")))

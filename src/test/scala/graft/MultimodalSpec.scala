@@ -72,7 +72,7 @@ class MultimodalSpec extends AnyFunSuite {
     val docs = Seq((1L, ""), (2L, "abc"), (3L, "hello world of frames"),
       (4L, "a b c d e f g h i j k l m n o p"))
     val df = docs.toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_frames")
+    val tmp = TestSpark.tempDir("graft_frames")
     df.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = SparkEntry.queries("llm_multimodal_framesample")(
       spark, tmp.toString).collect()

@@ -13,7 +13,7 @@ class PipelineEdgeSpec extends AnyFunSuite {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_pipe_edge")
+    val d = TestSpark.tempDir("graft_pipe_edge")
       .toString
     val words70 = (1 to 70).map(i => s"w$i").mkString(" ")
     val words32 = (1 to 32).map(i => s"x$i").mkString(" ")

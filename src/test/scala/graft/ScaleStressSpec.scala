@@ -24,7 +24,7 @@ class ScaleStressSpec extends AnyFunSuite {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_scale").toString
+    val d = TestSpark.tempDir("graft_scale").toString
     val rng = lcg(42L)
     val docs = (0 until nDocs).map { i =>
       val words = (0 until 30).map { _ =>
@@ -67,7 +67,7 @@ class ScaleStressSpec extends AnyFunSuite {
   private val advN = 10000
   private lazy val advDir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val d = TestSpark.tempDir("graft_skew").toString
     val rng = lcg(1234L)
     val hotBase = (1 until 30).map(i => s"h$i")
     val docs = (0 until advN).map { i =>
@@ -133,15 +133,14 @@ class ScaleStressSpec extends AnyFunSuite {
       .map(r => (r.getLong(0),
         org.apache.spark.sql.graft.SimHashImpl.hash(r.getString(1))))
       .sortBy(_._1)
-    // Candidate mass of the 16-bit-chunk layout (same layout the
-    // production join uses and the DuckDB oracle re-derives):
-    // Σ_chunk Σ_value C(bucket, 2).
+    // Candidate mass of the production chunk layout — the block keys that
+    // feed blockedPairs: Σ_chunk Σ_value C(bucket, 2).
     val nChunks = LlmVector.simhashChunks
-    val cBits = 64 / nChunks
-    val chunkWork = (0 until nChunks).map { c =>
-      rows.groupBy { case (_, sig) => (sig >>> (c * cBits)) & ((1L << cBits) - 1) }
-        .map { case (_, g) => g.size.toLong * (g.size - 1) / 2 }.sum
-    }.sum
+    val chunkWork = LlmVector.simhashBlocks(LlmVector.simhashSigs(docs), 3)
+      .index.groupBy("chunk_idx", "chunk").count()
+      .agg(org.apache.spark.sql.functions.sum(
+        org.apache.spark.sql.functions.expr("count * (count - 1) DIV 2")))
+      .head().getLong(0)
     val cliquePairs = hotN.toLong * (hotN - 1) / 2
     val allPairs = advN.toLong * (advN - 1) / 2
     assert(chunkWork <= nChunks.toLong * cliquePairs + 30000L,
@@ -203,12 +202,11 @@ class ScaleStressSpec extends AnyFunSuite {
       .head().getDouble(0)
     assert(minScore >= 0.99, s"min score $minScore")
     // Locality measure: own-bucket co-residence mass of the production
-    // bucket layout — the clique sits in ONE bucket (C(800,2) mass);
-    // organics spread. The measured mass must stay ≪ all-pairs.
-    val bucketMass = emb
-      .select(org.apache.spark.sql.graft.HyperplaneBucket(
-        col("embedding"), 8, 0).as("b"))
-      .groupBy("b").count()
+    // bucket layout (the block keys that feed blockedPairs) — the clique
+    // sits in ONE bucket (C(800,2) mass); organics spread. The measured
+    // mass must stay ≪ all-pairs.
+    val bucketMass = LlmVector.multiprobeBlocks(emb, 0.99).index
+      .groupBy("bucket").count()
       .agg(org.apache.spark.sql.functions.sum(
         org.apache.spark.sql.functions.expr("count * (count - 1) DIV 2")))
       .head().getLong(0)

@@ -26,7 +26,7 @@ class StreamRunnerSpec extends AnyFunSuite {
 
   /** Two one-file parquet pieces of `rows` rows each under a fresh dir. */
   private def twoPieces(rows: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_runner_in")
+    val dir = TestSpark.tempDir("graft_runner_in")
       .toString
     Seq(0L, 1L).foreach { k =>
       spark.range(k * rows, (k + 1) * rows).coalesce(1)

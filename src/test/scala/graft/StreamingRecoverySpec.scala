@@ -17,7 +17,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
 
   test("file-source stream resumes from checkpoint without loss or dups") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_recovery").toString
+    val base = TestSpark.tempDir("graft_recovery").toString
     val srcDir = s"$base/src"
     val outDir = s"$base/out"
     val ckDir = s"$base/ck"
@@ -59,7 +59,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     // aggregation's checkpoint must list exactly one state operator with
     // the aggregation's store name and the committed batch range.
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_statemeta").toString
+    val base = TestSpark.tempDir("graft_statemeta").toString
     val srcDir = s"$base/src"; val ckDir = s"$base/ck"
     (0L until 100L).map(i => (i, i % 5)).toDF("v", "k")
       .coalesce(1).write.mode("overwrite").parquet(srcDir)
@@ -124,7 +124,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     * leaves behind. */
   test("foreachBatch restart replays the uncommitted batch idempotently") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_replay").toString
+    val base = TestSpark.tempDir("graft_replay").toString
     val srcDir = s"$base/src"
     val ckDir = s"$base/ck"
     val outDir = s"$base/out"

@@ -674,14 +674,12 @@ class StreamingSpec extends StreamingParityBase {
     // the behavior complete mode would violate.
     import TestSpark._
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_updmode_wit").toFile
+    val root = TestSpark.tempDir("graft_updmode_wit").toFile
     try {
       val in = new java.io.File(root, "in"); in.mkdirs()
       def writeBatch(rows: Seq[(Long, Long)], name: String,
           mtime: Long): Unit = {
-        val stage = java.nio.file.Files
-          .createTempDirectory("graft_updmode_stage")
+        val stage = TestSpark.tempDir("graft_updmode_stage")
         rows.toDF("user_id", "es").coalesce(1)
           .write.mode("overwrite").parquet(stage.toString)
         val part = new java.io.File(stage.toString).listFiles()

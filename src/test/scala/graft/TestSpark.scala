@@ -24,6 +24,24 @@ object TestSpark {
     s
   }
 
+  private val tempRoots =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  private lazy val removeTempRootsAtExit: Unit = {
+    sys.addShutdownHook(
+      tempRoots.forEach(f => graft.operators.Scans.rmRecursive(f)))
+    ()
+  }
+
+  /** A fresh `<prefix>…` directory under java.io.tmpdir, removed with its
+    * whole tree when the test JVM exits. Every suite takes its scratch
+    * directories here, so a test run leaves none behind. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    removeTempRootsAtExit
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempRoots.add(d.toFile)
+    d
+  }
+
   val RocksProviderKey = "spark.sql.streaming.stateStore.providerClass"
   val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"

@@ -80,8 +80,7 @@ class TransformWithStateSpec extends AnyFunSuite {
     assert(spanning.nonEmpty,
       "no user spans the restart boundary — the split proves nothing")
     withRocksDb {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_tws_restart").toString
+      val base = TestSpark.tempDir("graft_tws_restart").toString
       val out = s"$base/out"
       val mem = MemoryStream[(Long, String, Long)]
       def start() = mem.toDS()
@@ -152,8 +151,7 @@ class TransformWithStateSpec extends AnyFunSuite {
     import graft.streaming.SessionTimerProcessor
     val gap = 1800000000L // 30 min in µs
     withRocksDb {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_tws_timer_restart").toString
+      val base = TestSpark.tempDir("graft_tws_timer_restart").toString
       val out = s"$base/out"
       val mem = MemoryStream[(Long, java.sql.Timestamp)]
       def ts(min: Long) = new java.sql.Timestamp(min * 60000L)
@@ -242,8 +240,7 @@ class TransformWithStateSpec extends AnyFunSuite {
       "no (user, type) pair spans the restart boundary — the split " +
         "proves nothing about MapState restoration")
     withRocksDb {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_tws_map_restart").toString
+      val base = TestSpark.tempDir("graft_tws_map_restart").toString
       val out = s"$base/out"
       val mem = MemoryStream[(Long, String, Long)]
       def start() = mem.toDS()
