@@ -200,8 +200,8 @@ object LlmText {
     // subtree canonicalizes to the same exchange as `uni`, so AQE
     // exchange reuse serves it from the already-built unigram stage.
     // Σ count(*) per group ≡ count(*) overall (every token is in exactly
-    // one group), and sum(LongType) is LongType. One nullability nuance
-    // (ADVICE r21 #4): sum() is NULL on an empty corpus where count(*)
+    // one group), and sum(LongType) is LongType. One nullability nuance:
+    // sum() is NULL on an empty corpus where count(*)
     // was 0 — output is unaffected because `total` is consumed only in
     // the lift arithmetic after joins that are empty in that case anyway.
     val tot = uni.agg(sum(col("n")).as("total"))
@@ -375,61 +375,60 @@ object LlmText {
             |    words[i], words[i+1], words[i+2])))"""
             .stripMargin))).as("sh"))
 
-  /** Materialized near-dup pairs per (session, corpus, df cap): the
-    * Jaccard self-join is the shared, expensive substrate of
-    * llm_dedup_ngram AND llm_dedup_cluster, so its result (tiny: the
-    * pairs, not the index) is computed once and persisted. Sound only
-    * while the corpus at a path is immutable for the session's lifetime
-    * — true of the driver fixtures and of every test (synthetic corpora
-    * use fresh temp dirs). */
+  /** Materialized near-dup pairs per (session, corpus): the Jaccard
+    * self-join is the shared, expensive substrate of llm_dedup_ngram AND
+    * llm_dedup_cluster, so its result (tiny: the pairs, not the index) is
+    * computed once and persisted. Sound only while the corpus at a path is
+    * immutable for the session's lifetime — true of the driver fixtures
+    * and of every test (synthetic corpora use fresh temp dirs). */
   private val pairs = new graft.sources.SessionMemo[DataFrame]()
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.LlmText")
 
-  private[graft] def ngramPairs(s: SparkSession, d: String,
-      maxDf: Int = 1024): DataFrame =
-    pairs(s, d, maxDf.toString)(computeNgramPairs(s, d, maxDf))
+  /** Spark form of the `pairs` relation above, exact at every shingle
+    * df: [[prefixBlocks]] keys fed to [[Blocking.blockedPairs]], verified
+    * on each doc's full shingle-hash set. The sets carry xxhash64(shingle),
+    * not the string (see [[docShingles]] for the collision accounting). */
+  private[graft] def ngramPairs(s: SparkSession, d: String): DataFrame =
+    pairs(s, d)(computeNgramPairs(s, d))
 
-  /** Spark form of the `pairs` relation above. The inverted index carries
-    * xxhash64(shingle), not the string: the equi-join shuffles 8-byte keys
-    * instead of ~20-char strings, and since round 22 the hash is applied
-    * inside the shingle transform itself (see [[docShingles]] for the
-    * collision accounting — a 64-bit collision can overcount one shared
-    * shingle or, within a single document, undercount its set size by
-    * one; both are ~2⁻⁶⁴-scale and oracle-excluded on the fixtures).
-    *
-    * `maxDf` is the standard skew defense for set-similarity joins: a
-    * shingle appearing in k docs contributes k(k-1)/2 pairs to the
-    * self-join, so one stopword 3-gram shared by 10⁶ docs makes a 10¹²-pair
-    * group. Postings of shingles with document frequency > maxDf are
-    * dropped before the join (set sizes stay exact — computed on the
-    * uncapped index — so jaccard can only be underestimated for pairs whose
-    * overlap is mostly ubiquitous shingles, which is exactly the evidence a
-    * near-dup detector should discount). The default is far above the
-    * fixture max df (25 at sf0.1), so fixture output is bit-identical to
-    * the uncapped oracle; HotShingleCapSpec exercises the capped regime.
-    * (A collect_list + pair-explode variant was measured equal at fixture
-    * volume and rejected: it accumulates a hot shingle's full posting list
-    * BEFORE any size filter can drop it, so the df-cap join is the form
-    * whose skew bound actually holds at 100 TB.) */
+  /** Prefix-filter block keys over the (doc_id, sh) postings, and the
+    * (doc_id, set) payload they are verified on (Chaudhuri et al.; on
+    * MapReduce, Vernica, Carey & Li). Shingles are ordered rare-first by
+    * (df, sh), and each doc indexes only the first |x| − ⌈|x|/2⌉ + 1 of
+    * its shingles in that order. A pair at Jaccard ≥ 0.5 shares at least
+    * ⌈|x|/2⌉ shingles of x (and of y), so the two prefixes meet in one:
+    * the scheme is exact whatever the df. The rare-first order is the skew
+    * defence: a ubiquitous shingle enters a doc's prefix only when that
+    * doc has too few rarer ones, so a hot block is a near-dup clique, not
+    * a stopword's posting list. */
+  private[graft] def prefixBlocks(sh: DataFrame)
+      : (Blocking.Blocks, DataFrame) = {
+    val df = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+    val sets = sh.join(df, "sh").groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(struct(col("df"), col("sh"))))
+        .getField("sh").as("set"))
+    val n = size(col("set"))
+    val index = sets.select(col("doc_id"),
+      explode(slice(col("set"), lit(1), (floor(n / 2) + 1).cast("int")))
+        .as("sh"))
+    (Blocking.Blocks("prefix(jaccard>=0.5)", "0 exact (prefix filter)",
+      index, index, meetsOnce = false), sets)
+  }
+
   /** Recursive on-disk byte size of a fixture path (file or directory). */
   private def pathBytes(f: java.io.File): Long =
     if (f.isDirectory)
       Option(f.listFiles()).fold(0L)(_.map(pathBytes).sum)
     else if (f.isFile) f.length else 0L
 
-  /** Shuffle width for the substrate BUILD, scaled with corpus bytes
-    * (VERDICT r18 #5): the build's first pass at the 32× probe scale
-    * spilled 7.2 GB — partial-aggregate overflow ∝ the self-join's
-    * output volume over a FIXED reducer count — and the round-18
-    * adjudication measured the rule that bounds it: doubling reducers
-    * halves the spill (per-reducer build volume is what crosses the
-    * execution-memory line). Encode the rule as a scoped width: one
+  /** Shuffle width for the substrate build, scaled with corpus bytes: one
     * reducer per ~64 KiB of compressed corpus, floored at the session
-    * default (fixture scale stays on the default width — bench plans
-    * unchanged) and capped at 1024 (task-launch overhead bound). At
-    * 100 TB this is the standard practice the row models: shuffle
-    * width follows input volume, not a global constant. */
+    * default (fixture scale stays on the default width, so its plans do
+    * not change) and capped at 1024 (task-launch overhead). The build's
+    * first pass spills in proportion to the per-reducer build volume, and
+    * doubling the reducers halves it (measured at the 32× probe scale), so
+    * the width follows input volume rather than a global constant. */
   private[graft] def substrateShuffleWidth(s: SparkSession,
       d: String): Int = {
     val base = s.conf.get("spark.sql.shuffle.partitions").toInt
@@ -449,101 +448,43 @@ object LlmText {
     * 1.6 s of task-launch overhead), while the extra shuffle moves only
     * the near-dup pairs — kilobytes. At equal widths the exchange is
     * skipped, so fixture-scale plans stay byte-identical. */
-  private def computeNgramPairs(s: SparkSession, d: String,
-      maxDf: Int): DataFrame = {
+  private def computeNgramPairs(s: SparkSession, d: String): DataFrame = {
     val base = s.conf.get("spark.sql.shuffle.partitions").toInt
     val width = substrateShuffleWidth(s, d)
-    val onBuildWidth = (df: DataFrame) => graft.Sessions.scoped(df,
-      "spark.sql.shuffle.partitions" -> width.toString)
-    // The postings index feeds three consumers below (sizes, the df cap,
-    // and both sides of the self-join); persist it for the computation and
-    // release it once the memoized pairs are materialized.
+    // The postings feed both the df aggregate and the per-doc ordered
+    // sets; persist them for the build and release them once the
+    // memoized pairs are materialized.
     val sh = docShingles(s, d).persist()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    // Posting lists after the document-frequency cap. The df aggregate and
-    // the postings join share the hash partitioning on `sh` that the
-    // self-join below needs anyway (exchange reuse), so the cap costs one
-    // co-partitioned aggregate, not an extra shuffle shape.
-    // Round-21 adjudication: persisting dfAgg (so the >maxDf diagnostic
-    // below could read a cache instead of re-aggregating the postings)
-    // was tried and REVERTED — the cache boundary breaks exactly the
-    // exchange sharing this comment describes, and the cap join then
-    // re-partitions the cached side: bench shuffle_mb rose 124.916 →
-    // 131.889 (byte-stable at the new value, i.e. a deterministic plan
-    // regression, not noise) while the diagnostic saved only ~0.6 s of
-    // cached-scan time. The diagnostic's re-aggregation stays; its cost
-    // is now logged (below) so future rounds can re-adjudicate.
-    val dfAgg = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val capped = sh.join(
-      dfAgg.filter(col("df") <= maxDf).select(col("sh")),
-      "sh")
-    val inter = capped.alias("a")
-      .join(capped.alias("b"),
-        col("a.sh") === col("b.sh")
-          && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    val jac = (col("n_inter").cast("double")
-      / (col("n_a") + col("n_b") - col("n_inter")))
-    val filtered = inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a")),
-        "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b")),
-        "doc_b")
-      .withColumn("jaccard", jac)
-      .filter(col("jaccard") >= 0.5)
-      .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_a"),
-        col("n_b"), col("jaccard"))
+    val (blocks, sets) = prefixBlocks(sh)
+    val filtered = Blocking.blockedPairs("ngramPairs", blocks, sets,
+      ("doc_a", "doc_b"), "v")({ (a, b) =>
+        val inter = size(array_intersect(a, b)).cast("long")
+        val (na, nb) = (size(a).cast("long"), size(b).cast("long"))
+        struct(inter.as("n_inter"), na.as("n_a"), nb.as("n_b"),
+          (inter.cast("double") / (na + nb - inter)).as("jaccard"))
+      }, _.getField("jaccard") >= 0.5)
+      .select(col("doc_a"), col("doc_b"), col("v.n_inter"), col("v.n_a"),
+        col("v.n_b"), col("v.jaccard"))
     val pairs = if (width == base) filtered else filtered.repartition(base)
-    val built = onBuildWidth(pairs).persist()
+    val built = graft.Sessions.scoped(pairs,
+      "spark.sql.shuffle.partitions" -> width.toString).persist()
     val t0 = System.nanoTime()
-    // Materialize the pairs eagerly, then drop the (large) index. Since
-    // round 8 the bench PRE-PAYS this cost (Bench times the forcing
-    // count itself and reports it as "materialize_pairs"); outside the
-    // bench it still bills to whichever consumer runs first, so log the
-    // build-only time to keep that legible rather than looking like a
-    // slow query. See BASELINE.md.
-    //
-    // Round 22 (guide §2.6 "overlap independent jobs"): the df-cap
-    // diagnostic below is independent of the pair materialization —
-    // both are read-only jobs over the persisted postings — so it runs
-    // CONCURRENTLY with pairs.count() and back-fills the pair job's
-    // stage tails instead of paying its own sequential job launch after
-    // it (measured ~0.2-0.4 s per build at sf0.1 ×32). The r21 persist
-    // adjudication (see the dfAgg comment above) is untouched: nothing
-    // new is cached and neither plan changes — only the scheduling of
-    // the two actions. The pool is drained in Overlap's finally, so no
-    // detached job can outlive the build even on the exception path.
-    //
-    // Diagnosability (ADVICE r2): when the cap actually fires, jaccard
-    // can undercount vs an uncapped oracle — say so loudly here instead
-    // of letting it surface as an unexplained hash mismatch.
-    val dropped = Overlap.overlapped(2) { implicit ec =>
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val pairsF = Future(built.count())
-      val diagF = Future(onBuildWidth(dfAgg.filter(col("df") > maxDf)
-        .agg(coalesce(sum(col("df")), lit(0L)).as("postings"),
-          count(lit(1)).as("shingles"))).first())
-      Await.result(pairsF, Duration.Inf)
-      Await.result(diagF, Duration.Inf)
-    }
+    // Materialize the pairs eagerly, then drop the (large) index. The
+    // bench pre-pays this cost as "materialize_pairs"; outside the bench
+    // it bills to whichever consumer runs first, so log the build time to
+    // keep that legible rather than looking like a slow query.
+    built.count()
     val buildSec = (System.nanoTime() - t0) / 1e9
-    log.warn(f"materialized ngram near-dup pairs for $d (maxDf=$maxDf) in " +
-      f"$buildSec%.1f s (df-cap diagnostic overlapped) — one-time cost " +
-      "shared by llm_dedup_ngram / llm_dedup_cluster / llm_contamination")
-    if (dropped.getLong(1) > 0)
-      log.warn(s"ngram df-cap fired: dropped ${dropped.getLong(0)} postings " +
-        s"of ${dropped.getLong(1)} hot shingles (df > $maxDf); pair jaccard " +
-        "may undercount vs an uncapped exact oracle")
+    log.warn(f"materialized ngram near-dup pairs for $d in $buildSec%.1f s " +
+      "— one-time cost shared by llm_dedup_ngram / llm_dedup_cluster / " +
+      "llm_contamination")
     sh.unpersist()
     pairs
   }
 
-  /** Near-dup candidates by 3-word-shingle Jaccard ≥ 0.5, computed via an
-    * inverted shingle index (explode + equi-join + count), the
-    * set-similarity-join shape that scales: work is proportional to
-    * co-occurring shingles, not to |docs|². */
+  /** Near-dup pairs by 3-word-shingle Jaccard ≥ 0.5, computed by a
+    * prefix-filtered set-similarity join ([[ngramPairs]]): work is
+    * proportional to pairs that share a prefix shingle, not to |docs|². */
   private val dedupNgram = Spec(
     "llm_dedup_ngram",
     s"""$ngramPairsSqlCte
@@ -598,7 +539,7 @@ object LlmText {
     * is invisible in the output (both strategies produce the identical
     * canonical assignment, which is the point), so tests that claim to
     * exercise the distributed LIVE path assert this witness instead of
-    * trusting the edge count (VERDICT r7 #6). */
+    * trusting the edge count. */
   @volatile private[graft] var lastClusterStrategy: String = ""
 
   def clusterPairs(s: SparkSession, pairs: DataFrame,
@@ -987,7 +928,7 @@ object LlmText {
     * the term set. */
   private val bm25QueryTerms = Seq("spark", "join", "stream", "window")
 
-  /** ONE oracle-SQL template for BOTH BM25 rows (VERDICT r18 #7): the
+  /** ONE oracle-SQL template for BOTH BM25 rows: the
     * odds form and the ln production form share every CTE — document
     * lengths, corpus stats, tf, df, the saturation weight, the
     * term-lex-ordered per-doc fold — and differ ONLY in the idf wrap
@@ -1036,7 +977,7 @@ object LlmText {
       bm25QueryTerms)
   }
 
-  /** PRODUCTION-form BM25 (VERDICT r17 #5): identical pipeline to
+  /** PRODUCTION-form BM25: identical pipeline to
     * [[bm25]] but the idf is the deployed ln((N − df + 0.5)/(df + 0.5))
     * — the one-line wrap the odds-form row asked users to add
     * themselves, registered so the scorer a pipeline actually ships is
@@ -1118,7 +1059,7 @@ object LlmText {
     * 2× slower with 10× the per-task peak: the rejoin's SMJ re-sorts
     * the full span stream, exactly the shipping the hash key avoids.)
     * The group key is 128-BIT (two independently-seeded xxhash64
-    * passes — ADVICE r17 #1): the oracle groups on span TEXT, so a
+    * passes): the oracle groups on span TEXT, so a
     * key collision would merge two distinct span groups in the engine
     * only, and at 64 bits that asymmetry was documented rather than
     * closed. The second hash seeds its chain with a leading literal,

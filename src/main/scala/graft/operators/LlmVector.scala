@@ -1588,11 +1588,22 @@ object LlmVector {
       .select(col("vec_id"), col("b.embedding").as("embedding"),
         col("b.centroid_id").as("cluster_id"),
         col("b.cos_centroid").as("cos_centroid"))
-    val a = members.select(col("vec_id").as("a_id"),
-      col("embedding").as("a_emb"), col("cluster_id").as("a_cl"))
-    val b = members.select(col("vec_id").as("b_id"),
-      col("embedding").as("b_emb"), col("cluster_id").as("b_cl"))
-    val evicted = a.join(b,
+    withEvictions(members, tau)
+  }
+
+  /** The within-cluster eviction shared by both SemDeDup paths: over
+    * (vec_id, embedding, cluster_id, cos_centroid) members, a vector is
+    * evicted when a LOWER-id mate of its cluster is at cosine ≥ tau.
+    * Orphans (cluster −1) never pair; on the exact path every cluster id
+    * is a centroid id ≥ 0. It stays a hand-written self-join rather than
+    * a [[Blocking.blockedPairs]] scheme: its payload is the `members`
+    * aggregate, which the kernel's two payload joins would recompute,
+    * and it keeps evicted ids, not pairs. */
+  private def withEvictions(members: DataFrame, tau: Double): DataFrame = {
+    def side(p: String) = members.filter(col("cluster_id") >= 0)
+      .select(col("vec_id").as(s"${p}_id"), col("embedding").as(s"${p}_emb"),
+        col("cluster_id").as(s"${p}_cl"))
+    val evicted = side("a").join(side("b"),
         col("a_cl") === col("b_cl") && col("a_id") < col("b_id"))
       .filter(cosineCol("a_emb", "b_emb") >= tau)
       .select(col("b_id").as("ev_id")).distinct()
@@ -1696,21 +1707,7 @@ object LlmVector {
       .join(best.select(col("vec_id")), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("embedding"),
         lit(-1L).as("cluster_id"), lit(-1.0).as("cos_centroid"))
-    val members = best.unionByName(orphans)
-    val a = members.filter(col("cluster_id") >= 0)
-      .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-        col("cluster_id").as("a_cl"))
-    val b = members.filter(col("cluster_id") >= 0)
-      .select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
-        col("cluster_id").as("b_cl"))
-    val evicted = a.join(b,
-        col("a_cl") === col("b_cl") && col("a_id") < col("b_id"))
-      .filter(cosineCol("a_emb", "b_emb") >= tau)
-      .select(col("b_id").as("ev_id")).distinct()
-    members.join(evicted, col("vec_id") === col("ev_id"), "left")
-      .select(col("vec_id"), col("cluster_id"), col("cos_centroid"),
-        col("ev_id").isNotNull.as("evicted"))
-      .orderBy(col("vec_id"))
+    withEvictions(best.unionByName(orphans), tau)
   }
 
   /** The scaled construction FORCED at the n=32768 production

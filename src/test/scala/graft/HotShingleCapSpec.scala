@@ -4,80 +4,83 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.LlmText
 
-/** VERDICT r1 item 6 — the hot-shingle postings cap in the n-gram
-  * set-similarity join (LlmText.ngramPairs maxDf). A shingle shared by k
-  * docs contributes k(k-1)/2 join pairs, so ubiquitous shingles are the
-  * skew bomb at 100 TB; the cap drops their postings while keeping set
-  * sizes exact. The synthetic corpus here has a hot 6-word phrase in every
-  * doc (df = 12 > cap = 8) plus rare per-doc tails (df = 2), so the capped
-  * regime is actually exercised — the fixture corpora never reach the
-  * default cap (max df 25 at sf0.1 vs default 1024).
+/** Hot shingles in the n-gram set-similarity join (LlmText.ngramPairs). A
+  * shingle shared by k docs would contribute k(k-1)/2 meetings to a plain
+  * shingle self-join, so ubiquitous shingles are the skew bomb at 100 TB.
+  * The prefix filter defends against them by order (rare shingles first)
+  * instead of by dropping postings, so a pair held together by hot
+  * shingles must still come out, with exact counts.
   */
 class HotShingleCapSpec extends AnyFunSuite {
   import TestSpark._
 
   private val hot = "the quick brown fox jumps over" // 6 words → 4 shingles
 
-  /** 12 docs, all starting with the hot phrase:
-    *  - 1, 2: hot + one unique word — their only overlap IS the hot phrase
-    *    (jaccard 4/6 ≈ 0.67 uncapped, 0 once hot postings are dropped)
-    *  - 100, 101: hot + a 16-word rare tail differing in the last word —
-    *    a genuine near-dup pair held together by df=2 shingles
-    *  - 3..10: hot + distinct tails, padding the hot shingles' df to 12
-    */
-  private def corpus(dir: String): Unit = {
+  private def write(dir: String, rows: Seq[(Long, String)]): Unit = {
     import spark.implicits._
-    val rare = (1 to 15).map(i => s"r$i").mkString(" ")
-    val rows = Seq(
-      1L -> s"$hot only1",
-      2L -> s"$hot only2",
-      100L -> s"$hot $rare x100",
-      101L -> s"$hot $rare x101") ++
-      (3L to 10L).map(i => i -> s"$hot u${i}a u${i}b u${i}c u${i}d")
     rows.toDF("doc_id", "text")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
   }
 
-  private def pairsAt(dir: String, maxDf: Int): Map[(Long, Long), Row] =
-    LlmText.ngramPairs(spark, dir, maxDf)
-      .collect()
-      .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")) -> r)
-      .toMap
+  /** Docs 1 and 2: the hot phrase plus one unique word each, so their only
+    * overlap IS the hot phrase (4 shared of 6 distinct shingles, jaccard
+    * 4/6 ≈ 0.67). */
+  private val hotPair = Seq(1L -> s"$hot only1", 2L -> s"$hot only2")
 
-  type Row = org.apache.spark.sql.Row
+  type Row = (Long, Long, Long, Long, Long, Double)
 
-  test("cap drops pairs glued only by hot shingles, keeps genuine near-dups") {
-    val dir = TestSpark.tempDir("graft_hotshingle")
-      .toString
-    corpus(dir)
-    val uncapped = pairsAt(dir, maxDf = 1024)
-    val capped = pairsAt(dir, maxDf = 8)
+  private def pairsOf(dir: String): Set[Row] =
+    LlmText.ngramPairs(spark, dir).collect().map(r =>
+      (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
+        r.getAs[Long]("n_inter"), r.getAs[Long]("n_a"),
+        r.getAs[Long]("n_b"), r.getAs[Double]("jaccard"))).toSet
 
-    // Uncapped: the hot-only pair (1,2) qualifies — overlap 4 hot shingles
-    // of 5 total each — and so does the rare-tail pair (100,101).
-    assert(uncapped.contains((1L, 2L)), s"uncapped pairs: ${uncapped.keys}")
-    assert(uncapped.contains((100L, 101L)))
-
-    // Capped at 8 < df(hot)=12: hot postings are gone, so (1,2) has no
-    // surviving intersection; (100,101) still shares its 14 df=2 shingles.
-    assert(!capped.contains((1L, 2L)),
-      s"hot-only pair must not survive the cap: ${capped.keys}")
-    assert(capped.contains((100L, 101L)))
-
-    // Set sizes stay exact under the cap (denominators from the uncapped
-    // index): the surviving pair reports identical n_a/n_b either way, and
-    // its capped intersection can only shrink.
-    val (u, c) = (uncapped((100L, 101L)), capped((100L, 101L)))
-    assert(u.getAs[Long]("n_a") == c.getAs[Long]("n_a"))
-    assert(u.getAs[Long]("n_b") == c.getAs[Long]("n_b"))
-    assert(c.getAs[Long]("n_inter") <= u.getAs[Long]("n_inter"))
+  /** Local brute force over the same `docShingles` rows: every pair with
+    * jaccard ≥ 0.5, computed with the production formula. */
+  private def bruteForce(dir: String): Set[Row] = {
+    val sets = LlmText.docShingles(spark, dir).collect()
+      .groupBy(_.getLong(0)).map { case (d, rs) => d -> rs.map(_.getLong(1)).toSet }
+      .toSeq.sortBy(_._1)
+    (for {
+      (i, (a, sa)) <- sets.indices.map(i => (i, sets(i)))
+      (b, sb) <- sets.drop(i + 1)
+      inter = (sa intersect sb).size.toLong
+      (na, nb) = (sa.size.toLong, sb.size.toLong)
+      jac = inter.toDouble / (na + nb - inter)
+      if jac >= 0.5
+    } yield (a, b, inter, na, nb, jac)).toSet
   }
 
-  test("default cap is output-identical on the sf0.001 fixture") {
-    val a = LlmText.ngramPairs(spark, SF001).collect().map(_.toString).sorted
-    val b = LlmText.ngramPairs(spark, SF001, maxDf = Int.MaxValue)
-      .collect().map(_.toString).sorted
-    assert(a.sameElements(b))
+  test("ngramPairs equals brute-force jaccard >= 0.5 on the hot corpus") {
+    val dir = TestSpark.tempDir("graft_hotshingle").toString
+    // 100, 101: the hot phrase + a 16-word rare tail differing in the last
+    // word — a near-dup pair held together by df=2 shingles; 3..10: the
+    // hot phrase + distinct tails, padding the hot shingles' df to 12.
+    val rare = (1 to 15).map(i => s"r$i").mkString(" ")
+    write(dir, hotPair ++ Seq(
+      100L -> s"$hot $rare x100",
+      101L -> s"$hot $rare x101") ++
+      (3L to 10L).map(i => i -> s"$hot u${i}a u${i}b u${i}c u${i}d"))
+    val got = pairsOf(dir)
+    val expect = bruteForce(dir)
+    assert(got == expect,
+      s"missed=${expect -- got} extra=${got -- expect}")
+    assert(got.exists(r => (r._1, r._2) == (1L, 2L)), s"pairs: $got")
+    assert(got.exists(r => (r._1, r._2) == (100L, 101L)), s"pairs: $got")
+  }
+
+  test("a pair held together only by a shingle at df > 1024 is found") {
+    val dir = TestSpark.tempDir("graft_hotshingle_df").toString
+    // 1 100 more docs carry the hot phrase (df 1 102) and a 5-word unique
+    // tail: their 9-shingle prefixes are their 5 unique shingles, so the
+    // hot shingles' block holds only docs 1 and 2, whose 5-shingle sets
+    // keep 2 hot shingles in a 3-shingle prefix.
+    write(dir, hotPair ++ (3L until 1103L).map(i =>
+      i -> (hot +: (1 to 5).map(w => s"t${i}w$w")).mkString(" ")))
+    val hotDf = LlmText.docShingles(spark, dir).groupBy("sh").count()
+      .agg(org.apache.spark.sql.functions.max("count")).head().getLong(0)
+    assert(hotDf == 1102L)
+    assert(pairsOf(dir) == Set((1L, 2L, 4L, 5L, 5L, 4.0 / 6)))
   }
 }

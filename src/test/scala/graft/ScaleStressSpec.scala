@@ -6,11 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{LlmText, LlmVector}
 
 /** Dedup family at 40× the sf0.1 corpus (20 000 docs): the banded-MinHash
-  * path must still agree exactly with the inverted-index exact path, the
-  * hot-shingle cap must not fire on an organic vocabulary, and clustering
-  * must label every paired doc. This is the in-repo stand-in for the
-  * next scale-up: the shapes that survive 40× without new code paths are
-  * the ones that survive 1000×. Deterministic LCG corpus — no RNG APIs. */
+  * path must still agree exactly with the prefix-filtered exact path, and
+  * clustering must label every paired doc. This is the in-repo stand-in
+  * for the next scale-up: the shapes that survive 40× without new code
+  * paths are the ones that survive 1000×. Deterministic LCG corpus — no
+  * RNG APIs. */
 class ScaleStressSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -218,12 +218,38 @@ class ScaleStressSpec extends AnyFunSuite {
       s"all-pairs $allPairs")
   }
 
-  test("organic vocabulary stays under the hot-shingle cap") {
-    val maxDf = LlmText.docShingles(spark, dir)
-      .groupBy("sh").count()
-      .agg(org.apache.spark.sql.functions.max("count")).head().getLong(0)
-    assert(maxDf <= 1024,
-      s"max shingle df $maxDf would trip the cap and skew the parity test")
+  test("prefix-filter fan-out under the clique: measured, bounded, exact") {
+    // Candidate mass of the production prefix index — the block keys that
+    // feed blockedPairs: Σ_sh C(block, 2). Each clique doc has 28
+    // shingles, 27 of them shared at df 500 and one unique; its 15-shingle
+    // prefix holds the unique one and 14 shared ones, the same 14 in
+    // every clique doc, so the clique meets 14 times.
+    val (blocks, _) = LlmText.prefixBlocks(LlmText.docShingles(spark, advDir))
+    val prefixMass = blocks.index.groupBy("sh").count()
+      .agg(org.apache.spark.sql.functions.sum(
+        org.apache.spark.sql.functions.expr("count * (count - 1) DIV 2")))
+      .head().getLong(0)
+    val cliquePairs = hotN.toLong * (hotN - 1) / 2
+    val allPairs = advN.toLong * (advN - 1) / 2
+    val prefixLen = 28 / 2 + 1
+    assert(prefixMass >= cliquePairs,
+      s"clique must share a prefix shingle: $prefixMass < $cliquePairs")
+    assert(prefixMass <= prefixLen.toLong * cliquePairs + 20000L,
+      s"prefix candidate mass $prefixMass exceeds prefix×clique² + noise")
+    assert(prefixMass <= allPairs / 20,
+      s"prefix candidate mass $prefixMass is not << all-pairs $allPairs")
+    info(s"prefix candidate mass $prefixMass vs clique $cliquePairs, " +
+      s"ceiling ${prefixLen.toLong * cliquePairs}, all-pairs $allPairs")
+    // The output under this skew is exactly the clique.
+    val got = LlmText.ngramPairs(spark, advDir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getDouble(5))).toSet
+    val expect = (for {
+      a <- 0 until hotN; b <- a + 1 until hotN
+    } yield (a.toLong, b.toLong, 27L, 28L, 28L, 27.0 / 29)).toSet
+    assert(got.size == 124750 && got == expect,
+      s"got ${got.size} pairs, expected ${expect.size} (the clique); " +
+        s"missed=${(expect -- got).take(5)} extra=${(got -- expect).take(5)}")
   }
 
   test("banded MinHash equals the exact inverted-index join at 20k docs") {
