@@ -40,11 +40,11 @@ class HotShingleCapSpec extends AnyFunSuite {
     * jaccard ≥ 0.5, computed with the production formula. */
   private def bruteForce(dir: String): Set[Row] = {
     val sets = LlmText.docShingles(spark, dir).collect()
-      .groupBy(_.getLong(0)).map { case (d, rs) => d -> rs.map(_.getLong(1)).toSet }
+      .groupBy(_.getLong(0))
+      .map { case (d, rs) => d -> rs.map(_.getLong(1)).toSet }
       .toSeq.sortBy(_._1)
     (for {
-      (i, (a, sa)) <- sets.indices.map(i => (i, sets(i)))
-      (b, sb) <- sets.drop(i + 1)
+      Seq((a, sa), (b, sb)) <- sets.combinations(2).toSeq
       inter = (sa intersect sb).size.toLong
       (na, nb) = (sa.size.toLong, sb.size.toLong)
       jac = inter.toDouble / (na + nb - inter)
