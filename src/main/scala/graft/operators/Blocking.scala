@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, lit, min}
 
 /** The blocked self-join behind every near-dup operator: each row is
   * indexed under one or more block keys, two rows become a candidate pair
@@ -29,9 +29,15 @@ object Blocking {
     *                  expanded to neighbouring blocks, or `index` itself
     *                  when both sides block alike
     * @param meetsOnce the scheme lets a pair share at most one block, so
-    *                  the candidates need no dedupe */
+    *                  the candidates need no dedupe
+    * @param admit     a test that every pair passing verify passes, on the
+    *                  number of blocks the pair shares and each side's
+    *                  least place over those blocks; when set, the last
+    *                  column of `index` and `probe` is the row's place in
+    *                  its block (any orderable value), not a key */
   final case class Blocks(scheme: String, missBound: String,
-      index: DataFrame, probe: DataFrame, meetsOnce: Boolean)
+      index: DataFrame, probe: DataFrame, meetsOnce: Boolean,
+      admit: Option[(Column, Column, Column) => Column] = None)
 
   /** A miss probability as logged. */
   def bound(p: Double): String = "%.1e".formatLocal(java.util.Locale.ROOT, p)
@@ -42,9 +48,11 @@ object Blocking {
     * threshold on that score.
     *
     * Only (id, key) rows cross the block join, whatever the payload's
-    * width. The payload joins each meeting after it, and the verify runs
-    * before the dedupe, so the dedupe shuffles kept pairs, not every
-    * meeting of a pair that shares several blocks. */
+    * width. Without `admit` the payload joins each meeting after it, and
+    * the verify runs before the dedupe, so the dedupe shuffles kept pairs,
+    * not every meeting of a pair that shares several blocks. With `admit`
+    * the meetings are grouped per pair first, and only the pairs it passes
+    * fetch a payload. */
   def blockedPairs(op: String, blocks: Blocks, payload: DataFrame,
       ids: (String, String), verdict: String)(
       verify: (Column, Column) => Column, keep: Column => Column)
@@ -52,20 +60,35 @@ object Blocking {
     System.err.println(s"[graft] $op blocking=${blocks.scheme} " +
       s"miss_bound=${blocks.missBound}")
     val (idA, idB) = ids
-    val id +: keys = blocks.index.columns.toSeq
-    val met = blocks.probe.withColumnRenamed(id, idA)
-      .join(blocks.index.withColumnRenamed(id, idB), keys)
-      .filter(col(idA) < col(idB))
-      .select(col(idA), col(idB))
-    val Array(pid, value) = payload.columns
-    def side(i: String, v: String) =
-      payload.select(col(pid).as(i), col(value).as(v))
-    val kept = met.join(side(idA, "value_a"), idA)
-      .join(side(idB, "value_b"), idB)
+    val kept = candidates(blocks, ids).join(payload.toDF(idA, "value_a"), idA)
+      .join(payload.toDF(idB, "value_b"), idB)
       .withColumn(verdict, verify(col("value_a"), col("value_b")))
       .filter(keep(col(verdict)))
       .select(col(idA), col(idB), col(verdict))
+      // One exchange of the kept pairs before the sort, so the sort's
+      // range sampling reads them back instead of re-running the verify.
+      .repartition(col(idA), col(idB))
     (if (blocks.meetsOnce) kept else kept.distinct())
       .orderBy(col(idA), col(idB))
+  }
+
+  /** The candidates `(ids._1, ids._2)` with `ids._1 < ids._2`: one row per
+    * block the two rows share or, with `admit`, one row per pair that
+    * passes it. */
+  private[graft] def candidates(blocks: Blocks, ids: (String, String))
+      : DataFrame = {
+    val id +: cols = blocks.index.columns.toSeq
+    def of(side: String, c: String) = col(s"$side.$c")
+    val met = blocks.probe.as("p")
+      .join(blocks.index.as("i"), if (blocks.admit.isEmpty) cols else cols.init)
+      .filter(of("p", id) < of("i", id))
+    val pair = Seq(of("p", id).as(ids._1), of("i", id).as(ids._2))
+    blocks.admit.fold(met.select(pair: _*)) { admit =>
+      met.groupBy(pair: _*)
+        .agg(count(lit(1)).as("meets"), min(of("p", cols.last)).as("place_a"),
+          min(of("i", cols.last)).as("place_b"))
+        .filter(admit(col("meets"), col("place_a"), col("place_b")))
+        .select(ids._1, ids._2)
+    }
   }
 }

@@ -397,11 +397,19 @@ object LlmText {
     * MapReduce, Vernica, Carey & Li). Shingles are ordered rare-first by
     * (df, sh), and each doc indexes only the first |x| − ⌈|x|/2⌉ + 1 of
     * its shingles in that order. A pair at Jaccard ≥ 0.5 shares at least
-    * ⌈|x|/2⌉ shingles of x (and of y), so the two prefixes meet in one:
-    * the scheme is exact whatever the df. The rare-first order is the skew
-    * defence: a ubiquitous shingle enters a doc's prefix only when that
-    * doc has too few rarer ones, so a hot block is a near-dup clique, not
-    * a stopword's posting list. */
+    * ⌈|x|/2⌉ shingles of x (and of y), so its first common shingle lies in
+    * both prefixes: the scheme is exact whatever the df. A doc's rest is
+    * its ⌈|x|/2⌉ − 1 shingles past its prefix. Take x as the doc whose
+    * prefix ends first in the order: every shared shingle up to that end
+    * lies in both prefixes and is one meeting, and the others lie in x's
+    * rest, so shared ≤ meetings + the larger rest; and shared ≤ the
+    * shorter length. Jaccard ≥ 0.5 needs 3 · shared ≥ |x| + |y|, and
+    * `admit` drops the pairs whose bound fails it before they fetch a
+    * payload. The rare-first order keeps a ubiquitous shingle out of the
+    * prefixes of docs with enough rarer ones, so its block holds only
+    * short docs; they still meet pairwise (C(k, 2) meetings for k of
+    * them), and `admit` drops each such pair that cannot reach the
+    * threshold. */
   private[graft] def prefixBlocks(sh: DataFrame)
       : (Blocking.Blocks, DataFrame) = {
     val df = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
@@ -411,9 +419,11 @@ object LlmText {
     val n = size(col("set"))
     val index = sets.select(col("doc_id"),
       explode(slice(col("set"), lit(1), (floor(n / 2) + 1).cast("int")))
-        .as("sh"))
+        .as("sh"), n.as("n"))
     (Blocking.Blocks("prefix(jaccard>=0.5)", "0 exact (prefix filter)",
-      index, index, meetsOnce = false), sets)
+      index, index, meetsOnce = false, admit = Some((meets, na, nb) =>
+        least(meets + greatest(na - floor(na / 2), nb - floor(nb / 2)) - 1,
+          na, nb) * 3 >= na + nb)), sets)
   }
 
   /** Recursive on-disk byte size of a fixture path (file or directory). */
@@ -451,11 +461,20 @@ object LlmText {
   private def computeNgramPairs(s: SparkSession, d: String): DataFrame = {
     val base = s.conf.get("spark.sql.shuffle.partitions").toInt
     val width = substrateShuffleWidth(s, d)
+    val wide = "spark.sql.shuffle.partitions" -> width.toString
     // The postings feed both the df aggregate and the per-doc ordered
-    // sets; persist them for the build and release them once the
-    // memoized pairs are materialized.
+    // sets, and the sets feed both the prefix index and the payload (a
+    // collect_list aggregate, which exchange reuse never shares): persist
+    // both for the build, the sets at the build width and filled before
+    // the joins are planned, so the planner sizes them from the cache
+    // rather than from the aggregate's estimate (which reads as a few MB
+    // and broadcasts the index). Both are released once the memoized
+    // pairs are materialized.
+    val t0 = System.nanoTime()
     val sh = docShingles(s, d).persist()
     val (blocks, sets) = prefixBlocks(sh)
+    val widened = graft.Sessions.scoped(sets, wide).persist()
+    widened.count()
     val filtered = Blocking.blockedPairs("ngramPairs", blocks, sets,
       ("doc_a", "doc_b"), "v")({ (a, b) =>
         val inter = size(array_intersect(a, b)).cast("long")
@@ -463,21 +482,17 @@ object LlmText {
         struct(inter.as("n_inter"), na.as("n_a"), nb.as("n_b"),
           (inter.cast("double") / (na + nb - inter)).as("jaccard"))
       }, _.getField("jaccard") >= 0.5)
-      .select(col("doc_a"), col("doc_b"), col("v.n_inter"), col("v.n_a"),
-        col("v.n_b"), col("v.jaccard"))
+      .select(col("doc_a"), col("doc_b"), col("v.*"))
     val pairs = if (width == base) filtered else filtered.repartition(base)
-    val built = graft.Sessions.scoped(pairs,
-      "spark.sql.shuffle.partitions" -> width.toString).persist()
-    val t0 = System.nanoTime()
     // Materialize the pairs eagerly, then drop the (large) index. The
     // bench pre-pays this cost as "materialize_pairs"; outside the bench
     // it bills to whichever consumer runs first, so log the build time to
     // keep that legible rather than looking like a slow query.
-    built.count()
-    val buildSec = (System.nanoTime() - t0) / 1e9
-    log.warn(f"materialized ngram near-dup pairs for $d in $buildSec%.1f s " +
-      "— one-time cost shared by llm_dedup_ngram / llm_dedup_cluster / " +
-      "llm_contamination")
+    graft.Sessions.scoped(pairs, wide).persist().count()
+    log.warn(f"materialized ngram near-dup pairs for $d in " +
+      f"${(System.nanoTime() - t0) / 1e9}%.1f s — one-time cost shared by " +
+      "llm_dedup_ngram / llm_dedup_cluster")
+    widened.unpersist()
     sh.unpersist()
     pairs
   }

@@ -252,6 +252,40 @@ class ScaleStressSpec extends AnyFunSuite {
         s"missed=${(expect -- got).take(5)} extra=${(got -- expect).take(5)}")
   }
 
+  test("short docs sharing a hot 3-gram: one block, one admitted pair") {
+    // The rare-first order cannot keep a hot shingle out of a doc that has
+    // too few rarer ones: 3 000 four-word docs "click here to <unique>"
+    // hold 2 shingles, both in their 2-shingle prefix, so the hot one
+    // makes a C(3000, 2) block. `admit` passes none of its pairs (one
+    // meeting, nothing past either prefix: 3 · (1 + 0) < 2 + 2), so no
+    // pair fetches a payload. 1 000 five-word docs keep it out of their
+    // prefixes, and one exact-duplicate pair (5000, 5001) is the output.
+    import spark.implicits._
+    val d = TestSpark.tempDir("graft_short_hot").toString
+    val four = (0 until 3000).map(i => i.toLong -> s"click here to u$i")
+    val five = (3000 until 4000).map(i => i.toLong -> s"click here to u$i v$i")
+    val dup = Seq(5000L -> "click here to zz", 5001L -> "click here to zz")
+    (four ++ five ++ dup).toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
+    val (blocks, _) = LlmText.prefixBlocks(LlmText.docShingles(spark, d))
+    val mass = blocks.index.groupBy("sh").count()
+      .agg(org.apache.spark.sql.functions.sum(
+        org.apache.spark.sql.functions.expr("count * (count - 1) DIV 2")))
+      .head().getLong(0)
+    // The hot block holds the 3 000 four-word docs and the duplicate pair;
+    // the duplicates also share their rarest shingle.
+    assert(mass == 3002L * 3001 / 2 + 1, s"prefix candidate mass $mass")
+    val admitted = graft.operators.Blocking.candidates(blocks, ("a", "b"))
+      .select("a", "b").as[(Long, Long)].collect().toSeq
+    assert(admitted == Seq((5000L, 5001L)), s"admitted $admitted")
+    val got = LlmText.ngramPairs(spark, d).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getDouble(5))).toSeq
+    assert(got == Seq((5000L, 5001L, 2L, 2L, 2L, 1.0)), s"pairs $got")
+    info(s"hot block mass $mass, admitted ${admitted.size}")
+  }
+
   test("banded MinHash equals the exact inverted-index join at 20k docs") {
     val exact = LlmText.ngramPairs(spark, dir)
       .filter(org.apache.spark.sql.functions.col("jaccard") >= 0.7)
