@@ -690,16 +690,20 @@ object StreamingOps {
     s.readStream.schema(eventsSchema).parquet(eventsInput(s, d))
 
   /** The confs of the RocksDB-backed streaming queries' clones: 4
-    * shuffle partitions, and the RocksDB state-store provider with
-    * changelog checkpointing — the production provider at 100 TB of state
-    * (it spills to local disk), and the one transformWithState
-    * mandates. */
+    * shuffle partitions; the RocksDB state-store provider with changelog
+    * checkpointing — the production provider at 100 TB of state (it
+    * spills to local disk), and the one transformWithState mandates; and
+    * [[LocalCheckpointFiles]] as the checkpoint file manager, which writes
+    * the offset, commit, changelog and snapshot files of a local
+    * checkpoint without forking a process per file. */
   private val rocksDb = Seq(
     "spark.sql.shuffle.partitions" -> "4",
     "spark.sql.streaming.stateStore.providerClass" -> ("org.apache.spark." +
       "sql.execution.streaming.state.RocksDBStateStoreProvider"),
     "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled" -> "true")
+      "changelogCheckpointing.enabled" -> "true",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[LocalCheckpointFiles].getName)
 
   /** Pinned where a query's output depends on the trailing no-data
     * micro-batch (default true; pinned so a cluster-level override cannot

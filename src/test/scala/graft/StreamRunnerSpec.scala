@@ -135,11 +135,12 @@ class StreamRunnerSpec extends AnyFunSuite {
       runOnce(row, s, first = true)
       val oneWide = Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "1")
       val views = (tempViews(s), tempViews(oneWide))
-      val listeners = ListenerBus.listeners(sc)
+      val listeners = ListenerBus.listenerSet(sc)
       runOnce(row, s, first = false)
-      assert(ListenerBus.listeners(sc) == listeners,
-        s"$row's second run added ${ListenerBus.listeners(sc) - listeners} " +
-          "listener(s) to the context bus")
+      val added = ListenerBus.listenerSet(sc).asScala
+        .filterNot(listeners.contains)
+      assert(added.isEmpty, s"$row's second run added ${added.size} " +
+        s"listener(s) to the context bus: ${added.map(_.getClass.getName)}")
       assert((tempViews(s), tempViews(oneWide)) == views,
         s"$row's second run changed the (session, 1-partition clone) " +
           s"temp-view counts from $views to " +

@@ -332,6 +332,73 @@ class StreamingRecoverySpec extends AnyFunSuite {
     }
   }
 
+  /** Checkpoints written before the RocksDB clones moved to
+    * [[graft.streaming.LocalCheckpointFiles]] stay readable, and the other
+    * way round: a RocksDB interval join runs one batch under one
+    * checkpoint file manager, stops, and resumes on the same checkpoint
+    * under the other. The restart splits the input at its median time,
+    * and pairs whose view is in the first half and click in the second
+    * only emit if the first incarnation's join state and offsets were
+    * read back; the file sink's log keeps the output exactly-once. */
+  test("a RocksDB join checkpoint resumes across the checkpoint file " +
+      "manager swap, both ways") {
+    import spark.implicits._
+    val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
+    val local = Some(classOf[graft.streaming.LocalCheckpointFiles].getName)
+    val band = 24 * 60
+    val evs = fixtureEvents(600).sortBy(_.ts.getTime)
+    val cut = evs(evs.size / 2).ts.getTime
+    val (first, second) = evs.partition(_.ts.getTime < cut)
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.select("click_id", "view_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val want = pairs(graft.streaming.StreamingOps.clickViewPairs(
+      evs.filter(_.event_type == "click").toDF(),
+      evs.filter(_.event_type == "view").toDF(), band))
+    val firstIds = first.map(_.event_id).toSet
+    assert(want.exists { case (c, v) => !firstIds(c) && firstIds(v) },
+      "no pair straddles the restart — the witness is vacuous")
+    Seq(None -> local, local -> None).foreach { case (before, after) =>
+      val got = withRocksDb(pairs(joinAcrossRestart(first, second, band,
+        managerKey, before, after)))
+      assert(got == want, s"${before.getOrElse("default")} → " +
+        s"${after.getOrElse("default")}: missing=${want.diff(got).take(5)} " +
+        s"extra=${got.diff(want).take(5)}")
+    }
+  }
+
+  /** The click/view interval join over MemoryStreams into a parquet file
+    * sink: `first` in one incarnation run with `key` set to `before`
+    * (None: unset), `second` in a new incarnation on the same checkpoint
+    * with `key` set to `after`. Returns the sink's rows. */
+  private def joinAcrossRestart(first: Seq[Ev], second: Seq[Ev], band: Int,
+      key: String, before: Option[String], after: Option[String])
+      : org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val memC = MemoryStream[Ev]; val memV = MemoryStream[Ev]
+    val joined = graft.streaming.StreamingOps.clickViewPairs(
+      memC.toDF().withWatermark("ts", "10 minutes"),
+      memV.toDF().withWatermark("ts", "10 minutes"), band)
+    val base = TestSpark.tempDir("graft_cfm_restart").toString
+    def incarnation(evs: Seq[Ev], manager: Option[String]): Unit = {
+      val prev = spark.conf.getOption(key)
+      manager.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      try {
+        memC.addData(evs.filter(_.event_type == "click"))
+        memV.addData(evs.filter(_.event_type == "view"))
+        val q = joined.writeStream.format("parquet")
+          .option("path", s"$base/out")
+          .option("checkpointLocation", s"$base/chk").start()
+        try q.processAllAvailable() finally q.stop()
+      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    incarnation(first, before)
+    incarnation(second, after)
+    spark.read.parquet(s"$base/out")
+  }
+
   /** `storesPerPartition` witnesses which join state format served the
     * query: format 2 keeps four stores per partition, format 3 one. */
   private def boundedJoinStateUnderRocksDb(storesPerPartition: Int): Unit = {

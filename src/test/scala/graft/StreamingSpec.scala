@@ -664,6 +664,53 @@ class StreamingSpec extends StreamingParityBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** Child processes this JVM starts while `body` runs, counted by
+    * command name, from a JFR recording of `jdk.ProcessStart`. The
+    * recording is stopped and dumped before it is read, so no event
+    * still in a thread buffer is missed. */
+  private def processStarts(body: => Unit): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val dump = TestSpark.tempDir("graft_forks").resolve("forks.jfr")
+    try {
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(dump)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+        .map(e => new java.io.File(
+          e.getString("command").trim.split("\\s+").head).getName)
+        .groupBy(identity).map { case (c, n) => c -> n.size }
+    } finally rec.close()
+  }
+
+  test("the RocksDB rows' checkpoint files fork no readlink: a warm " +
+      "source_stream_join run starts at most 30 child processes, " +
+      "stream_tws_timers at most 50") {
+    // Without the native Hadoop library, Spark's default checkpoint file
+    // manager forks a chmod for every file it creates and readlinks for
+    // every rename: ~470 processes per source_stream_join op. The
+    // RocksDB clones' LocalCheckpointFiles forks neither. What still
+    // forks is RocksDB's SST upload (one chmod per file, through
+    // FileSystem.copyFromLocalFile) and Spark's `rm -rf` deletes. The
+    // first run of each row stages its input and is not counted. The
+    // bounds sit ~20 % above the measured counts (join 24–25, timers
+    // 41–42); the default manager starts 470 and 640.
+    import TestSpark._
+    Seq("source_stream_join" -> 30, "stream_tws_timers" -> 50).foreach {
+        case (row, bound) =>
+      assert(SparkEntry.queries(row)(spark, SF001).count() > 0)
+      val forks = processStarts {
+        assert(SparkEntry.queries(row)(spark, SF001).count() > 0)
+      }
+      info(s"$row: ${forks.values.sum} child processes $forks")
+      assert(!forks.contains("readlink"),
+        s"$row forked readlink: $forks")
+      assert(forks.values.sum <= bound,
+        s"$row started ${forks.values.sum} child processes: $forks")
+    }
+  }
+
   test("stream_update_mode: unchanged groups are ABSENT from batch 1") {
     // The update-vs-complete witness, on a SYNTHETIC staging where the
     // interesting key classes are guaranteed (the sf0.001 fixture gives
